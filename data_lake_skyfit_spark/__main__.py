@@ -47,7 +47,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"ran: {', '.join(result.ran) or '-'}")
     print(f"skipped (no bronze): {', '.join(result.skipped) or '-'}")
     if result.report is not None:
-        for r in result.report.collect():
+        for r in result.report:
             mark = "ok " if r["ok"] else "FAIL"
             print(f"  [{mark}] {r['check']:40s} {r['table']:28s} {r['value']}")
     if not result.ok:

@@ -12,11 +12,16 @@ operational checks, not unit tests (SURVEY.md §5):
 - health check: row counts + freshness per table post-pipeline
   (scripts/health_check.ps1:72-157).
 
-Each check is a declarative DataFrame aggregation returning one row
-`(check, table, value, ok)`; `run_audit` UNION ALLs them (U1) into one
-report frame. Every check is a single scan + partial agg — at 100 TB
-these run as cheap map-side count jobs, no wide shuffles (countDistinct
-on key columns is the only exchange, and it combines partially).
+`run_audit` reads each STG and CORE table once and derives every check
+on that table from one two-level aggregate over its key: per key, the
+row count (and STG's max `_loaded_at`); over the keys, the distinct and
+duplicated key counts, null-business-key rows and per-scope row counts.
+Orphan edges are one anti-join each. The per-table aggregates are
+UNION ALLed (U1) and collected in ONE action; the report rows
+`(check, table, value, ok)` are assembled in Python. Every exchange is
+a partial aggregate over key columns (or a broadcast of a dim for the
+anti-join), so at 100 TB the audit stays a scan per table, not a scan
+per check.
 """
 
 from __future__ import annotations
@@ -30,111 +35,96 @@ from .operators.normalize import Lakehouse
 from .specs.base import EntitySpec
 
 __all__ = [
-    "check_counts",
-    "check_core_duplicate_keys",
-    "check_null_business_keys",
-    "check_stg_duplicate_lineage",
-    "check_freshness",
     "check_date_anomalies",
-    "check_orphans",
-    "check_per_scope_counts",
     "run_audit",
     "observed_write",
 ]
 
+#: Columns of every per-table aggregate; a table fills the ones its
+#: checks use, the rest stay NULL.
+_AGG_COLS = (
+    ("scope", "string"),
+    ("rows", "long"),
+    ("keys", "long"),
+    ("dups", "long"),
+    ("nulls", "long"),
+    ("lag_s", "long"),
+)
 
-def _report(df: DataFrame, check: str, table: str, ok_expr) -> DataFrame:
+
+def _any(conds):
+    return reduce(lambda a, b: a | b, conds)
+
+
+def _all(conds):
+    return reduce(lambda a, b: a & b, conds)
+
+
+def _agg_row(part: int, df: DataFrame) -> DataFrame:
+    """Project an aggregate onto the shared report-input schema, tagged
+    with `part` (its index in run_audit's part list)."""
     return df.select(
-        F.lit(check).alias("check"),
-        F.lit(table).alias("table"),
-        F.col("value").cast("long").alias("value"),
-        ok_expr.alias("ok"),
+        F.lit(part).alias("part"),
+        *[
+            (F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
+            for c, t in _AGG_COLS
+        ],
     )
 
 
-def check_counts(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """CHECK 1: STG and CORE row counts reconcile (CORE ≥ deduped STG is
-    wrong — CORE == distinct STG keys; report both)."""
-    stg = lake.stg_table(spec).read(lake.spark)
-    core = lake.core_table(spec).read(lake.spark)
+def _stg_agg(part: int, stg: DataFrame, spec: EntitySpec) -> DataFrame:
+    """One row: distinct keys, keys seen more than once, and the STG
+    freshness lag (audit_stg.sql:96-114; CHECKs 1 and 3)."""
     keys = list(spec.stg_key) + (["scope"] if spec.scoped else [])
-    stg_keys = stg.select(*keys).distinct().agg(F.count("*").alias("value"))
-    core_n = core.agg(F.count("*").alias("value"))
-    return _report(
-        stg_keys.crossJoin(core_n.withColumnRenamed("value", "core_n")).select(
-            F.col("value"), (F.col("value") == F.col("core_n")).alias("_ok")
+    per_key = stg.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"), F.max("_loaded_at").alias("ts")
+    )
+    return _agg_row(
+        part,
+        per_key.agg(
+            F.count(F.lit(1)).alias("keys"),
+            F.count(F.when(F.col("n") > 1, 1)).alias("dups"),
+            (
+                F.unix_timestamp(F.current_timestamp())
+                - F.unix_timestamp(F.max("ts"))
+            ).alias("lag_s"),
         ),
-        "stg_core_count_reconciliation",
-        spec.name,
-        F.col("_ok"),
     )
 
 
-def check_core_duplicate_keys(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """CHECK 2: COUNT(*) − COUNT(DISTINCT key) == 0 on CORE
-    (OPERATIONS_GUIDE CHECK 2)."""
-    core = lake.core_table(spec).read(lake.spark)
+def _core_agg(part: int, core: DataFrame, spec: EntitySpec) -> DataFrame:
+    """One row per scope (one row if unscoped): rows, distinct non-null
+    keys (so COUNT(*) − COUNT(DISTINCT key) is CHECK 2) and rows with a
+    NULL business key (CHECK 5). Scope is part of a scoped table's key,
+    so the per-scope rows sum to the table's totals (CHECK 4)."""
     keys = list(spec.core_key) + (["scope"] if spec.scoped else [])
-    agg = core.agg(
-        (F.count("*") - F.countDistinct(*keys)).alias("value")
+    per_key = core.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+    per_scope = per_key.groupBy("scope") if spec.scoped else per_key.groupBy()
+    null_bk = _any([F.col(k).isNull() for k in spec.core_key])
+    agg = per_scope.agg(
+        F.sum("n").alias("rows"),
+        F.count(F.when(_all([F.col(k).isNotNull() for k in keys]), 1)).alias("keys"),
+        F.sum(F.when(null_bk, F.col("n")).otherwise(0)).alias("nulls"),
     )
-    return _report(agg, "core_duplicate_keys", spec.name, F.col("value") == 0)
+    return _agg_row(part, agg)
 
 
-def check_stg_duplicate_lineage(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """audit_stg.sql:96-114 — duplicate staging conflict keys (expect 0;
-    the MERGE guarantees it, this proves it)."""
-    stg = lake.stg_table(spec).read(lake.spark)
-    keys = list(spec.stg_key) + (["scope"] if spec.scoped else [])
-    dupes = (
-        stg.groupBy(*keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .agg(F.count("*").alias("value"))
-    )
-    return _report(dupes, "stg_duplicate_keys", spec.name, F.col("value") == 0)
-
-
-def check_null_business_keys(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """CHECK 5: CORE rows with NULL business key (expect 0 — the P7
-    filters upstream guarantee it)."""
-    core = lake.core_table(spec).read(lake.spark)
-    cond = reduce(
-        lambda a, b: a | b, [F.col(k).isNull() for k in spec.core_key]
-    )
-    agg = core.filter(cond).agg(F.count("*").alias("value"))
-    return _report(agg, "core_null_business_keys", spec.name, F.col("value") == 0)
-
-
-def check_freshness(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """CHECK 3: STG not newer than CORE (un-normalized backlog). Value =
-    seconds of lag between max STG load time and the last normalize."""
-    stg = lake.stg_table(spec).read(lake.spark)
-    agg = stg.agg(
-        (F.unix_timestamp(F.current_timestamp()) - F.unix_timestamp(F.max("_loaded_at"))).alias("value")
-    )
-    return _report(agg, "stg_freshness_lag_s", spec.name, F.lit(True))
-
-
-def check_orphans(
-    lake: Lakehouse,
+def _orphan_agg(
+    part: int,
+    f_core: DataFrame,
+    d_core: DataFrame,
     fact: EntitySpec,
     dim: EntitySpec,
     fk: str,
-    *,
-    dim_key: str | None = None,
 ) -> DataFrame:
-    """CHECK 7: referential orphans — fact rows whose FK has no dim row
-    (J5 anti-join, OPERATIONS_GUIDE CHECK 7)."""
-    f_df = lake.core_table(fact).read(lake.spark).filter(F.col(fk).isNotNull())
-    d_df = lake.core_table(dim).read(lake.spark)
-    dk = dim_key or dim.core_key[0]
-    join_keys = [f_df[fk] == d_df[dk]]
+    """CHECK 7: fact rows whose non-null FK has no dim row (J5
+    anti-join, OPERATIONS_GUIDE CHECK 7)."""
+    f_df = f_core.filter(F.col(fk).isNotNull())
+    join_keys = [f_df[fk] == d_core[dim.core_key[0]]]
     if fact.scoped and dim.scoped:
-        join_keys.append(f_df["scope"] == d_df["scope"])
-    orphans = f_df.join(d_df, reduce(lambda a, b: a & b, join_keys), "left_anti")
-    agg = orphans.agg(F.count("*").alias("value"))
-    return _report(agg, f"orphan_fk_{fk}", fact.name, F.col("value") == 0)
+        join_keys.append(f_df["scope"] == d_core["scope"])
+    orphans = f_df.join(d_core, _all(join_keys), "left_anti")
+    return _agg_row(part, orphans.agg(F.count(F.lit(1)).alias("rows")))
 
 
 def check_date_anomalies(
@@ -144,24 +134,22 @@ def check_date_anomalies(
     updated_col: str,
 ) -> DataFrame:
     """audit_stg.sql:180-198 — rows where created > updated (impossible
-    orderings betray extraction or timezone bugs). Expect 0."""
+    orderings betray extraction or timezone bugs). Expect 0. One report
+    row `(check, table, value, ok)`."""
     core = lake.core_table(spec).read(lake.spark)
     agg = core.filter(F.col(created_col) > F.col(updated_col)).agg(
         F.count("*").alias("value")
     )
-    return _report(agg, "date_anomaly_created_gt_updated", spec.name, F.col("value") == 0)
-
-
-def check_per_scope_counts(lake: Lakehouse, spec: EntitySpec) -> DataFrame:
-    """CHECK 4: per-scope row distribution (informational)."""
-    core = lake.core_table(spec).read(lake.spark)
-    per = core.groupBy("scope").agg(F.count("*").alias("value"))
-    return per.select(
-        F.concat(F.lit("scope_count_"), F.col("scope")).alias("check"),
+    return agg.select(
+        F.lit("date_anomaly_created_gt_updated").alias("check"),
         F.lit(spec.name).alias("table"),
         F.col("value").cast("long").alias("value"),
-        (F.col("value") > 0).alias("ok"),
+        (F.col("value") == 0).alias("ok"),
     )
+
+
+def _row(check: str | None, table: str, value, ok: bool) -> dict:
+    return {"check": check, "table": table, "value": value, "ok": ok}
 
 
 def run_audit(
@@ -169,22 +157,65 @@ def run_audit(
     specs: list[EntitySpec],
     *,
     orphan_edges: list[tuple[EntitySpec, EntitySpec, str]] | None = None,
-) -> DataFrame:
-    """UNION ALL of every applicable check (audit_stg.sql's report
-    shape). One small DataFrame out; fail the pipeline on `ok = false`
-    rows, exactly like daily_pipeline.ps1 fail-fast."""
+) -> list[dict]:
+    """Every applicable check, evaluated in one action (audit_stg.sql's
+    report shape). Returns the report rows
+    `{"check", "table", "value", "ok"}`, per spec in the order
+    stg_core_count_reconciliation, core_duplicate_keys,
+    stg_duplicate_keys, core_null_business_keys, stg_freshness_lag_s,
+    scope_count_<scope>… (sorted), then one orphan_fk_<fk> row per edge.
+    The pipeline fails on `ok = false` rows, exactly like
+    daily_pipeline.ps1 fail-fast (freshness is informational)."""
+    edges = list(orphan_edges or [])
+    core = {}
     frames: list[DataFrame] = []
     for spec in specs:
-        frames.append(check_counts(lake, spec))
-        frames.append(check_core_duplicate_keys(lake, spec))
-        frames.append(check_stg_duplicate_lineage(lake, spec))
-        frames.append(check_null_business_keys(lake, spec))
-        frames.append(check_freshness(lake, spec))
+        core[spec.name] = lake.core_table(spec).read(lake.spark)
+        stg = lake.stg_table(spec).read(lake.spark)
+        frames.append(_stg_agg(len(frames), stg, spec))
+        frames.append(_core_agg(len(frames), core[spec.name], spec))
+    for fact, dim, fk in edges:
+        for s in (fact, dim):
+            if s.name not in core:
+                core[s.name] = lake.core_table(s).read(lake.spark)
+        frames.append(
+            _orphan_agg(len(frames), core[fact.name], core[dim.name], fact, dim, fk)
+        )
+    by_part: dict[int, list] = {}
+    for r in reduce(DataFrame.unionByName, frames).collect():
+        by_part.setdefault(r["part"], []).append(r)
+
+    report: list[dict] = []
+    for i, spec in enumerate(specs):
+        (st,) = by_part[2 * i]
+        scopes = sorted(
+            by_part.get(2 * i + 1, []),
+            key=lambda r: (r["scope"] is not None, r["scope"] or ""),
+        )
+        rows = sum(r["rows"] or 0 for r in scopes)
+        dups = rows - sum(r["keys"] for r in scopes)
+        nulls = sum(r["nulls"] or 0 for r in scopes)
+        report += [
+            _row("stg_core_count_reconciliation", spec.name, st["keys"], st["keys"] == rows),
+            _row("core_duplicate_keys", spec.name, dups, dups == 0),
+            _row("stg_duplicate_keys", spec.name, st["dups"], st["dups"] == 0),
+            _row("core_null_business_keys", spec.name, nulls, nulls == 0),
+            _row("stg_freshness_lag_s", spec.name, st["lag_s"], True),
+        ]
         if spec.scoped:
-            frames.append(check_per_scope_counts(lake, spec))
-    for fact, dim, fk in orphan_edges or []:
-        frames.append(check_orphans(lake, fact, dim, fk))
-    return reduce(lambda a, b: a.unionByName(b), frames)
+            report += [
+                _row(
+                    None if r["scope"] is None else f"scope_count_{r['scope']}",
+                    spec.name,
+                    r["rows"],
+                    r["rows"] > 0,
+                )
+                for r in scopes
+            ]
+    for j, (fact, _dim, fk) in enumerate(edges):
+        (orph,) = by_part[2 * len(specs) + j]
+        report.append(_row(f"orphan_fk_{fk}", fact.name, orph["rows"], orph["rows"] == 0))
+    return report
 
 
 def observed_write(
@@ -207,14 +238,12 @@ def observed_write(
     Returns the collected metric dict. `table` is a ParquetTable (or
     anything exposing overwrite/merge); mode 'overwrite' or 'merge'.
     The null-key and distinct counters use the same definitions as
-    check_null_business_keys / check_core_duplicate_keys, so a follow-up
-    full audit agrees with the inline numbers.
+    run_audit's core_null_business_keys / core_duplicate_keys checks, so
+    a follow-up full audit agrees with the inline numbers.
     """
     from pyspark.sql import Observation
 
-    null_any = reduce(
-        lambda a, b: a | b, [F.col(c).isNull() for c in key_cols]
-    )
+    null_any = _any([F.col(c).isNull() for c in key_cols])
     metrics = [
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(null_any, 1).otherwise(0)).alias("n_null_keys"),

@@ -54,6 +54,10 @@ PUNCT_CLASS = "[.,!?;:]"
 #: overhead stays small against ~0.1-0.5 ms/row tokenize/shingle work.
 _SPREAD_ROWS_PER_TASK = 128
 
+#: The only characters a TRIGRAM_PROFILES gram may hold: the scorer
+#: splices grams into SQL string literals unescaped.
+_SQL_SAFE_GRAM_CHARS = frozenset("abcdefghijklmnopqrstuvwxyz ")
+
 #: Characteristic char trigrams per language (Cavnar–Trenkle-style
 #: profile, '_' = space shown here as a real space): high-frequency
 #: function-word boundaries and affixes. ASCII-only BY CONSTRUCTION —
@@ -253,6 +257,14 @@ def language_scores_trigram(
         F.lit(" "),
     )
     grams = sorted({g for p in TRIGRAM_PROFILES.values() for g in p})
+    # The raw f-string interpolation of the grams below is only safe
+    # while they stay inside [a-z ] — a quote or backslash in a future
+    # profile entry would break (or silently change) the parsed SQL.
+    bad = sorted(g for g in grams if not set(g) <= _SQL_SAFE_GRAM_CHARS)
+    if bad:
+        raise ValueError(
+            f"TRIGRAM_PROFILES grams must be [a-z ] — escape before widening: {bad}"
+        )
     gcol = {g: f"__g{i}" for i, g in enumerate(grams)}
     # 64 full-text replace() allocations per row: real map work, spread
     # off the one-split scan (no-op at real scale).
@@ -265,12 +277,6 @@ def language_scores_trigram(
     # alternative to the replace-based count (same leftmost
     # non-overlapping convention): 1.10 s vs 1.02 s min-of-3 — replace
     # stays.
-    # The raw f-string interpolation below is only safe while profile
-    # grams stay inside [a-z ] — a quote or backslash in a future
-    # profile entry would break (or silently change) the parsed SQL.
-    assert all(c.islower() or c == " " for g in grams for c in g), (
-        "TRIGRAM_PROFILES grams must be [a-z ] — escape before widening"
-    )
     counts = staged.select(
         F.col(id_col),
         *[

@@ -8,22 +8,19 @@ subsets (SURVEY.md §2.2 K2-K4), `DO NOTHING` insert-only for tag-like
 tables (normalize_zendesk.py:723), and TRUNCATE+INSERT full refresh
 (normalize_evo_members_v2.py:101-115).
 
-Spark-first realization. With Delta/Iceberg on the classpath this is
-literally `MERGE INTO`; this image has neither, so the same semantics
-are built from joins + a partition-aware rewrite:
+Spark-first realization, parquet-native (no Delta/Iceberg jars): the
+same semantics are built from one join + a partition-aware rewrite:
 
-- join target⟷source on the key, build the merged row set
-  (update-all / update-subset / insert-only), write back;
+- full-outer-join target⟷source on the key once, as Delta Lake's MERGE
+  rewrite does, with a presence flag on each side; every column picks
+  its side per mode (update-all / update-subset / insert-only), and
+  the merged row set is written back (`merge_rows`);
 - for partitioned tables only the partitions containing source keys are
   rewritten (dynamic partition overwrite) — the 100 TB path: merging a
   day of entries rewrites one year partition's touched files, not the
   table;
 - writes go to a temp dir then swap, so a failed job never corrupts the
   table (the transactional-commit property Postgres gave the reference).
-
-`_delta_available()` detects delta-spark for future native-MERGE
-dispatch; this image has no Delta jars, so the parquet-native path is
-the only one implemented (and the only one tested).
 """
 
 from __future__ import annotations
@@ -33,6 +30,7 @@ import shutil
 import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,35 +92,44 @@ def merge_rows(
     mode: str = MergeMode.UPDATE_ALL,
     update_subset: Sequence[str] = (),
 ) -> DataFrame:
-    """The MERGE row set: target ⟷ source matched on null-safe key
-    equality, combined per `mode` (see ParquetTable.merge). Pure frame
-    construction — callers own deduplication, schema alignment, and
-    writing. Both frames must already share one schema."""
-    keys = list(keys)
+    """The MERGE row set: ONE full outer join of target and source on
+    null-safe key equality, each side carrying a presence flag, and a
+    per-column pick of the side (see ParquetTable.merge for the modes):
+
+    - update_all: the source value wherever the key is in the source;
+    - do_nothing: the target value wherever the key is in the target;
+    - update_subset: `update_subset` columns as update_all, the rest as
+      do_nothing — so a match takes only those columns from the source.
+
+    Precondition: target and source are each unique on `keys` (every
+    table MERGE writes is; ParquetTable.merge dedupes the source). A
+    duplicated key would meet every row with that key on the other side.
+    Pure frame construction — callers own deduplication, schema
+    alignment, and writing. Both frames must already share one schema.
+    """
     cols = target.columns
-    t, s = target.alias("t"), source.alias("s")
-    match = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    on = match[0]
-    for m in match[1:]:
-        on = on & m
-
-    unmatched_target = t.join(s, on, "left_anti")
-    inserts = s.join(t, on, "left_anti")
-
-    if mode == MergeMode.DO_NOTHING:
-        matched = t.join(s, on, "left_semi")
+    t = target.withColumn("__merge_t", F.lit(True)).alias("t")
+    s = source.withColumn("__merge_s", F.lit(True)).alias("s")
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+    )
+    if mode == MergeMode.UPDATE_ALL:
+        from_source = set(cols)
     elif mode == MergeMode.UPDATE_SUBSET:
-        subset = set(update_subset)
-        matched = t.join(s, on, "inner").select(
-            *[
-                (F.col(f"s.{c}") if c in subset else F.col(f"t.{c}")).alias(c)
-                for c in cols
-            ]
-        )
-    else:  # UPDATE_ALL
-        matched = s.join(t, on, "left_semi")
+        from_source = set(update_subset)
+    else:  # DO_NOTHING
+        from_source = set()
+    in_s = F.col("s.__merge_s").isNotNull()
+    in_t = F.col("t.__merge_t").isNotNull()
 
-    return unmatched_target.unionByName(matched).unionByName(inserts)
+    def pick(c: str):
+        sc, tc = F.col(f"s.{c}"), F.col(f"t.{c}")
+        if c in from_source:
+            return F.when(in_s, sc).otherwise(tc).alias(c)
+        return F.when(in_t, tc).otherwise(sc).alias(c)
+
+    return t.join(s, on, "full_outer").select(*[pick(c) for c in cols])
 
 
 def partition_scope(
@@ -302,15 +309,6 @@ def touched_by_key_ranges(source: DataFrame, key: str, ranges) -> set | None:
         r["file"]
         for r in skeys.join(F.broadcast(rdf), cond).select("file").distinct().collect()
     }
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 @dataclass

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-
 from .audit import run_audit
 from .operators.normalize import Lakehouse
 from .specs.base import EntitySpec, get_spec
@@ -54,7 +52,9 @@ ORPHAN_EDGES: tuple[tuple[str, str, str], ...] = (
 class PipelineResult:
     ran: list[str] = field(default_factory=list)
     skipped: list[str] = field(default_factory=list)
-    report: DataFrame | None = None
+    #: audit report rows {"check", "table", "value", "ok"}; None when
+    #: the audit did not run
+    report: list[dict] | None = None
     failed_checks: list[dict] = field(default_factory=list)
 
     @property
@@ -104,9 +104,10 @@ def run_daily(
             for f, d, fk in ORPHAN_EDGES
             if f in ran_names and d in ran_names
         ]
-        report = run_audit(lake, specs_run, orphan_edges=edges)
-        result.report = report
+        result.report = run_audit(lake, specs_run, orphan_edges=edges)
         result.failed_checks = [
-            r.asDict() for r in report.filter("NOT ok AND check NOT LIKE 'stg_freshness%'").collect()
+            r
+            for r in result.report
+            if not r["ok"] and not (r["check"] or "").startswith("stg_freshness")
         ]
     return result

@@ -713,6 +713,20 @@ def test_trigram_language_id_beats_stopword_tier_on_short_text(spark):
     assert acc_tri == 1.0, tri
 
 
+def test_trigram_profile_quote_is_refused(spark, monkeypatch):
+    """Profile grams are spliced into SQL literals unescaped, so a gram
+    outside [a-z ] must raise — a ValueError, which `python -O` keeps
+    (an assert would vanish)."""
+    from data_lake_skyfit_spark.llm import text
+
+    profiles = dict(text.TRIGRAM_PROFILES)
+    profiles["en"] = ("it'",) + profiles["en"][1:]
+    monkeypatch.setattr(text, "TRIGRAM_PROFILES", profiles)
+    df = spark.createDataFrame([(1, "it's here")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="it'"):
+        text.language_scores_trigram(df)
+
+
 def test_line_level_dedup_semantics(spark):
     """Corpus-wide first-occurrence-wins at line granularity: cross-doc
     copies drop, within-doc copies drop, short lines always survive,

@@ -104,3 +104,26 @@ def test_plan_is_equi_join_not_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_min" in plan  # map-side-combining best-match agg
+
+
+def test_bounded_levenshtein_semantics(spark):
+    """fuzzy_match_join relies on Spark's thresholded levenshtein(a, b, k):
+    the exact distance when it is <= k, -1 above k. Pinned so an engine
+    upgrade that changes the banded DP fails here, not in an oracle."""
+    cases = [
+        ("kitten", "sitting", 3),
+        ("flaw", "lawn", 2),
+        ("abc", "abc", 0),
+        ("", "abcd", 4),
+        ("intention", "execution", 5),
+        ("abcdef", "badcfe", 4),
+    ]
+    df = spark.createDataFrame([(a, b) for a, b, _ in cases], "a string, b string")
+    for k in range(6):
+        rows = df.select(
+            F.levenshtein("a", "b").alias("full"),
+            F.levenshtein("a", "b", k).alias("bounded"),
+        ).collect()
+        for (a, b, dist), r in zip(cases, rows):
+            assert r["full"] == dist, (a, b, r)
+            assert r["bounded"] == (dist if dist <= k else -1), (a, b, k, r)

@@ -144,12 +144,11 @@ def audited_lake(spark, tmp_path_factory):
 
 def test_audit_report_green(audited_lake):
     specs = [get_spec("evo_members"), get_spec("evo_sales"), get_spec("pd_deals")]
-    report = audit.run_audit(
+    rows = audit.run_audit(
         audited_lake,
         specs,
         orphan_edges=[(get_spec("evo_sales"), get_spec("evo_members"), "member_id")],
     )
-    rows = report.collect()
     bad = [r for r in rows if not r["ok"]]
     assert not bad, f"failed checks: {bad}"
     checks = {(r["check"], r["table"]) for r in rows}
@@ -159,18 +158,89 @@ def test_audit_report_green(audited_lake):
     assert ("scope_count_comercial", "pd_deals") in checks
 
 
+def _per_check_reference(lake, specs, edges):
+    """The audit's checks as independent per-check queries, one scan
+    per check — the definitions run_audit's per-table aggregates must
+    reproduce: {(check, table): (value, ok)}, freshness excluded."""
+    out = {}
+    for spec in specs:
+        stg = lake.stg_table(spec).read(lake.spark)
+        core = lake.core_table(spec).read(lake.spark)
+        scope = ["scope"] if spec.scoped else []
+        stg_keys = list(spec.stg_key) + scope
+        core_keys = list(spec.core_key) + scope
+        n_stg_keys = stg.select(*stg_keys).distinct().count()
+        n_core = core.count()
+        out["stg_core_count_reconciliation", spec.name] = (
+            n_stg_keys, n_stg_keys == n_core,
+        )
+        dup = n_core - core.agg(F.countDistinct(*core_keys)).collect()[0][0]
+        out["core_duplicate_keys", spec.name] = (dup, dup == 0)
+        stg_dup = stg.groupBy(*stg_keys).count().filter("count > 1").count()
+        out["stg_duplicate_keys", spec.name] = (stg_dup, stg_dup == 0)
+        null_any = F.lit(False)
+        for k in spec.core_key:
+            null_any = null_any | F.col(k).isNull()
+        nulls = core.filter(null_any).count()
+        out["core_null_business_keys", spec.name] = (nulls, nulls == 0)
+        if spec.scoped:
+            for r in core.groupBy("scope").count().collect():
+                out[f"scope_count_{r['scope']}", spec.name] = (r["count"], True)
+    for fact, dim, fk in edges:
+        f_df = lake.core_table(fact).read(lake.spark).filter(F.col(fk).isNotNull())
+        d_df = lake.core_table(dim).read(lake.spark)
+        n = f_df.join(d_df, f_df[fk] == d_df[dim.core_key[0]], "left_anti").count()
+        out[f"orphan_fk_{fk}", fact.name] = (n, n == 0)
+    return out
+
+
 def test_audit_detects_injected_duplicate(audited_lake, spark):
-    """The duplicate-key check must actually fire on bad data."""
-    spec = get_spec("evo_members")
-    core = audited_lake.core_table(spec)
-    # Detach from the underlying files — the overwrite below replaces them.
-    df = core.read(spark).localCheckpoint()
-    core.overwrite(df.unionByName(df.limit(1)))  # inject one duplicate
+    """The checks must actually fire on bad data: a CORE duplicate, an
+    STG duplicate, a NULL business key and an orphan FK each flip their
+    check, with the values the per-check queries give."""
+    members, sales, deals = (
+        get_spec("evo_members"), get_spec("evo_sales"), get_spec("pd_deals")
+    )
+    edges = [(sales, members, "member_id")]
+    tables = [
+        audited_lake.core_table(members),
+        audited_lake.stg_table(members),
+        audited_lake.core_table(sales),
+    ]
+    # Detach from the underlying files — the overwrites below replace them.
+    saved = [t.read(spark).localCheckpoint() for t in tables]
+    core_m, stg_m, core_s = saved
+    null_key = core_s.limit(1).withColumn(
+        "sale_id", F.lit(None).cast(dict(core_s.dtypes)["sale_id"])
+    )
+    orphan = core_s.limit(1).select(
+        *[
+            (F.lit(-1).cast(t) if c in ("sale_id", "member_id") else F.col(c)).alias(c)
+            for c, t in core_s.dtypes
+        ]
+    )
     try:
-        report = audit.check_core_duplicate_keys(audited_lake, spec).collect()[0]
-        assert report["value"] == 1 and report["ok"] is False
+        tables[0].overwrite(core_m.unionByName(core_m.limit(1)))
+        tables[1].overwrite(stg_m.unionByName(stg_m.limit(1)))
+        tables[2].overwrite(core_s.unionByName(null_key).unionByName(orphan))
+        rows = audit.run_audit(audited_lake, [members, sales, deals], orphan_edges=edges)
+        got = {
+            (r["check"], r["table"]): (r["value"], r["ok"])
+            for r in rows
+            if r["check"] != "stg_freshness_lag_s"
+        }
+        assert got == _per_check_reference(
+            audited_lake, [members, sales, deals], edges
+        )
+        assert got["core_duplicate_keys", "evo_members"] == (1, False)
+        assert got["stg_duplicate_keys", "evo_members"] == (1, False)
+        assert got["core_null_business_keys", "evo_sales"] == (1, False)
+        assert got["orphan_fk_member_id", "evo_sales"] == (1, False)
+        assert got["stg_core_count_reconciliation", "evo_members"][1] is False
+        assert len(rows) == len(got) + 3  # one freshness row per table
     finally:
-        core.overwrite(df.dropDuplicates(["member_id"]))
+        for t, df in zip(tables, saved):
+            t.overwrite(df)
 
 
 def test_audit_date_anomalies(audited_lake):

@@ -10,10 +10,15 @@ from data_lake_skyfit_spark.tables import load_table
 
 
 def test_compact_reduces_file_count(spark, tmp_path):
-    t = ParquetTable(str(tmp_path / "t"), ["id"])
-    base = spark.range(2000).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    # many incremental merges → many small files
-    t.overwrite(base.repartition(16))
+    # A key-clustered table whose merges take the file-pruned path: the
+    # untouched files are carried and the touched one rewritten, so
+    # incremental merges leave many small files. (A full-rewrite merge
+    # re-sizes the whole table through the join's coalesced shuffle.)
+    t = ParquetTable(str(tmp_path / "t"), ["id"], prune_min_bytes=0)
+    base = spark.range(0, 2000, 1, 16).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
+    t.overwrite(base)
     for i in range(3):
         t.merge(
             spark.range(i * 10, i * 10 + 10)

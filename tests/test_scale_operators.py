@@ -97,9 +97,16 @@ def test_salted_join_zipf_stress_splits_straggler(spark):
     equality is asserted on full aggregates.
     """
     n = 400_000
+    buckets = 32
+    # At least one shuffle partition per salt bucket: with fewer (a
+    # 4-core host's default), the buckets hash onto the partitions and
+    # the best possible max share is 1/partitions, not 1/buckets.
     confs = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": str(
+            max(buckets, int(spark.conf.get("spark.sql.shuffle.partitions")))
+        ),
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
@@ -127,7 +134,7 @@ def test_salted_join_zipf_stress_splits_straggler(spark):
             return max(r["count"] for r in rows) / total
 
         plain = fact.join(dim, "k")
-        salted = scale.salted_join(fact, dim, ["k"], buckets=32)
+        salted = scale.salted_join(fact, dim, ["k"], buckets=buckets)
 
         # identical results…
         agg = lambda df: df.agg(  # noqa: E731
