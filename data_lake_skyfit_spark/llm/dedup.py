@@ -629,15 +629,18 @@ def connected_components(
     1..k-1; the driver-side convergence check per round is a scalar
     agg, not a data collect.
 
+    Pairs with a NULL endpoint are dropped by design: a NULL names no
+    node, so such a pair is no edge, and neither endpoint gets a label
+    from it (a non-null endpoint with no other pair is absent from the
+    output, like any node without an edge).
+
     Raises RuntimeError if `max_iter` rounds pass without convergence:
     silently returning partial labels would split one true cluster into
     several, corrupting dedupe decisions.
     """
-    # The fused init below uses null-skipping F.least, which would hand a
-    # NULL endpoint label=min(t) instead of keeping it NULL (the r4c
-    # least-vs-NULL trap). Pair inputs here are non-null by contract;
-    # enforce it so a future nullable caller diverges loudly, not
-    # silently (ADVICE r9).
+    # Drop NULL-endpoint pairs before the fused init: its null-skipping
+    # F.least would otherwise hand a NULL endpoint label=min(t) (the r4c
+    # least-vs-NULL trap) and put a NULL id into the output.
     edges = pairs.select(
         F.col(a_col).alias("s"), F.col(b_col).alias("t")
     ).filter(F.col("s").isNotNull() & F.col("t").isNotNull())

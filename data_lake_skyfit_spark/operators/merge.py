@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedupe import latest_wins
@@ -91,6 +91,7 @@ def merge_rows(
     keys: Sequence[str],
     mode: str = MergeMode.UPDATE_ALL,
     update_subset: Sequence[str] = (),
+    order: Sequence[str | Column] = (),
 ) -> DataFrame:
     """The MERGE row set: ONE full outer join of target and source on
     null-safe key equality, each side carrying a presence flag, and a
@@ -101,6 +102,10 @@ def merge_rows(
     - update_subset: `update_subset` columns as update_all, the rest as
       do_nothing — so a match takes only those columns from the source.
 
+    With `order`, a key on both sides counts as in the source only when
+    the source's `order` tuple is at least the target's (NULL lowest, as
+    in latest_wins): an older source row never replaces a newer one.
+
     Precondition: target and source are each unique on `keys` (every
     table MERGE writes is; ParquetTable.merge dedupes the source). A
     duplicated key would meet every row with that key on the other side.
@@ -108,8 +113,12 @@ def merge_rows(
     alignment, and writing. Both frames must already share one schema.
     """
     cols = target.columns
-    t = target.withColumn("__merge_t", F.lit(True)).alias("t")
-    s = source.withColumn("__merge_s", F.lit(True)).alias("s")
+    t = target.withColumn("__merge_t", F.lit(True))
+    s = source.withColumn("__merge_s", F.lit(True))
+    if order:
+        t = t.withColumn("__merge_o", F.struct(*order))
+        s = s.withColumn("__merge_o", F.struct(*order))
+    t, s = t.alias("t"), s.alias("s")
     on = reduce(
         lambda a, b: a & b,
         [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
@@ -120,8 +129,10 @@ def merge_rows(
         from_source = set(update_subset)
     else:  # DO_NOTHING
         from_source = set()
-    in_s = F.col("s.__merge_s").isNotNull()
     in_t = F.col("t.__merge_t").isNotNull()
+    in_s = F.col("s.__merge_s").isNotNull()
+    if order:
+        in_s = in_s & (~in_t | (F.col("s.__merge_o") >= F.col("t.__merge_o")))
 
     def pick(c: str):
         sc, tc = F.col(f"s.{c}"), F.col(f"t.{c}")
@@ -343,6 +354,17 @@ class ParquetTable:
             w = w.partitionBy(*self.partition_by)
         w.parquet(path)
 
+    def _write_tmp(self, df: DataFrame) -> str:
+        """Write `df` to a fresh scratch sibling of the table and return
+        its path; a failed or cancelled write leaves no scratch dir."""
+        tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
+        try:
+            self._write(df, tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
+
     def overwrite(self, df: DataFrame) -> None:
         """Full refresh — the reference's TRUNCATE + INSERT (K5). In
         Spark there are no indexes to drop/recreate; the write IS the
@@ -359,8 +381,7 @@ class ParquetTable:
         is a self-destruction hazard; the temp+swap makes every merge a
         safe, restartable commit.
         """
-        tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
-        self._write(df, tmp)
+        tmp = self._write_tmp(df)
         if partition_scoped and self.partition_by and os.path.isdir(self.path):
             # Partition-scoped commit: move only rewritten partitions —
             # every partition dir present in tmp IS a rewritten one (the
@@ -563,7 +584,8 @@ class ParquetTable:
         *,
         mode: str = MergeMode.UPDATE_ALL,
         update_subset: Sequence[str] = (),
-        source_order: Sequence[str] = (),
+        source_order: Sequence[str | Column] = (),
+        keep_newer: bool = False,
     ) -> None:
         """MERGE INTO this table USING source ON key.
 
@@ -578,9 +600,13 @@ class ParquetTable:
 
         `source_order` columns (desc) pick the winner when the source
         batch itself contains multiple versions of one key — the batch
-        analog of the reference's last-write-wins loop ordering.
+        analog of the reference's last-write-wins loop ordering. With
+        `keep_newer`, they also decide against the table: a stored row
+        newer by `source_order` is kept (an incremental load of a late,
+        older run never rolls a key back).
         """
         keys = list(self.key)
+        order = list(source_order) if keep_newer else []
         if source_order:
             source = latest_wins(source, keys, list(source_order))
         else:
@@ -608,18 +634,14 @@ class ParquetTable:
                     if not touched:
                         # Pure-insert batch: no existing file can hold a
                         # matching key — append without reading the table.
-                        tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
                         _, src = align_schemas(self.read(spark).limit(0), source)
-                        self._write(src, tmp)
-                        self._commit_file_pruned(tmp, untouched)
+                        self._commit_file_pruned(self._write_tmp(src), untouched)
                         return
                     if untouched:
                         tsub = spark.read.parquet(*touched)
                         tsub, src = align_schemas(tsub, source)
-                        merged = merge_rows(tsub, src, keys, mode, update_subset)
-                        tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
-                        self._write(merged, tmp)
-                        self._commit_file_pruned(tmp, untouched)
+                        merged = merge_rows(tsub, src, keys, mode, update_subset, order)
+                        self._commit_file_pruned(self._write_tmp(merged), untouched)
                         return
                     # touched == every file: fall through to full rewrite
 
@@ -636,5 +658,5 @@ class ParquetTable:
             if partition_scoped:
                 target = target.filter(cond)
 
-        merged = merge_rows(target, source, keys, mode, update_subset)
+        merged = merge_rows(target, source, keys, mode, update_subset, order)
         self._swap_write(merged, partition_scoped=partition_scoped)

@@ -9,8 +9,9 @@ the reference lifecycle (§3):
                   window dedupe + typed select + MERGE/overwrite)
 
 Everything is declarative DataFrame code — Catalyst prunes the JSON
-schema to consumed fields, pushes partition filters into the bronze
-listing, and the per-entity MERGE keys come from the spec (K4 fidelity).
+schema to consumed fields, the bronze read lists only the entity's
+not-yet-loaded run directories (the I4 ledger), and the per-entity
+MERGE keys come from the spec (K4 fidelity).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import bronze
+from ..sources.watermarks import WatermarkStore, incremental_filter
 from ..specs.base import ChildSpec, EntitySpec
 from .dedupe import latest_wins
 from .merge import ParquetTable
@@ -62,10 +64,11 @@ class Lakehouse:
         self,
         spec: EntitySpec,
         *,
-        run_id: str | None = None,
+        runs: list[str] | None = None,
         scopes: tuple[str, ...] | None = None,
     ) -> ParquetTable:
-        """Land bronze JSONL into the staging table.
+        """Land bronze JSONL into the staging table: every run of the
+        entity, or the `runs` given (`bronze.run_dirs` paths).
 
         STG keeps the payload as a raw JSON string (schema-on-read,
         ADR-002) + parsed struct + lineage; the MERGE key is the
@@ -73,11 +76,7 @@ class Lakehouse:
         (P7) exactly as the loaders do.
         """
         df = bronze.read_bronze(
-            self.spark,
-            self.root,
-            spec.source,
-            entity=spec.entity,
-            run_id=run_id,
+            self.spark, self.root, spec.source, entity=spec.entity, runs=runs
         )
         if scopes and "scope" in df.columns:
             df = df.filter(F.col("scope").isin(*scopes))  # P5
@@ -114,7 +113,7 @@ class Lakehouse:
             else [spec.dedupe_order]
         )
         table = self.stg_table(spec)
-        table.merge(staged, source_order=order + ["_source_file"])
+        table.merge(staged, source_order=order + ["_source_file"], keep_newer=True)
         return table
 
     # -- STG → CORE ---------------------------------------------------------
@@ -189,13 +188,25 @@ class Lakehouse:
 
     # -- convenience --------------------------------------------------------
 
-    def run_pipeline(
-        self, spec: EntitySpec, *, full_refresh: bool = False, run_id: str | None = None
-    ) -> None:
+    def run_pipeline(self, spec: EntitySpec, *, full_refresh: bool = False) -> None:
         """Bronze → STG → CORE for one entity (the daily_pipeline.ps1
-        sequence collapsed into one driver call)."""
-        self.load_stg(spec, run_id=run_id)
+        sequence collapsed into one driver call), over only the bronze
+        runs its ledger (I4) has not recorded. A missing STG table or
+        `full_refresh` reads every run; with no new run nothing runs.
+        The ledger commits after CORE, as the watermark does (I3)."""
+        store = WatermarkStore(self.root)
+        runs = bronze.run_dirs(self.spark, self.root, spec.source, spec.entity)
+        loaded = (
+            store.loaded_runs(spec.source, spec.entity)
+            if not full_refresh and self.stg_table(spec).exists()
+            else set()
+        )
+        new = [r for r in runs if r not in loaded]
+        if not new:
+            return
+        self.load_stg(spec, runs=new)
         self.normalize_core(spec, full_refresh=full_refresh)
+        store.record_runs(spec.source, spec.entity, set(runs))
 
     def run_incremental(
         self,
@@ -213,8 +224,6 @@ class Lakehouse:
         MERGEs downstream absorb the overlap duplicates, so re-runs are
         idempotent. The watermark commits only after both layers land.
         """
-        from ..sources.watermarks import incremental_filter
-
         field = ts_field or spec.dedupe_order
         since, until = store.window(spec.source, spec.entity, now=now)
         df = bronze.read_bronze(self.spark, self.root, spec.source, entity=spec.entity)

@@ -4,16 +4,28 @@ The reference chains Bronze→Silver→Gold per source with fail-fast
 sequencing and a post-run health check (scripts/daily_pipeline.ps1,
 docs/OPERATIONS_GUIDE.md:24-50; transformer DAG dims-before-facts in
 normalize_pipedrive.py:924-939 and normalize_zendesk.py:831-839). Here
-that is one driver program: ordered entity list per source, one
-Lakehouse call per entity, then the audit report (§5) with fail-fast.
+that is one driver program: one Lakehouse call per entity, then the
+audit report (§5) with fail-fast.
+
+No entity reads another entity's table during its bronze→STG→CORE
+run, so the entities of every requested source run concurrently, each
+in its own thread and Spark job group; the first failure cancels the
+other groups and is re-raised. The dims-before-facts DAG order is kept
+only for `PipelineResult.ran`: the audit's orphan checks, the one step
+that reads across entities, run once after every entity.
 """
 
 from __future__ import annotations
 
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+
+from pyspark import inheritable_thread_target
 
 from .audit import run_audit
 from .operators.normalize import Lakehouse
+from .sources.bronze import run_dirs
 from .specs.base import EntitySpec, get_spec
 
 __all__ = ["ENTITY_ORDER", "ORPHAN_EDGES", "run_daily", "PipelineResult"]
@@ -62,15 +74,29 @@ class PipelineResult:
         return not self.failed_checks
 
 
-def _has_bronze(lake: Lakehouse, spec: EntitySpec) -> bool:
-    import glob
-    import os
+def _run_concurrently(lake: Lakehouse, specs: list[EntitySpec], full_refresh: bool) -> None:
+    """`run_pipeline` for every spec on min(#specs, defaultParallelism)
+    threads, one job group each. On the first failure, cancel the
+    entities not started and the other groups' jobs, wait for the
+    running threads, and re-raise that failure."""
+    sc = lake.spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    groups = [f"run_daily-{tag}-{spec.name}" for spec in specs]
 
-    base = os.path.join(lake.root, "bronze", spec.source)
-    return bool(
-        glob.glob(os.path.join(base, f"entity={spec.entity}"))
-        or glob.glob(os.path.join(base, "scope=*", f"entity={spec.entity}"))
-    )
+    @inheritable_thread_target(lake.spark)
+    def run_one(spec: EntitySpec, group: str) -> None:
+        sc.setJobGroup(group, spec.name)
+        lake.run_pipeline(spec, full_refresh=full_refresh)
+
+    with ThreadPoolExecutor(min(len(specs), sc.defaultParallelism)) as pool:
+        futures = [pool.submit(run_one, *job) for job in zip(specs, groups)]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = next((f for f in futures if f in done and f.exception()), None)
+        if failed is not None:
+            for f, group in zip(futures, groups):
+                if f is not failed and not f.cancel():
+                    sc.cancelJobGroup(group)
+            raise failed.exception()  # leaving the pool waits for running threads
 
 
 def run_daily(
@@ -80,25 +106,27 @@ def run_daily(
     full_refresh: bool = False,
     audit: bool = True,
 ) -> PipelineResult:
-    """Bronze→STG→CORE for every entity of the given sources in DAG
-    order, then the audit suite. Entities with no landed bronze data are
-    skipped (a source that didn't extract today is not an error — the
-    watermark run simply has nothing new). Raises on the first entity
-    failure (fail-fast), returns the audit report otherwise."""
+    """Bronze→STG→CORE for every entity of the given sources, run
+    concurrently, then the audit suite. Entities with no landed bronze
+    data are skipped (a source that didn't extract today is not an
+    error — the watermark run simply has nothing new). Raises the first
+    entity failure (fail-fast, no audit), returns the audit report
+    otherwise."""
     result = PipelineResult()
     specs_run: list[EntitySpec] = []
     for source in sources:
         for name in ENTITY_ORDER[source]:
             spec = get_spec(name)
-            if not _has_bronze(lake, spec):
+            if run_dirs(lake.spark, lake.root, spec.source, spec.entity):
+                specs_run.append(spec)
+            else:
                 result.skipped.append(name)
-                continue
-            lake.run_pipeline(spec, full_refresh=full_refresh)
-            specs_run.append(spec)
-            result.ran.append(name)
+    if specs_run:
+        _run_concurrently(lake, specs_run, full_refresh)
+    result.ran = [s.name for s in specs_run]
 
     if audit and specs_run:
-        ran_names = {s.name for s in specs_run}
+        ran_names = set(result.ran)
         edges = [
             (get_spec(f), get_spec(d), fk)
             for f, d, fk in ORPHAN_EDGES

@@ -6,11 +6,14 @@ gzipped JSONL parts under Hive-style prefixes
 (reference: src/extractors/pipedrive_bronze.py:145-146,
 src/evo/extractors/evo_members_bronze_parallel.py:146) — but Spark-native:
 
-- S1 (JSONL.GZ read): `spark.read.json` decodes .gz transparently; an
-  explicit schema keeps the scan single-pass (no inference job).
+- S1 (JSONL.GZ read): `spark.read.json` decodes .gz transparently. An
+  entity read lists that entity's run directories and reads only those
+  (or only the runs a caller selects), so schema inference never mixes
+  entities; an explicit schema keeps the scan single-pass.
 - S2 (partition-pruned listing): Hive partition discovery — predicates
   on entity/ingestion_date/run_id prune directories before any I/O.
-- S3 (latest-run discovery): max(run_id) over partition values only.
+- S3 (run discovery): `run_dirs` lists an entity's run directories
+  from the filesystem alone; `latest_run_id` is max(run_id) over them.
 - lineage: `_source_file` via input_file_name(), `run_id`/
   `ingestion_date` come free as partition columns (the reference regex
   path parsing, load_evo_members_stg_fast_v2.py:208-213, disappears).
@@ -24,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["bronze_path", "write_bronze", "read_bronze", "latest_run_id"]
+__all__ = ["bronze_path", "write_bronze", "read_bronze", "run_dirs", "latest_run_id"]
+
+
+_PARTITION_FIELDS = [
+    T.StructField(c, T.StringType()) for c in ("scope", "entity", "ingestion_date", "run_id")
+]
 
 
 def bronze_path(root: str, source: str) -> str:
@@ -62,36 +70,37 @@ def read_bronze(
     source: str,
     *,
     entity: str | None = None,
-    run_id: str | None = None,
+    runs: list[str] | None = None,
     ingestion_date: str | None = None,
     scope: str | None = None,
     schema: T.StructType | None = None,
 ) -> DataFrame:
     """Partition-pruned bronze scan with lineage columns.
 
-    Every filter lands on a partition column, so pruning happens at
-    file-listing time — the Spark equivalent of the reference's prefix
-    listing (src/common/lake.py:143-169).
+    With `entity`, only that entity's run directories are read — all of
+    them, or the `runs` given (paths from `run_dirs`). `basePath` keeps
+    the partition columns, and schema inference sees only those files.
+    Without it, the whole source root is read. The remaining filters
+    land on partition columns, so pruning happens at file-listing time —
+    the Spark equivalent of the reference's prefix listing
+    (src/common/lake.py:143-169).
     """
-    reader = spark.read
+    base = bronze_path(root, source)
+    reader = spark.read.option("basePath", base)
     if schema is not None:
-        part_fields = [
-            f for f in (
-                T.StructField("scope", T.StringType()),
-                T.StructField("entity", T.StringType()),
-                T.StructField("ingestion_date", T.StringType()),
-                T.StructField("run_id", T.StringType()),
-            )
-        ]
-        full = T.StructType(list(schema.fields) + [f for f in part_fields if f.name not in schema.names])
-        reader = reader.schema(full)
-    df = reader.json(bronze_path(root, source))
-    for col, val in (
-        ("entity", entity),
-        ("run_id", run_id),
-        ("ingestion_date", ingestion_date),
-        ("scope", scope),
-    ):
+        schema = T.StructType(
+            list(schema.fields) + [f for f in _PARTITION_FIELDS if f.name not in schema.names]
+        )
+        reader = reader.schema(schema)
+    if entity is None:
+        df = reader.json(base)
+    else:
+        if runs is None:
+            runs = run_dirs(spark, root, source, entity)
+        df = reader.json([f"{base}/{r}" for r in runs]) if runs else spark.createDataFrame(
+            [], schema or T.StructType(_PARTITION_FIELDS)
+        )
+    for col, val in (("ingestion_date", ingestion_date), ("scope", scope)):
         if val is not None and col in df.columns:
             df = df.filter(F.col(col) == val)
     return df.withColumn("_source_file", F.input_file_name()).withColumn(
@@ -99,37 +108,48 @@ def read_bronze(
     )
 
 
-def latest_run_id(spark: SparkSession, root: str, source: str, entity: str) -> str | None:
-    """max(run_id) from the partition DIRECTORY listing only — zero data
-    files are opened. The obvious `spark.read.json(path)` runs full
-    schema inference over every JSONL part before looking at partition
-    values (round-1 VERDICT: a real cost on every incremental run at
-    60 GB of bronze); a filesystem glob over `run_id=*` dirs is the
-    listing the reference's prefix scan does (src/common/lake.py:143-169),
-    expressed through the Hadoop FS API so it works on HDFS/S3 too.
-    """
-    from urllib.parse import unquote
-
+def run_dirs(spark: SparkSession, root: str, source: str, entity: str) -> list[str]:
+    """Every run directory of `entity`, as a path relative to the
+    source root (`[scope=s/]entity=e/ingestion_date=d/run_id=r`, names
+    as on disk), from the directory listing alone — no data file is
+    opened. The glob runs through the Hadoop FS API, so it works on
+    HDFS/S3 too, like the reference's prefix scan
+    (src/common/lake.py:143-169)."""
     base = bronze_path(root, source)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(base)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
-        return None
-    values: set[str] = set()
-    # Layout: [scope=*/]entity={e}/ingestion_date=*/run_id=* — glob both
-    # scoped and unscoped shapes; only directory names come back.
-    for pattern in (
-        f"{base}/entity={entity}/*/run_id=*",
-        f"{base}/scope=*/entity={entity}/*/run_id=*",
+        return []
+    out = []
+    for pattern, depth in (
+        (f"{base}/entity={entity}/*/run_id=*", 3),
+        (f"{base}/scope=*/entity={entity}/*/run_id=*", 4),
     ):
         for status in fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern)) or []:
             if not status.isDirectory():
                 continue
-            name = status.getPath().getName()  # "run_id=<escaped value>"
-            value = unquote(name.split("=", 1)[1])
-            if value != "__HIVE_DEFAULT_PARTITION__":
-                values.add(value)
+            path, names = status.getPath(), []
+            for _ in range(depth):
+                names.append(path.getName())
+                path = path.getParent()
+            out.append("/".join(reversed(names)))
+    return sorted(out)
+
+
+def latest_run_id(spark: SparkSession, root: str, source: str, entity: str) -> str | None:
+    """max(run_id) over `run_dirs` — zero data files are opened. The
+    obvious `spark.read.json(path)` runs full schema inference over
+    every JSONL part before looking at partition values (round-1
+    VERDICT: a real cost on every incremental run at 60 GB of bronze).
+    """
+    from urllib.parse import unquote
+
+    values = {
+        unquote(rel.rsplit("run_id=", 1)[1])
+        for rel in run_dirs(spark, root, source, entity)
+    }
+    values.discard("__HIVE_DEFAULT_PARTITION__")
     if not values:
         return None
     # All-digit run ids compare NUMERICALLY ('10' > '9') — partition

@@ -18,7 +18,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .bronze import bronze_path
+from .bronze import bronze_path, run_dirs
 
 __all__ = ["extraction_report", "extraction_gaps"]
 
@@ -26,25 +26,14 @@ _ISO_DAY = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 def _run_dirs(spark: SparkSession, root: str, source: str, entity: str):
-    """Yield (ingestion_date, run_id, FileStatus dir) for every run
-    partition of the entity, scoped or unscoped layout."""
+    """Yield (ingestion_date, run_id, FileSystem, run dir Path) for every
+    run partition of the entity (`bronze.run_dirs`)."""
     base = bronze_path(root, source)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return
-    for pattern in (
-        f"{base}/entity={entity}/ingestion_date=*/run_id=*",
-        f"{base}/scope=*/entity={entity}/ingestion_date=*/run_id=*",
-    ):
-        for status in fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern)) or []:
-            if not status.isDirectory():
-                continue
-            run_dir = status.getPath()
-            run_id = unquote(run_dir.getName().split("=", 1)[1])
-            ingestion_date = unquote(run_dir.getParent().getName().split("=", 1)[1])
-            yield ingestion_date, run_id, fs, run_dir
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(base).getFileSystem(spark._jsc.hadoopConfiguration())
+    for rel in run_dirs(spark, root, source, entity):
+        day, run = (unquote(n.split("=", 1)[1]) for n in rel.split("/")[-2:])
+        yield day, run, fs, hpath(f"{base}/{rel}")
 
 
 def extraction_report(

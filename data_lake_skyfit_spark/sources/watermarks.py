@@ -11,6 +11,11 @@ Reproduces the reference's exactly-once story (SURVEY.md §2.9):
   upserts on its key, so re-runs and overlap duplicates are absorbed
   (docs/OPERATIONS_GUIDE.md "COMPORTAMENTO INCREMENTAL").
 
+- I4 run ledger: the set of bronze run directories each entity has
+  loaded, so a daily run reads only the runs it has not (Delta Lake's
+  application transaction ids, kept per entity). A set, not a max: a
+  late run landed under an older run_id is still new.
+
 Watermark state is driver-side metadata, kilobytes at any scale — it
 lives as JSON documents under `_meta/{source}/watermarks/`, exactly the
 reference's layout, NOT in a data-plane table. Run manifests land under
@@ -96,15 +101,10 @@ class WatermarkStore:
     ) -> None:
         """Commit the watermark — call ONLY after the run succeeded
         (pipedrive_bronze.py:274 advances post-success)."""
-        p = self._path(source, entity, scope)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
         doc = {"last_successful_until": _dump_ts(until)}
         if cursor is not None:
             doc["cursor"] = cursor
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, p)  # atomic commit
+        _write_atomic(self._path(source, entity, scope), doc)
 
     # -- I2: opaque cursors --------------------------------------------------
 
@@ -116,6 +116,26 @@ class WatermarkStore:
             return None
         with open(p) as f:
             return json.load(f).get("cursor")
+
+    # -- I4: run ledger -------------------------------------------------------
+
+    def _ledger_path(self, source: str, entity: str) -> str:
+        return os.path.join(self.root, "_meta", source, "ledger", f"{entity}.json")
+
+    def loaded_runs(self, source: str, entity: str) -> set[str]:
+        """Run directories (relative to the source's bronze root, as
+        `bronze.run_dirs` lists them) already loaded; empty on first run."""
+        p = self._ledger_path(source, entity)
+        if not os.path.exists(p):
+            return set()
+        with open(p) as f:
+            return set(json.load(f)["runs"])
+
+    def record_runs(self, source: str, entity: str, runs: set[str]) -> None:
+        """Commit the loaded set — call ONLY after both layers landed
+        (the I3 contract: a crash before this reloads the runs, and the
+        keyed MERGEs absorb the replay)."""
+        _write_atomic(self._ledger_path(source, entity), {"runs": sorted(runs)})
 
     # -- run manifests (K6) --------------------------------------------------
 
@@ -134,6 +154,14 @@ class WatermarkStore:
         return sorted(
             n.split("=", 1)[1] for n in os.listdir(d) if n.startswith("run_id=")
         )
+
+
+def _write_atomic(path: str, doc: dict) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(doc, f)
+    os.replace(tmp, path)  # atomic commit
 
 
 def incremental_filter(

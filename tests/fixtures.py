@@ -190,12 +190,14 @@ def gen_entries(root: str, *, n: int = 400, seed: int = 13) -> dict:
     return {"n_unique": n_unique}
 
 
-def gen_prospects(root: str, *, n: int = 40, seed: int = 17) -> dict:
+def gen_prospects(root: str, *, n: int = 40, seed: int = 17, branch_as_string: bool = False) -> dict:
+    """`branch_as_string` lands idBranch as a JSON string, as the EVO
+    prospects API does, while members/sales/entries land a number."""
     recs = []
     for i in range(n):
         rec = {
             "idProspect": i,
-            "idBranch": 1 + i % 5,
+            "idBranch": str(1 + i % 5) if branch_as_string else 1 + i % 5,
             "branchName": f"Branch {i % 5}",
             "firstName": f"P{i}",
             "lastName": "Prospect",
