@@ -545,31 +545,6 @@ def parse_av1_stream(data: bytes) -> dict:
     return {"seq": sh, "frame": fh, "tile_data": tiles, "n_obus": n_obus}
 
 
-def tile_group_ranges(tile_data: bytes, fh: dict) -> list[bytes]:
-    """§5.11.1: split one tile-group payload into per-tile byte
-    strings (tile_start_and_end_present + le(TileSizeBytes) sizes)."""
-    n_tiles = fh["tile_cols"] * fh["tile_rows"]
-    b = _Bits(tile_data)
-    if n_tiles > 1:
-        if b.f(1):  # tile_start_and_end_present
-            b.f(2 * _tile_log2(1, n_tiles))  # tg_start / tg_end
-    b.byte_align()
-    i = b.pos >> 3
-    out = []
-    sz_bytes = fh["tile_size_bytes"]
-    for t in range(n_tiles):
-        if t == n_tiles - 1:
-            out.append(tile_data[i:])
-            break
-        sz = int.from_bytes(tile_data[i : i + sz_bytes], "little") + 1
-        i += sz_bytes
-        if i + sz > len(tile_data):
-            raise ValueError("av1: tile size overruns tile group")
-        out.append(tile_data[i : i + sz])
-        i += sz
-    return out
-
-
 # ----------------------------------------------------- OBU writers (fixture)
 
 

@@ -260,7 +260,8 @@ def hnsw_topk(
             # downstream): a shard beam returns each neighbor at most
             # once. A future graph-build change that duplicated an adj
             # entry would otherwise silently rank one neighbor twice.
-            assert len(found) == len(set(found)), "beam returned a duplicate neighbor"
+            if len(found) != len(set(found)):
+                raise RuntimeError("hnsw: beam returned a duplicate neighbor")
             out_q.extend([qi[r]] * len(found))
             out_n.extend(ids[j] for j in found)
         return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})

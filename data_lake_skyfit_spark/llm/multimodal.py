@@ -44,6 +44,14 @@ signatures, batch iteration — is identical for both paths.
 encoded media from an id column with documented closed-form content,
 so battery fixtures can encode → decode and a SQL oracle can compute
 the expected decoded values arithmetically (see queries_llm.py).
+
+One scaffold serves every kernel. Each `synthesize_*` is a per-id
+`encode_one(id) -> bytes` on `id_kernel`, which owns the id spread,
+the Arrow batch loop and the `(id, payload)` schema. Each decode
+kernel runs its media family's sniff→decoder ladder (the tables at
+the end of the module) through `_first_decode`; a payload no entry
+decodes takes that kernel's own fallback. `_typed_frame` turns the
+decoded tuples into the kernel's typed output frame.
 """
 
 from __future__ import annotations
@@ -55,7 +63,7 @@ import os
 import struct
 import wave
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -69,21 +77,19 @@ from .h264 import (
     _crop_planes as _h264_crop_planes,
     _split_nals as _h264_split_nals,
     _strip_emulation as _h264_strip_emulation,
-    decode_h264_iframe,
     encode_h264_iframe_flat,
     encode_h264_iframe_steps,
-    h264_flat_expected,
-    h264_steps_expected,
 )
 from .hevc import (
     _parse_sps as _hevc_parse_sps,
     decode_hevc_iframe,
     encode_hevc_iframe_bypass,
 )
-from .vp8 import decode_vp8_keyframe, encode_webp_vp8_flat, vp8_flat_expected
+from .vp8 import decode_vp8_keyframe, encode_webp_vp8_flat
 
 __all__ = [
     "MEDIA_META_SCHEMA",
+    "id_kernel",
     "attach_binary_payload",
     "media_manifest",
     "decode_images",
@@ -165,17 +171,28 @@ def _fake_decode_enabled() -> bool:
     return os.environ.get("SKYFIT_FAKE_DECODE", "1") == "1"
 
 
-def _spread_ids(df: DataFrame, id_col: str, *, rows_per_task: int | None = None) -> DataFrame:
-    """The id column only, hash-repartitioned to the session's default
-    parallelism before a synthesize kernel. Per-id encode/decode kernels
-    are embarrassingly parallel, but a small filtered id range usually
-    sits in 1-2 parquet splits (the r7d one-split trap, measured again
-    in r9: multimodal_decode_h264 ran its whole 500-GOP encode+decode
-    chain on ONE core — 8.5 s vs ~1.4 s spread). The downstream decode
-    mapInPandas inherits this partitioning, so the pipeline pays exactly
-    one exchange of 8-byte ids. Hash partitioning by id is deterministic
-    (no round-robin retry hazard, guide §2.5) and scale-adaptive: the
-    count follows the cluster's parallelism, not a constant.
+def id_kernel(
+    df: DataFrame,
+    id_col: str,
+    encode_one: Callable[[int], bytes],
+    *,
+    rows_per_task: int | None = None,
+) -> DataFrame:
+    """The scaffold every ``synthesize_*`` fixture kernel runs on: the
+    id column in, ``(id long, payload binary)`` out, one
+    ``encode_one(id) -> bytes`` call per id inside an Arrow-batched
+    mapInPandas.
+
+    The ids are hash-repartitioned to the session's default parallelism
+    first. Per-id encode/decode kernels are embarrassingly parallel, but
+    a small filtered id range usually sits in 1-2 parquet splits (the
+    r7d one-split trap, measured again in r9: multimodal_decode_h264 ran
+    its whole 500-GOP encode+decode chain on ONE core — 8.5 s vs ~1.4 s
+    spread). The downstream decode mapInPandas inherits this
+    partitioning, so the pipeline pays exactly one exchange of 8-byte
+    ids. Hash partitioning by id is deterministic (no round-robin retry
+    hazard, guide §2.5) and scale-adaptive: the count follows the
+    cluster's parallelism, not a constant.
 
     ``rows_per_task`` (r10, the VERDICT-r9 dedup_audio_envelope fix):
     LIGHT fixture kernels feeding shuffle-heavy consumers should NOT fan
@@ -188,7 +205,57 @@ def _spread_ids(df: DataFrame, id_col: str, *, rows_per_task: int | None = None)
     if rows_per_task is not None:
         rows = ids.count()
         n = min(n, max(1, -(-rows // rows_per_task)))
-    return ids.repartition(n, id_col)
+    schema = T.StructType(
+        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode_one(int(v)) for v in pdf[id_col]]
+            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+
+    return ids.repartition(n, id_col).mapInPandas(kernel, schema)
+
+
+def _first_decode(data: bytes, ladder, *args):
+    """Run a media family's sniff→decoder ladder: the first entry whose
+    ``sniff(data)`` holds and whose ``decode(data, *args)`` returns a
+    value (not None) wins. An exception in the entry's own ``errors`` tuple —
+    magic-prefixed junk, a corrupt or foreign-codec payload — falls
+    through to the next entry; any other exception propagates. Returns
+    None when no entry decodes, so each kernel keeps its own fallback.
+    The family ladders sit at the end of the module."""
+    for sniff, decode, errors in ladder:
+        if sniff(data):
+            try:
+                out = decode(data, *args)
+            except errors:
+                continue
+            if out is not None:
+                return out
+    return None
+
+
+def _explode(pdf: pd.DataFrame, id_col: str, rows_of) -> tuple[list, list]:
+    """A 1→N kernel's batch: ``rows_of(payload)`` records for every
+    payload, each paired with its row's id."""
+    ids, recs = [], []
+    for rid, b in zip(pdf[id_col], pdf["payload"]):
+        for rec in rows_of(bytes(b)):
+            ids.append(rid)
+            recs.append(rec)
+    return ids, recs
+
+
+def _typed_frame(id_col: str, ids, rows: list, columns) -> pd.DataFrame:
+    """Decoded tuples → a kernel's output frame: ``ids`` first, then one
+    column per ``(name, dtype)`` from the tuples' positions (a dtype of
+    None keeps plain Python values, e.g. bytes and strings)."""
+    values = list(zip(*rows)) or [()] * len(columns)
+    out = {id_col: ids}
+    for (name, dtype), vals in zip(columns, values):
+        out[name] = pd.array(list(vals), dtype=dtype) if dtype else list(vals)
+    return pd.DataFrame(out)
 
 
 def attach_binary_payload(df: DataFrame, source_col: str, *, mime: str = "application/octet-stream") -> DataFrame:
@@ -437,14 +504,16 @@ def _pcm_samples(data: bytes) -> tuple[int, int, int, tuple]:
     """Container-agnostic PCM fetch — RIFF/WAVE (little-endian) or
     FORM/AIFF (big-endian): (sample_rate, n_frames, n_channels,
     interleaved samples). The feature/resample legs dispatch through
-    this so both containers share one real path."""
-    if _looks_like_wav(data):
-        return _wav_samples(data)
-    if _looks_like_aiff(data):
-        return _aiff_samples(data)
-    if _looks_like_flac(data):
-        return _flac_samples(data)
-    raise ValueError("not a PCM container this codec knows")
+    this so both containers share one real path. A container that
+    sniffs right but fails to parse raises its own error."""
+    out = _first_decode(data, _PCM_LADDER)
+    if out is None:
+        raise ValueError("not a PCM container this codec knows")
+    return out
+
+
+def _looks_like_pcm(data: bytes) -> bool:
+    return _looks_like_wav(data) or _looks_like_aiff(data) or _looks_like_flac(data)
 
 
 def _decode_aiff(data: bytes) -> tuple[int, int, int, int, float]:
@@ -2542,9 +2611,6 @@ def synthesize_jpeg_payloads(
     — decoded pixels are identical, so the same oracle grades the
     progressive decode path.
     """
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
     enc = encode_jpeg_progressive if progressive else encode_jpeg
 
     def one(rid: int) -> bytes:
@@ -2569,12 +2635,7 @@ def synthesize_jpeg_payloads(
             cr=125 + rid % 7,
         )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [one(int(v)) for v in pdf[id_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_gif_animation_payloads(
@@ -2586,28 +2647,16 @@ def synthesize_gif_animation_payloads(
     pattern 'doc<id>f<i>x' repeated/truncated to w·h bytes — so a SQL
     oracle rebuilds every sampled frame's md5 while the bytes travel
     through real LZW compression and GCE timing blocks."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def frame_bytes(rid: int, i: int, size: int) -> bytes:
         pat = f"doc{rid}f{i}x".encode()
         return (pat * (size // len(pat) + 1))[:size]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                w, h = 4 + rid % 5, 3 + rid % 4
-                nf = 2 + rid % 5
-                payloads.append(
-                    encode_gif_animation(
-                        w, h, [frame_bytes(rid, i, w * h) for i in range(nf)]
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        w, h = 4 + rid % 5, 3 + rid % 4
+        frames = [frame_bytes(rid, i, w * h) for i in range(2 + rid % 5)]
+        return encode_gif_animation(w, h, frames)
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2617,25 +2666,16 @@ def synthesize_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     sample[i] = ((id·7919 + i·104729) mod 65536) − 32768. A SQL oracle
     reproduces the decoded stats from the same formulas (no bytes).
     """
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_wav_pcm16(
+            WAV_RATES[rid % 5],
+            [
+                ((rid * 7919 + i * 104729) % 65536) - 32768
+                for i in range(64 + rid % 97)
+            ],
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav_pcm16(
-                    WAV_RATES[rid % 5],
-                    [
-                        ((rid * 7919 + i * 104729) % 65536) - 32768
-                        for i in range(64 + rid % 97)
-                    ],
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_ppm_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2644,24 +2684,15 @@ def synthesize_ppm_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     Per id: width = 4 + id % 13, height = 4 + id % 11; even ids are P6
     RGB with pixel(x,y,c) = (5·id + 2x + 11y + 3c) mod 256, odd ids are
     P5 grayscale with pixel(x,y) = (5·id + 2x + 11y) mod 256."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_ppm(
+            4 + rid % 13,
+            4 + rid % 11,
+            lambda x, y, c: (5 * rid + 2 * x + 11 * y + 3 * c) % 256,
+            gray=bool(rid % 2),
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_ppm(
-                    4 + rid % 13,
-                    4 + rid % 11,
-                    lambda x, y, c, rid=rid: (5 * rid + 2 * x + 11 * y + 3 * c) % 256,
-                    gray=bool(rid % 2),
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_aiff_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2672,29 +2703,16 @@ def synthesize_aiff_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     sample[i] = ((id·6007 + i·31337) mod 65536) − 32768 over the
     interleaved stream. A SQL oracle reproduces the decoded stats from
     the same formulas (no bytes)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        n_ch = 1 + rid % 2
+        total = (50 + rid % 89) * n_ch
+        return encode_aiff_pcm16(
+            WAV_RATES[(rid + 2) % 5],
+            [((rid * 6007 + i * 31337) % 65536) - 32768 for i in range(total)],
+            n_channels=n_ch,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                n_ch = 1 + rid % 2
-                total = (50 + rid % 89) * n_ch
-                payloads.append(
-                    encode_aiff_pcm16(
-                        WAV_RATES[(rid + 2) % 5],
-                        [
-                            ((rid * 6007 + i * 31337) % 65536) - 32768
-                            for i in range(total)
-                        ],
-                        n_channels=n_ch,
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_bmp_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2703,23 +2721,14 @@ def synthesize_bmp_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     Per id: width = 4 + id % 13, height = 4 + id % 11,
     pixel(x, y, c) = (id + 3x + 7y + c) mod 256.
     """
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_bmp24(
+            4 + rid % 13,
+            4 + rid % 11,
+            lambda x, y, c: (rid + 3 * x + 7 * y + c) % 256,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_bmp24(
-                    4 + rid % 13,
-                    4 + rid % 11,
-                    lambda x, y, c, rid=rid: (rid + 3 * x + 7 * y + c) % 256,
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_png_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2728,23 +2737,14 @@ def synthesize_png_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     pixel(x, y, c) = (5·id + 11x + 13y + 17c) mod 256, scanline filter
     y % 5 — every PNG filter type appears in every payload taller than
     4 rows, so decoding demands the full reconstruction algorithm."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_png(
+            4 + rid % 17,
+            4 + rid % 15,
+            lambda x, y, c: (5 * rid + 11 * x + 13 * y + 17 * c) % 256,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    4 + rid % 17,
-                    4 + rid % 15,
-                    lambda x, y, c, rid=rid: (5 * rid + 11 * x + 13 * y + 17 * c) % 256,
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_tiff_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2758,10 +2758,6 @@ def synthesize_tiff_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     horizontal-differencing predictor on ids ≡ 1 mod 6, 2 PackBits),
     putting the libtiff-arbitrated §13/§9 codecs under the graded
     hash."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def one(rid: int) -> bytes:
         comp = (1, 5, 32773)[rid % 3]
         return encode_tiff(
@@ -2773,12 +2769,7 @@ def synthesize_tiff_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
             predictor=2 if rid % 6 == 1 else 1,
         )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [one(int(v)) for v in pdf[id_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_png_variant_payloads(
@@ -2794,9 +2785,6 @@ def synthesize_png_variant_payloads(
 
     Same dims (4 + id%13, 4 + id%11) and default y % 5 filter cycling
     as the RGB leg, so every color type crosses every filter."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
     pal = [((3 * i) % 256, (5 * i) % 256, (7 * i) % 256) for i in range(256)]
 
     def one(rid: int) -> bytes:
@@ -2813,12 +2801,7 @@ def synthesize_png_variant_payloads(
             channels=ch,
         )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [one(int(v)) for v in pdf[id_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_gif_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2826,23 +2809,14 @@ def synthesize_gif_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     Per id: width = 4 + id % 14, height = 4 + id % 12,
     palette index(x, y) = (3·id + 5x + 7y) mod 256 over a grayscale
     global color table — so pixel_sum = 3·Σ index, reproducible in SQL."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_gif(
+            4 + rid % 14,
+            4 + rid % 12,
+            lambda x, y: (3 * rid + 5 * x + 7 * y) % 256,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_gif(
-                    4 + rid % 14,
-                    4 + rid % 12,
-                    lambda x, y, rid=rid: (3 * rid + 5 * x + 7 * y) % 256,
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def decode_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -2873,75 +2847,22 @@ def decode_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
+    columns = [("width", "int32"), ("height", "int32"), ("n_channels", "int32"),
+               ("pixel_sum", "Int64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> tuple[int, int, int, int | None]:
             data = bytes(b)
-            if _looks_like_bmp(data):
-                try:
-                    return _decode_bmp(data)
-                except (ValueError, struct.error):
-                    pass  # 'BM'-prefixed non-BMP bytes: fake path below
-            if _looks_like_png(data):
-                try:
-                    return _decode_png(data)
-                except (ValueError, struct.error, zlib.error):
-                    pass  # signature-prefixed non-PNG bytes: fake path
-            if _looks_like_gif(data):
-                try:
-                    return _decode_gif(data)
-                except (ValueError, struct.error, IndexError):
-                    pass  # signature-prefixed non-GIF bytes: fake path
-            if _looks_like_ppm(data):
-                try:
-                    return _decode_ppm(data)
-                except (ValueError, struct.error):
-                    pass  # P6/P5-prefixed non-netpbm bytes: fake path
-            if _looks_like_jpeg(data):
-                try:
-                    return _decode_jpeg(data)
-                except (ValueError, struct.error, IndexError):
-                    pass  # non-baseline/corrupt JPEG: fake path below
-            if _looks_like_tiff(data):
-                try:
-                    return _decode_tiff(data)
-                except (ValueError, struct.error, IndexError):
-                    pass  # compressed/corrupt TIFF: fake path below
-            if _looks_like_webp(data):
-                try:
-                    w, h, ch, raw = _vp8l_pixels(data)
-                    return w, h, ch, sum(raw)
-                except (ValueError, struct.error, IndexError):
-                    pass  # not lossless: try the lossy VP8 keyframe path
-                try:
-                    w, h, ch, raw = _vp8_lossy_channel_bytes(data)
-                    return w, h, ch, sum(raw)
-                except (ValueError, struct.error, IndexError):
-                    pass  # non-keyframe / corrupt VP8: fake path below
-            if _looks_like_heif(data):
-                # HEIC still images (r7d): HEIF item walk (hvc1 or
-                # Apple-style grid-of-hvc1) + full HEVC intra decode;
-                # pixel_sum over the NATIVE 4:2:0 planes like the
-                # video tiers
-                try:
-                    w, h, ch, raw = _heic_pixels(data)
-                    return w, h, ch, sum(raw)
-                except (ValueError, struct.error, IndexError):
-                    pass  # AV1-coded (avif) / corrupt: fake path below
+            decoded = _first_decode(data, _IMAGE_SUM_LADDER)
+            if decoded is not None:
+                return decoded
             _require_codec("PIL")
             d = hashlib.md5(data).digest()
             return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 3, None
 
         for pdf in batches:
             decoded = [one(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array([d[0] for d in decoded], dtype="int32"),
-                    "height": pd.array([d[1] for d in decoded], dtype="int32"),
-                    "n_channels": pd.array([d[2] for d in decoded], dtype="int32"),
-                    "pixel_sum": pd.array([d[3] for d in decoded], dtype="Int64"),
-                }
-            )
+            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -2949,67 +2870,77 @@ def decode_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
 def _image_channel_bytes(data: bytes) -> tuple[int, int, int, bytes] | None:
     """(width, height, channels, raw channel bytes) for any REALLY
     decodable image payload — BMP (padding skipped), PNG (unfiltered
-    scanlines), GIF (palette-resolved r,g,b per pixel) — else None."""
-    if _looks_like_bmp(data):
-        try:
-            return _bmp_channel_bytes(data)
-        except (ValueError, struct.error):
-            return None
-    if _looks_like_png(data):
-        try:
-            w, h, ch, rows = _png_pixels(data)
-            return w, h, ch, b"".join(rows)
-        except (ValueError, struct.error, zlib.error):
-            return None
-    if _looks_like_gif(data):
-        try:
-            w, h, pal, idx = _gif_pixels(data)
-            return w, h, 3, bytes(v for i in idx for v in pal[i])
-        except (ValueError, struct.error, IndexError):
-            return None
-    if _looks_like_jpeg(data):
-        try:
-            return _jpeg_pixels(data)
-        except (ValueError, struct.error, IndexError):
-            return None
-    if _looks_like_tiff(data):
-        try:
-            return _tiff_pixels(data)
-        except (ValueError, struct.error, IndexError):
-            return None
-    if _looks_like_webp(data):
-        try:
-            return _vp8l_pixels(data)
-        except (ValueError, struct.error, IndexError):
-            pass
-        try:
-            # lossy VP8 keyframe (r6): YUV420 planes, chroma replicated
-            return _vp8_lossy_channel_bytes(data)
-        except (ValueError, struct.error, IndexError):
-            return None
-    if _looks_like_heif(data):
-        try:
-            # HEIC (r7d): same serving convention as lossy WebP —
-            # interleaved Y,U,V with 4:2:0 chroma pixel-replicated
-            w, h, ch, raw = _heic_pixels(data)
-            ysz = w * h
-            cw, chh = (w + 1) // 2, (h + 1) // 2
-            y = raw[:ysz]
-            cb = raw[ysz : ysz + cw * chh]
-            cr = raw[ysz + cw * chh :]
-            out = bytearray(ysz * 3)
-            for r in range(h):
-                ro = r * w
-                co = (r >> 1) * cw
-                for c in range(w):
-                    o = (ro + c) * 3
-                    out[o] = y[ro + c]
-                    out[o + 1] = cb[co + (c >> 1)]
-                    out[o + 2] = cr[co + (c >> 1)]
-            return w, h, 3, bytes(out)
-        except (ValueError, struct.error, IndexError):
-            return None
-    return None
+    scanlines), GIF (palette-resolved r,g,b per pixel), JPEG, TIFF,
+    WebP (lossless, then lossy) and HEIC — else None."""
+    return _first_decode(data, _CHANNEL_BYTES_LADDER)
+
+
+def _pcm_features(data: bytes) -> list[float] | None:
+    """Audio leg of extract_embeddings: [sample_rate, n_samples,
+    duration_ms, mean, rms, zero_crossing_rate, min, max] over the
+    decoded PCM, or None for a payload without samples."""
+    import numpy as np
+
+    sr, nf, nch, samples = _pcm_samples(data)
+    # Interleaved multichannel PCM is DE-INTERLEAVED first
+    # (closes the code-review-r3 gap that sent stereo to the
+    # fake path): sum/rms/min/max are channel-order-free, and
+    # zero crossings count per channel then pool — never
+    # comparing L[i] against R[i].
+    if nch < 1 or not len(samples):
+        return None
+    s = np.asarray(samples, dtype=np.int64)
+    ssum, ssq = int(s.sum()), int((s * s).sum())
+    ch = s.reshape(-1, nch)  # frame-major → per-channel cols
+    zc = int(((ch[:-1] * ch[1:]) < 0).sum())
+    n_adj = (len(ch) - 1) * nch
+    return [
+        float(sr),
+        float(len(s)),
+        float(nf * 1000 // sr),
+        ssum / len(s),
+        math.sqrt(ssq / len(s)),
+        (zc / n_adj) if n_adj > 0 else 0.0,
+        float(s.min()),
+        float(s.max()),
+    ]
+
+
+def _byte_stats(raw: bytes) -> list[float]:
+    """[mean, rms, frac>127, min, max] over non-empty uint8 bytes."""
+    import numpy as np
+
+    arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+    n = len(arr)
+    return [
+        int(arr.sum()) / n,
+        math.sqrt(int((arr * arr).sum()) / n),
+        int((arr > 127).sum()) / n,
+        float(arr.min()),
+        float(arr.max()),
+    ]
+
+
+def _avi_features(data: bytes) -> list[float] | None:
+    """Video leg of extract_embeddings: [n_frames, fps, duration_ms,
+    byte mean/rms/frac>127/min/max] over the movi frame bytes."""
+    upf, frames = _avi_frames(data)
+    raw = b"".join(frames)
+    if not raw:
+        return None
+    fps = 1_000_000 / upf
+    return [float(len(frames)), fps, float(len(frames) * upf // 1000), *_byte_stats(raw)]
+
+
+def _image_features(data: bytes) -> list[float] | None:
+    """Image leg of extract_embeddings: [width, height, channels,
+    byte_mean, byte_rms, frac_bytes>127, byte_min, byte_max] over the
+    decoded channel bytes (_image_channel_bytes)."""
+    decoded = _image_channel_bytes(data)
+    if decoded is None or not decoded[3]:
+        return None
+    w, h, ch, raw = decoded
+    return [float(w), float(h), float(ch), *_byte_stats(raw)]
 
 
 def extract_embeddings(df: DataFrame, *, id_col: str = "doc_id", dims: int = 8) -> DataFrame:
@@ -3044,78 +2975,10 @@ def extract_embeddings(df: DataFrame, *, id_col: str = "doc_id", dims: int = 8) 
 
     def features_of(b) -> list[float]:
         data = bytes(b)
-        if dims == 8 and (
-            _looks_like_wav(data) or _looks_like_aiff(data) or _looks_like_flac(data)
-        ):
-            try:
-                import numpy as np
-
-                sr, nf, nch, samples = _pcm_samples(data)
-                # Interleaved multichannel PCM is DE-INTERLEAVED first
-                # (closes the code-review-r3 gap that sent stereo to the
-                # fake path): sum/rms/min/max are channel-order-free, and
-                # zero crossings count per channel then pool — never
-                # comparing L[i] against R[i].
-                if nch >= 1 and len(samples):
-                    s = np.asarray(samples, dtype=np.int64)
-                    ssum, ssq = int(s.sum()), int((s * s).sum())
-                    ch = s.reshape(-1, nch)  # frame-major → per-channel cols
-                    zc = int(((ch[:-1] * ch[1:]) < 0).sum())
-                    n_adj = (len(ch) - 1) * nch
-                    return [
-                        float(sr),
-                        float(len(s)),
-                        float(nf * 1000 // sr),
-                        ssum / len(s),
-                        math.sqrt(ssq / len(s)),
-                        (zc / n_adj) if n_adj > 0 else 0.0,
-                        float(s.min()),
-                        float(s.max()),
-                    ]
-            except (ValueError, struct.error, wave.Error, EOFError):
-                pass  # RIFF-prefixed non-WAV bytes: fall through
-        if dims == 8 and _looks_like_avi(data):
-            try:
-                import numpy as np
-
-                upf, frames = _avi_frames(data)
-                raw = b"".join(frames)
-                if raw:
-                    arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                    n = len(arr)
-                    return [
-                        float(len(frames)),
-                        1_000_000 / upf,  # fps
-                        float(len(frames) * upf // 1000),
-                        int(arr.sum()) / n,
-                        math.sqrt(int((arr * arr).sum()) / n),
-                        int((arr > 127).sum()) / n,
-                        float(arr.min()),
-                        float(arr.max()),
-                    ]
-            except (ValueError, struct.error):
-                pass  # RIFF-prefixed non-AVI bytes: fall through
-        decoded = _image_channel_bytes(data) if dims == 8 else None
-        if decoded is not None:
-            w, h, ch, raw = decoded
-            n = len(raw)
-            if n:
-                import numpy as np
-
-                arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                ssum = int(arr.sum())
-                ssq = int((arr * arr).sum())
-                n_high = int((arr > 127).sum())
-                return [
-                    float(w),
-                    float(h),
-                    float(ch),
-                    ssum / n,
-                    math.sqrt(ssq / n),
-                    n_high / n,
-                    float(arr.min()),
-                    float(arr.max()),
-                ]
+        if dims == 8:
+            feats = _first_decode(data, _FEATURE_LADDER) or _image_features(data)
+            if feats is not None:
+                return feats
         _require_codec("torch")
         return [x / 255.0 for x in hashlib.md5(data).digest()[:dims]]
 
@@ -3872,29 +3735,24 @@ def synthesize_flac_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     decode output IS the input waveform). block_size=256 yields
     multi-frame streams; stereo ids cycle the channel-decorrelation
     assignments across frames."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
+    def one(rid: int) -> bytes:
+        sr = (8000, 16000, 22050)[rid % 3]
+        ch = 1 + rid % 2
+        total = (150 + (rid % 7) * 25) * ch
+        sam = tuple(
+            ((k * 7919 + rid * 104729) % 65536) - 32768 for k in range(total)
+        )
+        return encode_flac(sr, sam, n_channels=ch, block_size=256)
+
+    return id_kernel(df, id_col, one)
+
+
+def _fixture_mp3_frames(rid: int) -> bytes:
+    """The closed-form VBR frame stream of synthesize_mp3_payloads
+    (the ID3 fixtures append the same frames to their tag)."""
+    return encode_mp3_frames(
+        [(1 + (rid + i) % 14, rid % 3, (rid + i) % 2) for i in range(4 + rid % 9)]
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            sr = (8000, 16000, 22050)[rid % 3]
-            ch = 1 + rid % 2
-            total = (150 + (rid % 7) * 25) * ch
-            sam = tuple(
-                ((k * 7919 + rid * 104729) % 65536) - 32768 for k in range(total)
-            )
-            return encode_flac(sr, sam, n_channels=ch, block_size=256)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
 
 
 def synthesize_mp3_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -3903,24 +3761,7 @@ def synthesize_mp3_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     frame i at bitrate index 1 + (id + i) % 14 with padding (id + i) % 2
     — a VBR stream whose frame-size stepping the walker must get
     exactly right to land on every sync word."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_mp3_frames(
-                    [
-                        (1 + (rid + i) % 14, rid % 3, (rid + i) % 2)
-                        for i in range(4 + rid % 9)
-                    ]
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, _fixture_mp3_frames)
 
 
 def decode_audio(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -3943,29 +3784,17 @@ def decode_audio(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
+    # nullable Float64 rms: MP3 rows carry NULL rms (header walk yields
+    # timing, not samples), never NaN
+    columns = [("sample_rate", "int32"), ("n_samples", "int64"),
+               ("duration_ms", "int64"), ("sample_sum", "Int64"), ("rms", "Float64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> tuple[int, int, int, int | None, float | None]:
             data = bytes(b)
-            if _looks_like_wav(data):
-                try:
-                    return _decode_wav(data)
-                except (ValueError, struct.error, wave.Error, EOFError):
-                    pass  # RIFF-prefixed non-WAV bytes: fake path below
-            if _looks_like_aiff(data):
-                try:
-                    return _decode_aiff(data)
-                except (ValueError, struct.error):
-                    pass  # FORM/AIFF-prefixed junk: fake path below
-            if _looks_like_mp3(data):
-                try:
-                    return _decode_mp3(data)
-                except (ValueError, struct.error, IndexError):
-                    pass  # sync-prefixed non-MP3 bytes: fake path below
-            if _looks_like_flac(data):
-                try:
-                    return _decode_flac(data)
-                except (ValueError, struct.error, IndexError):
-                    pass  # fLaC-prefixed non-FLAC bytes: fake path below
+            decoded = _first_decode(data, _AUDIO_STATS_LADDER)
+            if decoded is not None:
+                return decoded
             _require_codec("soundfile")
             d = hashlib.md5(data).digest()
             sr = WAV_RATES[d[3] % len(WAV_RATES)]
@@ -3974,18 +3803,7 @@ def decode_audio(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             decoded = [one(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": pd.array([d[0] for d in decoded], dtype="int32"),
-                    "n_samples": pd.array([d[1] for d in decoded], dtype="int64"),
-                    "duration_ms": pd.array([d[2] for d in decoded], dtype="int64"),
-                    "sample_sum": pd.array([d[3] for d in decoded], dtype="Int64"),
-                    # nullable Float64: MP3 rows carry NULL rms (header
-                    # walk yields timing, not samples), never NaN
-                    "rms": pd.array([d[4] for d in decoded], dtype="Float64"),
-                }
-            )
+            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -4054,21 +3872,9 @@ def resize_images(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> bytes:
             data = bytes(b)
-            if _looks_like_bmp(data):
-                try:
-                    return _resize_bmp(data, width, height)
-                except (ValueError, struct.error):
-                    pass  # 'BM'-prefixed non-BMP bytes: fake path below
-            if _looks_like_png(data):
-                try:
-                    return _resize_png(data, width, height)
-                except (ValueError, struct.error, zlib.error):
-                    pass  # signature-prefixed non-PNG bytes: fake path
-            if _looks_like_gif(data):
-                try:
-                    return _resize_gif(data, width, height)
-                except (ValueError, struct.error, IndexError):
-                    pass  # signature-prefixed non-GIF bytes: fake path
+            resized = _first_decode(data, _RESIZE_LADDER, width, height)
+            if resized is not None:
+                return resized
             _require_codec("PIL")
             # Fake bytes = ASCII md5 hexdigest tiled to width·height —
             # reproducible as plain-string SQL in any engine:
@@ -4115,6 +3921,32 @@ def _decimate_aiff(data: bytes, factor: int) -> bytes:
     return encode_aiff_pcm16(sr // factor, list(samples[::factor]))
 
 
+def _resample_wav(data: bytes, factor: int) -> tuple[bytes, int, int]:
+    out = _decimate_wav(data, factor)
+    sr, n, _dur, _ssum, _rms = _decode_wav(out)
+    return out, sr, n
+
+
+def _resample_aiff(data: bytes, factor: int) -> tuple[bytes, int, int]:
+    out = _decimate_aiff(data, factor)
+    sr, n, _dur, _ssum, _rms = _decode_aiff(out)
+    return out, sr, n
+
+
+def _resample_flac(data: bytes, factor: int) -> tuple[bytes, int, int]:
+    """Decimate a frame-bearing FLAC stream in the integer sample
+    domain and re-encode it as FLAC."""
+    sr, _nf, n_ch, samples = _flac_samples(data)
+    if n_ch > 2:  # no lossless re-encode beyond the encoder's range
+        raise ValueError("flac: decimation supports <= 2 channels")
+    # decimate whole FRAMES (a bare samples[::factor] would interleave
+    # channels — code-review r5)
+    kept: list[int] = []
+    for f in range(0, len(samples) // n_ch, factor):
+        kept += samples[f * n_ch : (f + 1) * n_ch]
+    return encode_flac(sr // factor, kept, n_channels=n_ch), sr // factor, len(kept)
+
+
 def resample_audio(
     df: DataFrame, *, id_col: str = "doc_id", factor: int = 4
 ) -> DataFrame:
@@ -4135,40 +3967,14 @@ def resample_audio(
         ]
     )
 
+    columns = [("payload", None), ("sample_rate", "int32"), ("n_samples", "int64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> tuple[bytes, int, int]:
             data = bytes(b)
-            if _looks_like_wav(data):
-                try:
-                    out = _decimate_wav(data, factor)
-                    sr, n, _dur, _ssum, _rms = _decode_wav(out)
-                    return out, sr, n
-                except (ValueError, struct.error, wave.Error, EOFError):
-                    pass  # RIFF-prefixed non-WAV bytes: fake path below
-            if _looks_like_aiff(data):
-                try:
-                    out = _decimate_aiff(data, factor)
-                    sr, n, _dur, _ssum, _rms = _decode_aiff(out)
-                    return out, sr, n
-                except (ValueError, struct.error):
-                    pass  # FORM/AIFF-prefixed junk: fake path below
-            if _looks_like_flac(data):
-                try:
-                    sr, _nf, n_ch, samples = _flac_samples(data)
-                    if n_ch <= 2:  # the FLAC encoder's channel range
-                        # decimate whole FRAMES (a bare samples[::factor]
-                        # would interleave channels — code-review r5)
-                        kept: list[int] = []
-                        for f in range(0, len(samples) // n_ch, factor):
-                            kept += samples[f * n_ch : (f + 1) * n_ch]
-                        out = encode_flac(
-                            sr // factor, kept, n_channels=n_ch
-                        )
-                        return out, sr // factor, len(kept)
-                    # >2 channels: no lossless re-encode available here
-                    raise ValueError("flac: decimation supports <= 2 channels")
-                except (ValueError, struct.error, IndexError):
-                    pass  # fLaC-prefixed junk / metadata-only: fake path
+            resampled = _first_decode(data, _RESAMPLE_LADDER, factor)
+            if resampled is not None:
+                return resampled
             _require_codec("soundfile")
             d = hashlib.md5(data).digest()
             sr = WAV_RATES[d[3] % len(WAV_RATES)] // factor
@@ -4177,14 +3983,7 @@ def resample_audio(
 
         for pdf in batches:
             decoded = [one(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [d[0] for d in decoded],
-                    "sample_rate": pd.array([d[1] for d in decoded], dtype="int32"),
-                    "n_samples": pd.array([d[2] for d in decoded], dtype="int64"),
-                }
-            )
+            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -4283,29 +4082,16 @@ def synthesize_avi_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     3 + id % 6; frame i's bytes are the ASCII tile of 'doc{id}f{i}x'
     cut to width·height·3 — reproducible as plain-string SQL, so a SQL
     oracle can md5 the exact frame payloads."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 4 * (1 + rid % 3), 3 + rid % 4
+        nbytes = w * h * 3
+        frames = [
+            (f"doc{rid}f{i}x".encode() * nbytes)[:nbytes]
+            for i in range(3 + rid % 6)
+        ]
+        return encode_avi_dib(w, h, 500_000, frames)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            w, h = 4 * (1 + rid % 3), 3 + rid % 4
-            nbytes = w * h * 3
-            frames = [
-                (f"doc{rid}f{i}x".encode() * nbytes)[:nbytes]
-                for i in range(3 + rid % 6)
-            ]
-            return encode_avi_dib(w, h, 500_000, frames)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -4357,13 +4143,15 @@ def encode_avi_mjpeg(
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body
 
 
-def _avi_video_pixels(data: bytes, every_ms: int):
+def _avi_video_pixels(data: bytes, every_ms: int, keyframes_only: bool = False):
     """One RIFF walk capturing avih timing, the strf video format AND
     the movi frames, then per-SAMPLED-frame pixel decode. MJPG frames
     (or any frame carrying a JFIF signature) run the full entropy
     decode + IDCT + color conversion (_jpeg_pixels); uncompressed DIB
     frames sum raw channel bytes with the BMP stride rule. Returns
-    [(frame_idx, ts_ms, width, height, n_channels, pixel_sum)]."""
+    [(frame_idx, ts_ms, width, height, n_channels, pixel_sum,
+    pixel_sq)]. AVI/MJPEG frames are all sync frames, so
+    ``keyframes_only`` (the MP4 leg's sampling flag) changes nothing."""
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
     us_per_frame = None
@@ -4449,40 +4237,27 @@ def synthesize_mjpeg_avi_payloads(
     is exactly lossless for these frames and a SQL oracle recomputes
     every decoded pixel of every frame in closed form — while the wire
     bytes are a real MJPG AVI of real entropy-coded JFIF streams."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
+        variant = rid % 2
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
-            variant = rid % 2
+        def y_of(f: int):
+            return lambda x, y: (3 * rid + 11 * f + 5 * (x // 8) + 7 * (y // 8)) % 256
 
-            def y_of(f: int):
-                return lambda x, y: (3 * rid + 11 * f + 5 * (x // 8) + 7 * (y // 8)) % 256
-
-            frames = []
-            for f in range(2 + rid % 4):
-                if variant == 0:
-                    frames.append(encode_jpeg(w, h, y_of(f)))
-                else:
-                    frames.append(
-                        encode_jpeg(
-                            w, h, y_of(f), color=True,
-                            cb=126 + rid % 5, cr=125 + rid % 7,
-                        )
+        frames = []
+        for f in range(2 + rid % 4):
+            if variant == 0:
+                frames.append(encode_jpeg(w, h, y_of(f)))
+            else:
+                frames.append(
+                    encode_jpeg(
+                        w, h, y_of(f), color=True,
+                        cb=126 + rid % 5, cr=125 + rid % 7,
                     )
-            return encode_avi_mjpeg(w, h, 250_000, frames)
+                )
+        return encode_avi_mjpeg(w, h, 250_000, frames)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
-            )
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def decode_video_pixels(
@@ -4524,19 +4299,16 @@ def decode_video_pixels(
         fields.append(T.StructField("pixel_sq", T.LongType()))
     schema = T.StructType(fields)
 
+    columns = [("frame_idx", "int32"), ("ts_ms", "int64"), ("width", "int32"),
+               ("height", "int32"), ("n_channels", "int32"), ("pixel_sum", "Int64")]
+    if include_sq:
+        columns.append(("pixel_sq", "Int64"))
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def rows(data: bytes):
-            if _looks_like_avi(data):
-                try:
-                    return _avi_video_pixels(data, every_ms)
-                except (ValueError, struct.error, IndexError):
-                    pass  # RIFF-prefixed non-AVI / foreign codec: fake
-            if _looks_like_mp4(data):
-                try:
-                    return _mp4_video_pixels(data, every_ms,
-                                             keyframes_only=keyframes_only)
-                except (ValueError, struct.error, IndexError):
-                    pass  # ftyp-prefixed non-BMFF / foreign codec: fake
+            decoded = _first_decode(data, _VIDEO_PIXEL_LADDER, every_ms, keyframes_only)
+            if decoded is not None:
+                return decoded
             _require_codec("av")
             h = hashlib.md5(data).digest()
             return [
@@ -4547,32 +4319,8 @@ def decode_video_pixels(
                 for i in range(1 + len(data) % 5)
             ]
 
-        cols = ["frame_idx", "ts_ms", "width", "height", "n_channels", "pixel_sum"]
-        if include_sq:
-            cols.append("pixel_sq")
         for pdf in batches:
-            out: dict[str, list] = {c: [] for c in [id_col] + cols}
-            for rid, b in zip(pdf[id_col], pdf["payload"]):
-                for rec in rows(bytes(b)):
-                    out[id_col].append(rid)
-                    for c, v in zip(cols, rec if include_sq else rec[:6]):
-                        out[c].append(v)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "frame_idx": pd.array(out["frame_idx"], dtype="int32"),
-                    "ts_ms": pd.array(out["ts_ms"], dtype="int64"),
-                    "width": pd.array(out["width"], dtype="int32"),
-                    "height": pd.array(out["height"], dtype="int32"),
-                    "n_channels": pd.array(out["n_channels"], dtype="int32"),
-                    "pixel_sum": pd.array(out["pixel_sum"], dtype="Int64"),
-                    **(
-                        {"pixel_sq": pd.array(out["pixel_sq"], dtype="Int64")}
-                        if include_sq
-                        else {}
-                    ),
-                }
-            )
+            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -5038,51 +4786,6 @@ def _mp4_sync_samples(data: bytes, n: int) -> list[bool]:
                 raise ValueError("mp4: stss sample number out of range")
             flags[num - 1] = True
         return flags
-    raise ValueError("mp4: no video trak")
-
-
-def _mp4_composition_offsets(data: bytes, n: int) -> list[int]:
-    """Per-sample composition offsets (CT - DT, timescale units) from
-    the first video trak's ctts box: signed for version 1, unsigned
-    for version 0; all zeros when no ctts is present (decode order ==
-    display order).  Run-length entries are expanded and validated
-    against the sample count."""
-    moov = _mp4_child(data, 0, len(data), b"moov")
-    if moov is None:
-        raise ValueError("mp4: missing moov")
-    for fc, tb, te in _mp4_walk(data, *moov):
-        if fc != b"trak":
-            continue
-        mdia = _mp4_child(data, tb, te, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _mp4_child(data, *mdia, b"hdlr")
-        if hdlr is None or data[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        minf = _mp4_child(data, *mdia, b"minf")
-        stbl = _mp4_child(data, *minf, b"stbl") if minf else None
-        if stbl is None:
-            raise ValueError("mp4: missing stbl")
-        ctts = _mp4_child(data, *stbl, b"ctts")
-        if ctts is None:
-            return [0] * n
-        b, e = ctts
-        version = data[b]
-        (count,) = struct.unpack_from(">I", data, b + 4)
-        if b + 8 + 8 * count > e:
-            raise ValueError("mp4: ctts overruns its box")
-        out: list[int] = []
-        for i in range(count):
-            cnt, off = struct.unpack_from(
-                ">Ii" if version == 1 else ">II", data, b + 8 + 8 * i)
-            if cnt > n:
-                raise ValueError("mp4: ctts run exceeds sample count")
-            out.extend([off] * cnt)
-            if len(out) > n:
-                raise ValueError("mp4: ctts entries exceed sample count")
-        if len(out) != n:
-            raise ValueError("mp4: ctts entries do not cover all samples")
-        return out
     raise ValueError("mp4: no video trak")
 
 
@@ -6034,26 +5737,15 @@ def synthesize_mp4_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFra
     sampled frame's md5, while the bytes live behind a real
     stts/stsc/stsz/stco resolution with varying per-sample sizes and
     two-sample chunks."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def frame_bytes(rid: int, i: int) -> bytes:
         size = 24 + 8 * (i % 3)
         pat = f"doc{rid}f{i}x".encode()
         return (pat * (size // len(pat) + 1))[:size]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_mp4_frames(
-                    [frame_bytes(rid, i) for i in range(3 + rid % 6)]
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        return encode_mp4_frames([frame_bytes(rid, i) for i in range(3 + rid % 6)])
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def sample_video_frames(
@@ -6074,23 +5766,13 @@ def sample_video_frames(
         ]
     )
 
+    columns = [("frame_idx", None), ("ts_ms", None), ("frame_md5", None)]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def rows(data: bytes):
-            if _looks_like_avi(data):
-                try:
-                    return _decode_avi_frames(data, every_ms)
-                except (ValueError, struct.error, IndexError):
-                    pass  # RIFF-prefixed non-AVI bytes: fake path below
-            if _looks_like_mp4(data):
-                try:
-                    return _decode_mp4_frames(data, every_ms)
-                except (ValueError, struct.error, IndexError):
-                    pass  # ftyp-prefixed non-BMFF bytes: fake path below
-            if _looks_like_gif(data):
-                try:
-                    return _decode_gif_frames(data, every_ms)
-                except (ValueError, struct.error, IndexError):
-                    pass  # partial-frame/interlaced animations: fake path
+            decoded = _first_decode(data, _FRAME_SAMPLE_LADDER, every_ms)
+            if decoded is not None:
+                return decoded
             _require_codec("av")
             # Fake frame hash chains through the ASCII content hash so
             # it stays reproducible as plain-string SQL:
@@ -6102,14 +5784,7 @@ def sample_video_frames(
             ]
 
         for pdf in batches:
-            out: dict[str, list] = {id_col: [], "frame_idx": [], "ts_ms": [], "frame_md5": []}
-            for rid, b in zip(pdf[id_col], pdf["payload"]):
-                for i, ts, dig in rows(bytes(b)):
-                    out[id_col].append(rid)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(ts)
-                    out["frame_md5"].append(dig)
-            yield pd.DataFrame(out)
+            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -6206,6 +5881,9 @@ def image_dhash(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         ]
     )
 
+    columns = [("width", "Int32"), ("height", "Int32"), ("hash_hi", "Int64"),
+               ("hash_lo", "Int64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> tuple[int | None, int | None, int | None, int | None]:
             dec = _image_channel_bytes(bytes(b))
@@ -6219,15 +5897,7 @@ def image_dhash(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             decoded = [one(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array([d[0] for d in decoded], dtype="Int32"),
-                    "height": pd.array([d[1] for d in decoded], dtype="Int32"),
-                    "hash_hi": pd.array([d[2] for d in decoded], dtype="Int64"),
-                    "hash_lo": pd.array([d[3] for d in decoded], dtype="Int64"),
-                }
-            )
+            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -6265,10 +5935,6 @@ def synthesize_neardup_png_payloads(
     structure over multi-100k-id ranges that inflates accidental
     near-pairs, so the curve would measure the fixture, not the
     join; md5 cells make cross-pair collisions birthday-rare."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def _val(rid: int, bx: int, by: int) -> int:
         k = rid // 2
         if random_pattern:
@@ -6282,19 +5948,10 @@ def synthesize_neardup_png_payloads(
             v = (v + 97) % 251
         return v
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    18,
-                    16,
-                    lambda x, y, c, rid=rid: _val(rid, x // 2, y // 2),
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        return encode_png(18, 16, lambda x, y, c: _val(rid, x // 2, y // 2))
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -6303,6 +5960,19 @@ def synthesize_neardup_png_payloads(
 # pipeline runs before transcription. Frame energies are exact integer
 # sums of squares, so the whole segmentation is engine-reproducible.
 # ---------------------------------------------------------------------------
+
+
+def _vad_frames(data: bytes, frame_size: int, energy_threshold: int) -> list:
+    """(frame_idx, energy, active) per FULL frame of the decoded PCM."""
+    _sr, n_frames, n_ch, samples = _pcm_samples(data)
+    per = frame_size * n_ch
+    out = []
+    for t in range(n_frames // frame_size):
+        e = 0
+        for s in samples[t * per : (t + 1) * per]:
+            e += s * s
+        out.append((t, e, 1 if e > energy_threshold else 0))
+    return out
 
 
 def audio_vad_frames(
@@ -6334,21 +6004,13 @@ def audio_vad_frames(
         ]
     )
 
+    columns = [("frame_idx", None), ("energy", None), ("active", None)]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def rows(data: bytes):
-            if _looks_like_wav(data) or _looks_like_aiff(data) or _looks_like_flac(data):
-                try:
-                    _sr, n_frames, n_ch, samples = _pcm_samples(data)
-                    per = frame_size * n_ch
-                    out = []
-                    for t in range(n_frames // frame_size):
-                        e = 0
-                        for s in samples[t * per : (t + 1) * per]:
-                            e += s * s
-                        out.append((t, e, 1 if e > energy_threshold else 0))
-                    return out
-                except (ValueError, struct.error, wave.Error, EOFError):
-                    pass  # signature-prefixed junk: fake path below
+            decoded = _first_decode(data, _VAD_LADDER, frame_size, energy_threshold)
+            if decoded is not None:
+                return decoded
             _require_codec("librosa")
             d = hashlib.md5(data).digest()
             return [
@@ -6357,14 +6019,7 @@ def audio_vad_frames(
             ]
 
         for pdf in batches:
-            out: dict[str, list] = {id_col: [], "frame_idx": [], "energy": [], "active": []}
-            for rid, b in zip(pdf[id_col], pdf["payload"]):
-                for t, e, a in rows(bytes(b)):
-                    out[id_col].append(rid)
-                    out["frame_idx"].append(t)
-                    out["energy"].append(e)
-                    out["active"].append(a)
-            yield pd.DataFrame(out)
+            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -6408,28 +6063,19 @@ def synthesize_vad_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Dat
     islands of varying lengths exist — else sample
     i = ((id*7919 + i*104729) % 65536) − 32768. A SQL oracle
     recomputes every frame energy from the same formulas (no bytes)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        samples = []
+        for f in range(8 + rid % 9):
+            if (f * f + f + rid) % 5 < 2:
+                samples.extend([0] * 160)
+            else:
+                samples.extend(
+                    ((rid * 7919 + i * 104729) % 65536) - 32768
+                    for i in range(f * 160, (f + 1) * 160)
+                )
+        return encode_wav_pcm16(WAV_RATES[rid % 5], samples)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                nblk = 8 + rid % 9
-                samples = []
-                for f in range(nblk):
-                    if (f * f + f + rid) % 5 < 2:
-                        samples.extend([0] * 160)
-                    else:
-                        samples.extend(
-                            ((rid * 7919 + i * 104729) % 65536) - 32768
-                            for i in range(f * 160, (f + 1) * 160)
-                        )
-                payloads.append(encode_wav_pcm16(WAV_RATES[rid % 5], samples))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -6624,28 +6270,17 @@ def synthesize_adpcm_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") -> D
     value = ((id·37 + b·101) mod 4001) − 2000. The state machine under
     NONZERO nibbles is pinned against stdlib audioop in pytest — this
     fixture grades the container/framing layer the driver can check."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
     spb = (12 - 4) * 2 + 1  # 17
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                samples = [
-                    ((rid * 37 + b * 101) % 4001) - 2000
-                    for b in range(4 + rid % 5)
-                    for _ in range(spb)
-                ]
-                payloads.append(
-                    encode_wav_ima_adpcm(
-                        WAV_RATES[rid % 5], samples, block_align=12
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        samples = [
+            ((rid * 37 + b * 101) % 4001) - 2000
+            for b in range(4 + rid % 5)
+            for _ in range(spb)
+        ]
+        return encode_wav_ima_adpcm(WAV_RATES[rid % 5], samples, block_align=12)
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -6727,23 +6362,14 @@ def synthesize_g711_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Da
     WAV_RATES[id % 5]; n = 80 + id % 120 bytes;
     byte[i] = (id·13 + i·7) mod 256 — all 256 code points appear
     across the corpus, exercising every branch of the expansion."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_wav_g711(
+            WAV_RATES[rid % 5],
+            bytes((rid * 13 + i * 7) % 256 for i in range(80 + rid % 120)),
+            law="mulaw" if rid % 2 == 0 else "alaw",
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav_g711(
-                    WAV_RATES[rid % 5],
-                    bytes((rid * 13 + i * 7) % 256 for i in range(80 + rid % 120)),
-                    law="mulaw" if rid % 2 == 0 else "alaw",
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -6958,6 +6584,23 @@ def _jpeg_exif(data: bytes) -> dict[str, object]:
     raise ValueError("jpeg: no Exif APP1 segment")
 
 
+def _jpeg_dims_meta(data: bytes) -> dict[str, object]:
+    """Metadata of a JPEG without EXIF: dims only."""
+    w, h = _jpeg_dims(data)
+    return {"width": w, "height": h}
+
+
+def _tiff_meta(data: bytes) -> dict[str, object]:
+    """EXIF fields of a plain TIFF, dims from the baseline IFD tags."""
+    meta = _parse_exif_tiff(data)
+    bo = ">" if data[:2] == b"MM" else "<"
+    (ifd0,) = struct.unpack_from(f"{bo}I", data, 4)
+    tags = _exif_ifd_tags(data, bo, ifd0)
+    meta["width"] = tags.get(256)
+    meta["height"] = tags.get(257)
+    return meta
+
+
 def extract_image_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """payload → typed EXIF/image metadata row: (id, width, height,
     orientation, make, model, datetime_str, iso, exposure_num,
@@ -6984,53 +6627,38 @@ def extract_image_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
             T.StructField("exposure_den", T.LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields[1:]]
+    columns = [
+        ("width", "Int32"), ("height", "Int32"), ("orientation", "Int32"),
+        ("make", None), ("model", None), ("datetime_str", None), ("iso", "Int32"),
+        ("exposure_num", "Int64"), ("exposure_den", "Int64"),
+    ]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> dict:
-            data = bytes(b)
-            empty = {c: None for c in cols}
-            if _looks_like_jpeg(data):
-                try:
-                    return {**empty, **_jpeg_exif(data)}
-                except (ValueError, struct.error):
-                    try:  # JPEG without EXIF: dims only
-                        w, h = _jpeg_dims(data)
-                        return {**empty, "width": w, "height": h}
-                    except (ValueError, struct.error):
-                        return empty
-            if _looks_like_tiff(data):
-                try:
-                    meta = _parse_exif_tiff(data)
-                    bo = ">" if data[:2] == b"MM" else "<"
-                    (ifd0,) = struct.unpack_from(f"{bo}I", data, 4)
-                    tags = _exif_ifd_tags(data, bo, ifd0)
-                    meta["width"] = tags.get(256)
-                    meta["height"] = tags.get(257)
-                    meta.pop("px_dim", None), meta.pop("py_dim", None)
-                    return {**empty, **meta}
-                except (ValueError, struct.error):
-                    return empty
-            if _looks_like_webp(data):
-                try:
-                    return {**empty, **_webp_metadata(data)}
-                except (ValueError, struct.error):
-                    return empty
-            return empty
+        def one(b) -> tuple:
+            meta = _first_decode(bytes(b), _IMAGE_META_LADDER) or {}
+            return tuple(meta.get(c) for c, _dtype in columns)
 
         for pdf in batches:
             rows = [one(b) for b in pdf["payload"]]
-            out = {id_col: pdf[id_col]}
-            dtypes = {
-                "width": "Int32", "height": "Int32", "orientation": "Int32",
-                "iso": "Int32", "exposure_num": "Int64", "exposure_den": "Int64",
-            }
-            for c in cols:
-                vals = [r.get(c) for r in rows]
-                out[c] = pd.array(vals, dtype=dtypes[c]) if c in dtypes else vals
-            yield pd.DataFrame(out)
+            yield _typed_frame(id_col, pdf[id_col], rows, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
+
+
+def _fixture_exif_app1(rid: int, w: int, h: int) -> bytes:
+    """The closed-form Exif APP1 of synthesize_exif_jpeg_payloads (the
+    WebP fixtures carry its TIFF structure, past the 6-byte header)."""
+    return encode_exif_app1(
+        make=f"cam-{rid % 7}",
+        model=f"mx{rid % 5}",
+        datetime_str=f"2021:0{1 + rid % 9}:1{rid % 10} 0{rid % 10}:30:0{rid % 7}",
+        orientation=1 + rid % 8,
+        iso=100 * (1 + rid % 16),
+        exposure=(1 + rid % 3, 30 + rid % 60),
+        px_dim=w,
+        py_dim=h,
+        big_endian=bool(rid % 2),
+    )
 
 
 def synthesize_exif_jpeg_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -7042,35 +6670,12 @@ def synthesize_exif_jpeg_payloads(df: DataFrame, *, id_col: str = "doc_id") -> D
     exposure (1+id%3)/(30+id%60), datetime
     '2021:0'||(1+id%9)||':1'||id%10||' 0'||id%10||':30:0'||id%7 —
     so a SQL oracle rebuilds every value."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
+        jpeg = encode_jpeg(w, h, lambda x, y: (rid + 2 * x + 3 * y) % 256)
+        return insert_jpeg_app1(jpeg, _fixture_exif_app1(rid, w, h))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
-                jpeg = encode_jpeg(
-                    w, h, lambda x, y, rid=rid: (rid + 2 * x + 3 * y) % 256
-                )
-                app1 = encode_exif_app1(
-                    make=f"cam-{rid % 7}",
-                    model=f"mx{rid % 5}",
-                    datetime_str=(
-                        f"2021:0{1 + rid % 9}:1{rid % 10} 0{rid % 10}:30:0{rid % 7}"
-                    ),
-                    orientation=1 + rid % 8,
-                    iso=100 * (1 + rid % 16),
-                    exposure=(1 + rid % 3, 30 + rid % 60),
-                    px_dim=w,
-                    py_dim=h,
-                    big_endian=bool(rid % 2),
-                )
-                payloads.append(insert_jpeg_app1(jpeg, app1))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -7166,6 +6771,9 @@ def extract_audio_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
         ]
     )
 
+    columns = [("title", None), ("artist", None), ("album", None), ("track", None),
+               ("tag_bytes", "Int64"), ("n_frames", "Int32"), ("duration_ms", "Int64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(b) -> tuple:
             data = bytes(b)
@@ -7191,18 +6799,7 @@ def extract_audio_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
 
         for pdf in batches:
             rows = [one(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "title": [r[0] for r in rows],
-                    "artist": [r[1] for r in rows],
-                    "album": [r[2] for r in rows],
-                    "track": [r[3] for r in rows],
-                    "tag_bytes": pd.array([r[4] for r in rows], dtype="Int64"),
-                    "n_frames": pd.array([r[5] for r in rows], dtype="Int32"),
-                    "duration_ms": pd.array([r[6] for r in rows], dtype="Int64"),
-                }
-            )
+            yield _typed_frame(id_col, pdf[id_col], rows, columns)
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
@@ -7212,32 +6809,18 @@ def synthesize_id3_mp3_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Dat
     closed forms of id: title 'track-'||id%97, artist 'artist-'||id%13,
     album 'album-'||id%7, track (1+id%20)||'/20'; frames as
     synthesize_mp3_payloads (VBR stepping)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        tag = encode_id3v2(
+            {
+                "TIT2": f"track-{rid % 97}",
+                "TPE1": f"artist-{rid % 13}",
+                "TALB": f"album-{rid % 7}",
+                "TRCK": f"{1 + rid % 20}/20",
+            }
+        )
+        return tag + _fixture_mp3_frames(rid)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                tag = encode_id3v2(
-                    {
-                        "TIT2": f"track-{rid % 97}",
-                        "TPE1": f"artist-{rid % 13}",
-                        "TALB": f"album-{rid % 7}",
-                        "TRCK": f"{1 + rid % 20}/20",
-                    }
-                )
-                frames = encode_mp3_frames(
-                    [
-                        (1 + (rid + i) % 14, rid % 3, (rid + i) % 2)
-                        for i in range(4 + rid % 9)
-                    ]
-                )
-                payloads.append(tag + frames)
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -7345,36 +6928,13 @@ def synthesize_webp_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     header, odd ids a VP8 keyframe header; every id carries a VP8X +
     EXIF chunk whose TIFF fields mirror synthesize_exif_jpeg_payloads'
     closed forms (byte order alternating with id % 2)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 10 + rid % 500, 8 + rid % 300
+        # WebP EXIF chunks carry the raw TIFF structure
+        exif_tiff = _fixture_exif_app1(rid, w, h)[6:]
+        return encode_webp_container(w, h, lossless=(rid % 2 == 0), exif=exif_tiff)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                w, h = 10 + rid % 500, 8 + rid % 300
-                exif_tiff = encode_exif_app1(
-                    make=f"cam-{rid % 7}",
-                    model=f"mx{rid % 5}",
-                    datetime_str=(
-                        f"2021:0{1 + rid % 9}:1{rid % 10} 0{rid % 10}:30:0{rid % 7}"
-                    ),
-                    orientation=1 + rid % 8,
-                    iso=100 * (1 + rid % 16),
-                    exposure=(1 + rid % 3, 30 + rid % 60),
-                    px_dim=w,
-                    py_dim=h,
-                    big_endian=bool(rid % 2),
-                )[6:]  # WebP EXIF chunks carry the raw TIFF structure
-                payloads.append(
-                    encode_webp_container(
-                        w, h, lossless=(rid % 2 == 0), exif=exif_tiff
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def audio_energy_envelope(
@@ -7426,35 +6986,27 @@ def synthesize_neardup_wav_payloads(df: DataFrame, *, id_col: str = "doc_id") ->
     differ in one frame (near-dup), while different k draw different
     schedules AND different samples (far pairs). Closed form end to
     end for the SQL oracle."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                k = rid // 2
-                nblk = 44 + k % 9
-                flip = k % nblk
-                samples = []
-                for f in range(nblk):
-                    silent = (f * f + 3 * f + k) % 7 < 2
-                    if rid % 2 == 1 and f == flip:
-                        silent = True
-                    if silent:
-                        samples.extend([0] * 160)
-                    else:
-                        samples.extend(
-                            ((k * 7919 + i * 104729) % 65536) - 32768
-                            for i in range(f * 160, (f + 1) * 160)
-                        )
-                payloads.append(encode_wav_pcm16(WAV_RATES[k % 5], samples))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        k = rid // 2
+        nblk = 44 + k % 9
+        flip = k % nblk
+        samples = []
+        for f in range(nblk):
+            silent = (f * f + 3 * f + k) % 7 < 2
+            if rid % 2 == 1 and f == flip:
+                silent = True
+            if silent:
+                samples.extend([0] * 160)
+            else:
+                samples.extend(
+                    ((k * 7919 + i * 104729) % 65536) - 32768
+                    for i in range(f * 160, (f + 1) * 160)
+                )
+        return encode_wav_pcm16(WAV_RATES[k % 5], samples)
 
     # Light kernel feeding the shuffle-heavy jaccard chain: price the
     # width by rows (r10; full fan-out was the r9 0.37x regression).
-    return _spread_ids(df, id_col, rows_per_task=64).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one, rows_per_task=64)
 
 
 def synthesize_neardup_avi_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -7467,32 +7019,19 @@ def synthesize_neardup_avi_payloads(df: DataFrame, *, id_col: str = "doc_id") ->
     sets overlap in n−1 of n+1 distinct frames (Jaccard ≥ 7/9 at n=8);
     different k share nothing. All tiles are plain-string SQL, so the
     oracle rebuilds every frame md5."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            k = rid // 2
-            n = 8 + k % 5
-            nbytes = 8 * 4 * 3
-            frames = []
-            for j in range(n):
-                seed = f"k{k}alt" if (rid % 2 == 1 and j == k % n) else f"k{k}f{j}x"
-                frames.append((seed.encode() * nbytes)[:nbytes])
-            return encode_avi_dib(8, 4, 1_000, frames)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
-            )
+    def one(rid: int) -> bytes:
+        k = rid // 2
+        n = 8 + k % 5
+        nbytes = 8 * 4 * 3
+        frames = []
+        for j in range(n):
+            seed = f"k{k}alt" if (rid % 2 == 1 and j == k % n) else f"k{k}f{j}x"
+            frames.append((seed.encode() * nbytes)[:nbytes])
+        return encode_avi_dib(8, 4, 1_000, frames)
 
     # Light kernel feeding an inverted-index join: price the width by
     # rows (r10).
-    return _spread_ids(df, id_col, rows_per_task=64).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one, rows_per_task=64)
 
 
 def synthesize_mjpeg_mp4_payloads(
@@ -7504,31 +7043,18 @@ def synthesize_mjpeg_mp4_payloads(
     w = 8·(1 + id % 3), h = 8·(1 + id % 2), frame f's luma per-block
     constant y = (3·id + 11·f + 5·bx + 7·by) mod 256 — lossless DC
     round trip, closed-form oracle."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
-            frames = [
-                encode_jpeg(
-                    w, h,
-                    lambda x, y, f=f: (3 * rid + 11 * f + 5 * (x // 8) + 7 * (y // 8)) % 256,
-                )
-                for f in range(2 + rid % 4)
-            ]
-            return encode_mp4_frames(frames, frame_duration_ms=500, codec="jpeg")
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
+    def one(rid: int) -> bytes:
+        w, h = 8 * (1 + rid % 3), 8 * (1 + rid % 2)
+        frames = [
+            encode_jpeg(
+                w, h,
+                lambda x, y, f=f: (3 * rid + 11 * f + 5 * (x // 8) + 7 * (y // 8)) % 256,
             )
+            for f in range(2 + rid % 4)
+        ]
+        return encode_mp4_frames(frames, frame_duration_ms=500, codec="jpeg")
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_neardup_mjpeg_payloads(
@@ -7545,38 +7071,25 @@ def synthesize_neardup_mjpeg_payloads(
     fingerprints therefore share NOTHING across any pair while pixel
     fingerprints overlap in nf−1 of nf+1 (Jaccard ≥ 4/6 > 6/10) — the
     fixture that separates the two tiers."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            k = rid // 2
-            nf = 5 + k % 4
-            w, h = 8 * (1 + k % 3), 8 * (1 + k % 2)
-            enc = encode_jpeg_progressive if rid % 2 else encode_jpeg
-            frames = []
-            for f in range(nf):
-                bump = 17 if (rid % 2 == 1 and f == k % nf) else 0
-                frames.append(
-                    enc(
-                        w, h,
-                        lambda x, y, f=f, bump=bump: (
-                            3 * k + 11 * f + bump + 5 * (x // 8) + 7 * (y // 8)
-                        ) % 256,
-                    )
+    def one(rid: int) -> bytes:
+        k = rid // 2
+        nf = 5 + k % 4
+        w, h = 8 * (1 + k % 3), 8 * (1 + k % 2)
+        enc = encode_jpeg_progressive if rid % 2 else encode_jpeg
+        frames = []
+        for f in range(nf):
+            bump = 17 if (rid % 2 == 1 and f == k % nf) else 0
+            frames.append(
+                enc(
+                    w, h,
+                    lambda x, y, f=f, bump=bump: (
+                        3 * k + 11 * f + bump + 5 * (x // 8) + 7 * (y // 8)
+                    ) % 256,
                 )
-            return encode_avi_mjpeg(w, h, 250_000, frames)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
             )
+        return encode_avi_mjpeg(w, h, 250_000, frames)
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def video_neardup_pairs(
@@ -8277,38 +7790,25 @@ def synthesize_webp_lossless_payloads(
     plain literals, SUBTRACT_GREEN transform, distance-1 run backrefs —
     while the decoded pixels are identical (lossless), so one SQL
     oracle grades all three wire variants."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 8 + rid % 9, 6 + rid % 7
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(rid: int) -> bytes:
-            w, h = 8 + rid % 9, 6 + rid % 7
-
-            def pix(x: int, y: int):
-                bx, by = x // 4, y // 2
-                return (
-                    (3 * rid + 5 * bx + 7 * by) % 256,
-                    (11 * rid + 3 * bx + 13 * by) % 256,
-                    (7 * rid + 9 * bx + by) % 256,
-                )
-
-            variant = rid % 3
-            return encode_webp_lossless(
-                w, h, pix,
-                subtract_green=(variant == 1),
-                use_runs=(variant == 2),
+        def pix(x: int, y: int):
+            bx, by = x // 4, y // 2
+            return (
+                (3 * rid + 5 * bx + 7 * by) % 256,
+                (11 * rid + 3 * bx + 13 * by) % 256,
+                (7 * rid + 9 * bx + by) % 256,
             )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(int(v)) for v in pdf[id_col]],
-                }
-            )
+        variant = rid % 3
+        return encode_webp_lossless(
+            w, h, pix,
+            subtract_green=(variant == 1),
+            use_runs=(variant == 2),
+        )
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 # per-qp step coefficients for the deblocked AVC leg: regimes hit the
@@ -8367,10 +7867,6 @@ def synthesize_avc_mp4_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Dat
     ids 490-499 (r7c) are weighted-prediction GOPs: an explicit-WP
     all-skip P anchor and two implicit-weighted B pictures
     (h264_gop_wp_expected)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def frames_of(rid: int) -> list[bytes]:
         if rid >= 490:
             # r7c weighted-prediction leg: IDR + explicit-WP all-skip
@@ -8547,19 +8043,12 @@ def synthesize_avc_mp4_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Dat
             return _B_CTTS
         return None
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_mp4_frames(
-                    frames_of(rid),
-                    codec="avc1",
-                    composition_offsets=ctts_of(rid),
-                )
-                for rid in (int(v) for v in pdf[id_col])
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        return encode_mp4_frames(
+            frames_of(rid), codec="avc1", composition_offsets=ctts_of(rid)
+        )
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def _hevc_split_aus(stream: bytes) -> list[bytes]:
@@ -8592,10 +8081,6 @@ def synthesize_hevc_mp4_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Da
     battery-budget shape.  The wire convention is arbitrated by libde265 in
     tests/test_hevc_codec.py; the container walk is the same
     stts/stsc/stsz/stco resolution every MP4 fixture uses."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def frame_planes(rid: int, fi: int, w: int, h: int):
         import numpy as np
 
@@ -8616,74 +8101,67 @@ def synthesize_hevc_mp4_payloads(df: DataFrame, *, id_col: str = "doc_id") -> Da
         cr = np.full((h // 2, w // 2), cv, np.uint8)
         return y.tobytes(), cb.tobytes(), cr.tobytes()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def one(rid: int) -> bytes:
         from .hevc import encode_hevc_gop_dc, encode_hevc_iframe_dc
 
-        for pdf in batches:
-            payloads = []
-            for v in pdf[id_col]:
-                rid = int(v)
-                w = 32 + 16 * (rid % 3)
-                h = 32
-                if rid >= 220:
-                    # r8 IBP leg: IRAP DC + skip-P + residual-P + an
-                    # all-skip B between the anchors; samples sit in
-                    # DECODE order with a signed ctts for the reorder.
-                    # ids 230-239 re-carve the B's WIRE onto explicit
-                    # weighted prediction with an IDENTITY table —
-                    # §8.5.4.2.3.3 reduces exactly to the default bi
-                    # average, so the oracle grades it unchanged
-                    from .hevc import (encode_hevc_gop_ibp_dc,
-                                       encode_hevc_gop_ibp_dc_wp)
+        w = 32 + 16 * (rid % 3)
+        h = 32
+        if rid >= 220:
+            # r8 IBP leg: IRAP DC + skip-P + residual-P + an
+            # all-skip B between the anchors; samples sit in
+            # DECODE order with a signed ctts for the reorder.
+            # ids 230-239 re-carve the B's WIRE onto explicit
+            # weighted prediction with an IDENTITY table —
+            # §8.5.4.2.3.3 reduces exactly to the default bi
+            # average, so the oracle grades it unchanged
+            from .hevc import encode_hevc_gop_ibp_dc, encode_hevc_gop_ibp_dc_wp
 
-                    k = rid - 220
-                    builder = (encode_hevc_gop_ibp_dc_wp if rid >= 230
-                               else encode_hevc_gop_ibp_dc)
-                    gop = builder(
-                        w, h, (22, 27, 32, 37)[k % 4],
-                        1 + k % 25, 1 + k % 7)
-                    payloads.append(encode_mp4_frames(
-                        _hevc_split_aus(gop), codec="hvc1",
-                        composition_offsets=[0, 0, 500, -500]))
-                    continue
-                if rid >= 200:
-                    # r8 P-GOP leg: IRAP DC + all-skip P + DC-residual
-                    # P through the inter tier (encode_hevc_gop_dc).
-                    # ids 210-219 re-carve the middle picture's WIRE
-                    # onto the partition tier (every §9.3.3.7 shape,
-                    # zero-mvd AMVP — an exact copy, so the closed
-                    # forms and the oracle are unchanged; CLAUDE.md r8
-                    # lesson 7) over the min-CB-8/AMP fixture SPS
-                    k = rid - 200
-                    if rid >= 210:
-                        from .hevc import encode_hevc_gop_dc_parts
+            k = rid - 220
+            builder = (encode_hevc_gop_ibp_dc_wp if rid >= 230
+                       else encode_hevc_gop_ibp_dc)
+            gop = builder(
+                w, h, (22, 27, 32, 37)[k % 4],
+                1 + k % 25, 1 + k % 7)
+            return encode_mp4_frames(
+                _hevc_split_aus(gop), codec="hvc1",
+                composition_offsets=[0, 0, 500, -500])
+        if rid >= 200:
+            # r8 P-GOP leg: IRAP DC + all-skip P + DC-residual
+            # P through the inter tier (encode_hevc_gop_dc).
+            # ids 210-219 re-carve the middle picture's WIRE
+            # onto the partition tier (every §9.3.3.7 shape,
+            # zero-mvd AMVP — an exact copy, so the closed
+            # forms and the oracle are unchanged; CLAUDE.md r8
+            # lesson 7) over the min-CB-8/AMP fixture SPS
+            k = rid - 200
+            if rid >= 210:
+                from .hevc import encode_hevc_gop_dc_parts
 
-                        gop = encode_hevc_gop_dc_parts(
-                            w, h, (22, 27, 32, 37)[k % 4],
-                            1 + k % 25, 1 + k % 7, script_off=k)
-                    else:
-                        gop = encode_hevc_gop_dc(
-                            w, h, (22, 27, 32, 37)[k % 4],
-                            1 + k % 25, 1 + k % 7)
-                    # split the Annex-B GOP into per-picture samples
-                    frames = _hevc_split_aus(gop)
-                elif rid >= 120:
-                    # lossy DC leg (ids 120-199): a single positive DC
-                    # coefficient at one of four qps runs the REAL
-                    # §8.6.3 dequant + 16x16 DCT under the hash gate;
-                    # oracle mirrors hevc_dc_expected's integer form
-                    frames = [encode_hevc_iframe_dc(
-                        w, h, (22, 27, 32, 37)[rid % 4], 1 + rid % 25)]
-                else:
-                    frames = [
-                        encode_hevc_iframe_bypass(
-                            w, h, *frame_planes(rid, fi, w, h))
-                        for fi in range(1 + rid % 2)
-                    ]
-                payloads.append(encode_mp4_frames(frames, codec="hvc1"))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+                gop = encode_hevc_gop_dc_parts(
+                    w, h, (22, 27, 32, 37)[k % 4],
+                    1 + k % 25, 1 + k % 7, script_off=k)
+            else:
+                gop = encode_hevc_gop_dc(
+                    w, h, (22, 27, 32, 37)[k % 4],
+                    1 + k % 25, 1 + k % 7)
+            # split the Annex-B GOP into per-picture samples
+            frames = _hevc_split_aus(gop)
+        elif rid >= 120:
+            # lossy DC leg (ids 120-199): a single positive DC
+            # coefficient at one of four qps runs the REAL
+            # §8.6.3 dequant + 16x16 DCT under the hash gate;
+            # oracle mirrors hevc_dc_expected's integer form
+            frames = [encode_hevc_iframe_dc(
+                w, h, (22, 27, 32, 37)[rid % 4], 1 + rid % 25)]
+        else:
+            frames = [
+                encode_hevc_iframe_bypass(
+                    w, h, *frame_planes(rid, fi, w, h))
+                for fi in range(1 + rid % 2)
+            ]
+        return encode_mp4_frames(frames, codec="hvc1")
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_avif_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -8692,23 +8170,12 @@ def synthesize_avif_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     OBU and whose item data is a real frame-header OBU + tile group.
     Closed forms: w = 16 + id%29, h = 16 + id%23, tile payload length
     n = 40 + id%57 with byte i = (31·id + 7·i) mod 256."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def one(rid: int) -> bytes:
         n = 40 + rid % 57
         payload = bytes((31 * rid + 7 * i) % 256 for i in range(n))
         return encode_avif_fixture(16 + rid % 29, 16 + rid % 23, payload)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "payload": [one(int(v)) for v in pdf[id_col]],
-            })
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def decode_avif_structure(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -8769,10 +8236,6 @@ def synthesize_heic_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     exactly; libheif arbitrates the container convention in
     tests/test_heif_codec.py.  Interior CUs DC-predict their flat
     value exactly (cbf 0) — the battery-budget shape."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
     def planes(rid: int, w: int, h: int, t: int, rich: bool):
         import numpy as np
 
@@ -8791,21 +8254,14 @@ def synthesize_heic_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
         cr = np.full((h // 2, w // 2), cv, np.uint8)
         return y.tobytes(), cb.tobytes(), cr.tobytes()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for v in pdf[id_col]:
-                rid = int(v)
-                if rid % 4 == 3:
-                    tiles = [planes(rid, 32, 32, t, rich=False) for t in range(4)]
-                    payloads.append(encode_heic_grid_fixture(32, 32, 2, 2, tiles))
-                else:
-                    w = 32 + 16 * (rid % 3)
-                    payloads.append(
-                        encode_heic_fixture(w, 32, *planes(rid, w, 32, 0, True)))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def one(rid: int) -> bytes:
+        if rid % 4 == 3:
+            tiles = [planes(rid, 32, 32, t, rich=False) for t in range(4)]
+            return encode_heic_grid_fixture(32, 32, 2, 2, tiles)
+        w = 32 + 16 * (rid % 3)
+        return encode_heic_fixture(w, 32, *planes(rid, w, 32, 0, True))
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_avc_multiref_payloads(
@@ -8818,38 +8274,27 @@ def synthesize_avc_multiref_payloads(
     (the residual P), odd MBs reach PAST it to the IDR.  Closed form
     h264_gop_multiref_expected; MB-aligned dims so the per-MB
     accounting stays exact."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def one(k: int) -> bytes:
         from .h264_inter import encode_h264_gop_multiref
 
-        for pdf in batches:
-            payloads = []
-            for v in pdf[id_col]:
-                k = int(v)
-                payloads.append(
-                    encode_mp4_frames(
-                        encode_h264_gop_multiref(
-                            32 + 16 * (k % 3),
-                            32 + 16 * (k % 2),
-                            qp=(20, 28, 36, 44)[k % 4],
-                            y_coeff=1 + k % 60,
-                            u_coeff=1 + k % 30,
-                            v_coeff=1 + k % 25,
-                            p_y_coeff=1 + k % 8,
-                            p_c_coeff=1 + k % 5,
-                            # r8: odd ids code through the CABAC tier
-                            # (entropy-independent oracle, 50/50 split)
-                            cabac=k % 2 == 1,
-                        ),
-                        codec="avc1",
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+        return encode_mp4_frames(
+            encode_h264_gop_multiref(
+                32 + 16 * (k % 3),
+                32 + 16 * (k % 2),
+                qp=(20, 28, 36, 44)[k % 4],
+                y_coeff=1 + k % 60,
+                u_coeff=1 + k % 30,
+                v_coeff=1 + k % 25,
+                p_y_coeff=1 + k % 8,
+                p_c_coeff=1 + k % 5,
+                # r8: odd ids code through the CABAC tier
+                # (entropy-independent oracle, 50/50 split)
+                cabac=k % 2 == 1,
+            ),
+            codec="avc1",
+        )
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_avc_tdirect_payloads(
@@ -8862,39 +8307,27 @@ def synthesize_avc_tdirect_payloads(
     (mvL0 = col_mv/2, mvL1 = -col_mv/2) on the wire; over flat
     anchors the closed form is the plain bi-average
     (h264_gop_multiref_expected's flat arms + average)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def one(k: int) -> bytes:
         from .h264_bslice import encode_h264_gop_tdirect
 
-        for pdf in batches:
-            payloads = []
-            for v in pdf[id_col]:
-                k = int(v)
-                payloads.append(
-                    encode_mp4_frames(
-                        encode_h264_gop_tdirect(
-                            32 + 2 * (k % 9),
-                            32 + 2 * (k % 7),
-                            qp=(20, 28, 36, 44)[k % 4],
-                            y_coeff=1 + k % 60,
-                            u_coeff=1 + k % 30,
-                            v_coeff=1 + k % 25,
-                            p_y_coeff=1 + k % 8,
-                            p_c_coeff=1 + k % 5,
-                            col_mv=((16, 8), (8, 16), (24, 4),
-                                    (4, 24))[k % 4],
-                            cabac=k % 2 == 1,  # r8: 50/50 CABAC split
-                        ),
-                        codec="avc1",
-                        composition_offsets=[0, 500, -500],
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+        return encode_mp4_frames(
+            encode_h264_gop_tdirect(
+                32 + 2 * (k % 9),
+                32 + 2 * (k % 7),
+                qp=(20, 28, 36, 44)[k % 4],
+                y_coeff=1 + k % 60,
+                u_coeff=1 + k % 30,
+                v_coeff=1 + k % 25,
+                p_y_coeff=1 + k % 8,
+                p_c_coeff=1 + k % 5,
+                col_mv=((16, 8), (8, 16), (24, 4), (4, 24))[k % 4],
+                cabac=k % 2 == 1,  # r8: 50/50 CABAC split
+            ),
+            codec="avc1",
+            composition_offsets=[0, 500, -500],
+        )
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_avc_bpyramid_payloads(
@@ -8905,39 +8338,29 @@ def synthesize_avc_bpyramid_payloads(
     midpoint (4) that enters the DPB, then non-reference Bs at 2 and
     6 anchored on it — closed forms are nested bi-averages
     (encode_h264_gop_bpyramid)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
     # decode-order POCs (0, 8, 4, 2, 6) -> ctts composition offsets
     offs = [(r - i) * 500 for i, r in enumerate((0, 4, 2, 1, 3))]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def one(k: int) -> bytes:
         from .h264_bslice import encode_h264_gop_bpyramid
 
-        for pdf in batches:
-            payloads = []
-            for v in pdf[id_col]:
-                k = int(v)
-                payloads.append(
-                    encode_mp4_frames(
-                        encode_h264_gop_bpyramid(
-                            32 + 2 * (k % 9),
-                            32 + 2 * (k % 7),
-                            qp=(20, 28, 36, 44)[k % 4],
-                            y_coeff=1 + k % 60,
-                            u_coeff=1 + k % 30,
-                            v_coeff=1 + k % 25,
-                            p_y_coeff=1 + k % 8,
-                            p_c_coeff=1 + k % 5,
-                            cabac=k % 2 == 1,  # r8: 50/50 CABAC split
-                        ),
-                        codec="avc1",
-                        composition_offsets=offs,
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+        return encode_mp4_frames(
+            encode_h264_gop_bpyramid(
+                32 + 2 * (k % 9),
+                32 + 2 * (k % 7),
+                qp=(20, 28, 36, 44)[k % 4],
+                y_coeff=1 + k % 60,
+                u_coeff=1 + k % 30,
+                v_coeff=1 + k % 25,
+                p_y_coeff=1 + k % 8,
+                p_c_coeff=1 + k % 5,
+                cabac=k % 2 == 1,  # r8: 50/50 CABAC split
+            ),
+            codec="avc1",
+            composition_offsets=offs,
+        )
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def synthesize_webp_lossy_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -8949,27 +8372,17 @@ def synthesize_webp_lossy_payloads(df: DataFrame, *, id_col: str = "doc_id") -> 
     values `vp8_flat_expected` computes (first MB codes the level
     through the inverse WHT; every other MB is mb_skip + DC_PRED,
     whose whole-MB average reproduces it exactly)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        return encode_webp_vp8_flat(
+            16 + rid % 49,
+            16 + rid % 33,
+            qindex=(8, 24, 48, 80)[rid % 4],
+            y2dc_token=1 + rid % 40,
+            u_token=1 + rid % 12,
+            v_token=1 + (rid // 3) % 12,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                payloads.append(
-                    encode_webp_vp8_flat(
-                        16 + rid % 49,
-                        16 + rid % 33,
-                        qindex=(8, 24, 48, 80)[rid % 4],
-                        y2dc_token=1 + rid % 40,
-                        u_token=1 + rid % 12,
-                        v_token=1 + (rid // 3) % 12,
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+    return id_kernel(df, id_col, one)
 
 
 def _vp8l_package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
@@ -9328,29 +8741,14 @@ def webp_animation_frames(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame
         ]
     )
 
+    columns = [("frame_idx", "int32"), ("ts_ms", "int64"), ("duration_ms", "int32"),
+               ("width", "int32"), ("height", "int32"), ("n_channels", "int32"),
+               ("pixel_sum", "Int64")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in schema.fields}
-            for rid, b in zip(pdf[id_col], pdf["payload"]):
-                for rec in _webp_animation_frames(bytes(b)):
-                    rows[id_col].append(rid)
-                    for name, v in zip(
-                        ("frame_idx", "ts_ms", "duration_ms", "width",
-                         "height", "n_channels", "pixel_sum"),
-                        rec,
-                    ):
-                        rows[name].append(v)
-            yield pd.DataFrame(
-                {
-                    id_col: rows[id_col],
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="int32"),
-                    "ts_ms": pd.array(rows["ts_ms"], dtype="int64"),
-                    "duration_ms": pd.array(rows["duration_ms"], dtype="int32"),
-                    "width": pd.array(rows["width"], dtype="int32"),
-                    "height": pd.array(rows["height"], dtype="int32"),
-                    "n_channels": pd.array(rows["n_channels"], dtype="int32"),
-                    "pixel_sum": pd.array(rows["pixel_sum"], dtype="Int64"),
-                }
+            yield _typed_frame(
+                id_col, *_explode(pdf, id_col, _webp_animation_frames), columns
             )
 
     return df.select(id_col, "payload").mapInPandas(kernel, schema)
@@ -9365,36 +8763,170 @@ def synthesize_webp_animation_payloads(
     ((7id+11f) % 256, (3id+5f) % 256, (13id+f) % 256), odd frames are
     flat lossy-VP8 keyframes (qindex cycling {8,24,48,80}, DC tokens
     per the webp-lossy battery's closed forms)."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
+    def one(rid: int) -> bytes:
+        w, h = 10 + rid % 30, 8 + rid % 22
+        frames = []
+        for f in range(2 + rid % 4):
+            dur = 100 * (1 + f % 3)
+            if f % 2 == 0:
+                rgb = (
+                    (7 * rid + 11 * f) % 256,
+                    (3 * rid + 5 * f) % 256,
+                    (13 * rid + f) % 256,
+                )
+                still = encode_webp_lossless(w, h, lambda x, y, c=rgb: c)
+            else:
+                still = encode_webp_vp8_flat(
+                    w,
+                    h,
+                    qindex=(8, 24, 48, 80)[rid % 4],
+                    y2dc_token=1 + (rid + 3 * f) % 40,
+                    u_token=1 + (rid + f) % 12,
+                    v_token=1 + (rid // 3 + f) % 12,
+                )
+            frames.append((dur, still))
+        return encode_webp_animation(w, h, frames)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid in (int(v) for v in pdf[id_col]):
-                w, h = 10 + rid % 30, 8 + rid % 22
-                frames = []
-                for f in range(2 + rid % 4):
-                    dur = 100 * (1 + f % 3)
-                    if f % 2 == 0:
-                        rgb = (
-                            (7 * rid + 11 * f) % 256,
-                            (3 * rid + 5 * f) % 256,
-                            (13 * rid + f) % 256,
-                        )
-                        still = encode_webp_lossless(w, h, lambda x, y, c=rgb: c)
-                    else:
-                        still = encode_webp_vp8_flat(
-                            w,
-                            h,
-                            qindex=(8, 24, 48, 80)[rid % 4],
-                            y2dc_token=1 + (rid + 3 * f) % 40,
-                            u_token=1 + (rid + f) % 12,
-                            v_token=1 + (rid // 3 + f) % 12,
-                        )
-                    frames.append((dur, still))
-                payloads.append(encode_webp_animation(w, h, frames))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    return id_kernel(df, id_col, one)
 
-    return _spread_ids(df, id_col).mapInPandas(kernel, out_schema)
+
+# ---------------------------------------------------------------------------
+# Sniff→decoder ladders, one per media family (run by _first_decode).
+# Each entry is (sniff, decode, errors): its format's exact exception
+# tuple, in the order the kernel tries the formats. Kernels keep their own
+# fallback (_require_codec + the md5-derived fake) for a None result.
+# ---------------------------------------------------------------------------
+
+_VS = (ValueError, struct.error)
+_VSI = (ValueError, struct.error, IndexError)
+_PNG_ERRORS = (ValueError, struct.error, zlib.error)
+_WAV_ERRORS = (ValueError, struct.error, wave.Error, EOFError)
+
+
+def _summed(decoded: tuple[int, int, int, bytes]) -> tuple[int, int, int, int]:
+    w, h, ch, raw = decoded
+    return w, h, ch, sum(raw)
+
+
+def _png_channel_bytes(data: bytes) -> tuple[int, int, int, bytes]:
+    w, h, ch, rows = _png_pixels(data)
+    return w, h, ch, b"".join(rows)
+
+
+def _gif_channel_bytes(data: bytes) -> tuple[int, int, int, bytes]:
+    w, h, pal, idx = _gif_pixels(data)
+    return w, h, 3, bytes(v for i in idx for v in pal[i])
+
+
+def _heic_channel_bytes(data: bytes) -> tuple[int, int, int, bytes]:
+    """HEIC (r7d) served like lossy WebP: interleaved Y,U,V with the
+    4:2:0 chroma pixel-replicated."""
+    w, h, ch, raw = _heic_pixels(data)
+    ysz = w * h
+    cw, chh = (w + 1) // 2, (h + 1) // 2
+    y = raw[:ysz]
+    cb = raw[ysz : ysz + cw * chh]
+    cr = raw[ysz + cw * chh :]
+    out = bytearray(ysz * 3)
+    for r in range(h):
+        ro = r * w
+        co = (r >> 1) * cw
+        for c in range(w):
+            o = (ro + c) * 3
+            out[o] = y[ro + c]
+            out[o + 1] = cb[co + (c >> 1)]
+            out[o + 2] = cr[co + (c >> 1)]
+    return w, h, 3, bytes(out)
+
+
+# decode_images: (width, height, n_channels, pixel_sum)
+_IMAGE_SUM_LADDER = (
+    (_looks_like_bmp, _decode_bmp, _VS),
+    (_looks_like_png, _decode_png, _PNG_ERRORS),
+    (_looks_like_gif, _decode_gif, _VSI),
+    (_looks_like_ppm, _decode_ppm, _VS),
+    (_looks_like_jpeg, _decode_jpeg, _VSI),
+    (_looks_like_tiff, _decode_tiff, _VSI),
+    # WebP: lossless VP8L, then the lossy VP8 keyframe (summed over
+    # YUV444-replicated planes)
+    (_looks_like_webp, lambda d: _summed(_vp8l_pixels(d)), _VSI),
+    (_looks_like_webp, lambda d: _summed(_vp8_lossy_channel_bytes(d)), _VSI),
+    # HEIC stills (r7d): HEIF item walk (hvc1 or grid-of-hvc1) + HEVC
+    # intra decode, summed over the NATIVE 4:2:0 planes
+    (_looks_like_heif, lambda d: _summed(_heic_pixels(d)), _VSI),
+)
+
+# _image_channel_bytes: (width, height, channels, raw channel bytes)
+_CHANNEL_BYTES_LADDER = (
+    (_looks_like_bmp, _bmp_channel_bytes, _VS),
+    (_looks_like_png, _png_channel_bytes, _PNG_ERRORS),
+    (_looks_like_gif, _gif_channel_bytes, _VSI),
+    (_looks_like_jpeg, _jpeg_pixels, _VSI),
+    (_looks_like_tiff, _tiff_pixels, _VSI),
+    (_looks_like_webp, _vp8l_pixels, _VSI),
+    # lossy VP8 keyframe (r6): YUV420 planes, chroma replicated
+    (_looks_like_webp, _vp8_lossy_channel_bytes, _VSI),
+    (_looks_like_heif, _heic_channel_bytes, _VSI),
+)
+
+# extract_embeddings: 8 features per audio or video payload (images
+# follow through _image_channel_bytes)
+_FEATURE_LADDER = (
+    (_looks_like_pcm, _pcm_features, _WAV_ERRORS),
+    (_looks_like_avi, _avi_features, _VS),
+)
+
+# resize_images(width, height): the re-encoded payload
+_RESIZE_LADDER = (
+    (_looks_like_bmp, _resize_bmp, _VS),
+    (_looks_like_png, _resize_png, _PNG_ERRORS),
+    (_looks_like_gif, _resize_gif, _VSI),
+)
+
+# _pcm_samples: (sample_rate, n_frames, n_channels, samples); a parse
+# error propagates to the caller
+_PCM_LADDER = (
+    (_looks_like_wav, _wav_samples, ()),
+    (_looks_like_aiff, _aiff_samples, ()),
+    (_looks_like_flac, _flac_samples, ()),
+)
+
+# decode_audio: (sample_rate, n_samples, duration_ms, sample_sum, rms)
+_AUDIO_STATS_LADDER = (
+    (_looks_like_wav, _decode_wav, _WAV_ERRORS),
+    (_looks_like_aiff, _decode_aiff, _VS),
+    (_looks_like_mp3, _decode_mp3, _VSI),
+    (_looks_like_flac, _decode_flac, _VSI),
+)
+
+# resample_audio(factor): (payload, sample_rate, n_samples)
+_RESAMPLE_LADDER = (
+    (_looks_like_wav, _resample_wav, _WAV_ERRORS),
+    (_looks_like_aiff, _resample_aiff, _VS),
+    (_looks_like_flac, _resample_flac, _VSI),
+)
+
+# audio_vad_frames(frame_size, energy_threshold): (frame_idx, energy, active)
+_VAD_LADDER = ((_looks_like_pcm, _vad_frames, _WAV_ERRORS),)
+
+# decode_video_pixels(every_ms, keyframes_only): per-frame pixel stats
+_VIDEO_PIXEL_LADDER = (
+    (_looks_like_avi, _avi_video_pixels, _VSI),
+    (_looks_like_mp4, _mp4_video_pixels, _VSI),
+)
+
+# sample_video_frames(every_ms): (frame_idx, ts_ms, frame_md5)
+_FRAME_SAMPLE_LADDER = (
+    (_looks_like_avi, _decode_avi_frames, _VSI),
+    (_looks_like_mp4, _decode_mp4_frames, _VSI),
+    # partial-frame/interlaced animations fall through to the fake path
+    (_looks_like_gif, _decode_gif_frames, _VSI),
+)
+
+# extract_image_metadata: EXIF fields + dims
+_IMAGE_META_LADDER = (
+    (_looks_like_jpeg, _jpeg_exif, _VS),
+    (_looks_like_jpeg, _jpeg_dims_meta, _VS),  # JPEG without EXIF
+    (_looks_like_tiff, _tiff_meta, _VS),
+    (_looks_like_webp, _webp_metadata, _VS),
+)

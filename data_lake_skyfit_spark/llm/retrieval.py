@@ -53,8 +53,6 @@ tests).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -275,34 +273,3 @@ def rrf_fuse(
     )
 
 
-def bm25_numpy_mirror(
-    corpus: list[tuple[int, str]], queries: list[tuple[int, list[str]]], k: int = 5
-) -> list[tuple[int, int, float]]:
-    """Independent sequential mirror of the log-idf path (tests only)."""
-    import collections
-
-    toks = {d: [t for t in text.split() if t] for d, text in corpus}
-    n = len(corpus)
-    totlen = sum(len(w) for w in toks.values())
-    avgdl = totlen / n
-    dfreq: collections.Counter = collections.Counter()
-    for w in toks.values():
-        dfreq.update(set(w))
-    out: list[tuple[int, int, float]] = []
-    k1, b = 1.2, 0.75
-    for qid, terms in queries:
-        scores: dict[int, float] = {}
-        for d, w in toks.items():
-            tfs = collections.Counter(w)
-            s = 0.0
-            for t in set(terms):
-                tf = tfs.get(t, 0)
-                if not tf:
-                    continue
-                idf = math.log(1 + (n - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
-                s += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(w) / avgdl))
-            if s > 0:
-                scores[d] = s
-        top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        out.extend((qid, d, s) for d, s in top)
-    return out

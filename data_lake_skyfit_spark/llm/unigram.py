@@ -241,7 +241,8 @@ def viterbi_segment(word: str, model: UnigramModel) -> list[str]:
             ):
                 cand = c
         best[j] = cand
-    assert best[n] is not None  # single-char fallback guarantees a path
+    if best[n] is None:  # the single-char fallback guarantees a path
+        raise RuntimeError("unigram: no segmentation path")
     return list(best[n][2])
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import bronze
-from ..sources.watermarks import WatermarkStore, incremental_filter
+from ..sources.watermarks import WatermarkStore
 from ..specs.base import ChildSpec, EntitySpec
 from .dedupe import latest_wins
 from .merge import ParquetTable
@@ -207,33 +207,6 @@ class Lakehouse:
         self.load_stg(spec, runs=new)
         self.normalize_core(spec, full_refresh=full_refresh)
         store.record_runs(spec.source, spec.entity, set(runs))
-
-    def run_incremental(
-        self,
-        spec: EntitySpec,
-        store,
-        *,
-        ts_field: str | None = None,
-        now=None,
-    ) -> None:
-        """I1+I3: watermark-windowed bronze→STG→CORE with post-success
-        watermark advance (pipedrive_bronze.py:203-274 contract).
-
-        Bronze rows whose `ts_field` (default: the spec's dedupe-order
-        column) falls in (watermark − overlap, now] are loaded; the keyed
-        MERGEs downstream absorb the overlap duplicates, so re-runs are
-        idempotent. The watermark commits only after both layers land.
-        """
-        field = ts_field or spec.dedupe_order
-        since, until = store.window(spec.source, spec.entity, now=now)
-        df = bronze.read_bronze(self.spark, self.root, spec.source, entity=spec.entity)
-        payload_cols = [c for c in df.columns if c not in _LINEAGE + ("scope", "entity")]
-        if field in payload_cols:
-            ts = F.to_timestamp(F.col(field))
-            df = incremental_filter(df.withColumn("__ts", ts), F.col("__ts"), since, until).drop("__ts")
-        self._load_stg_frame(spec, df)
-        self.normalize_core(spec)
-        store.advance(spec.source, spec.entity, until)
 
     def register_views(self, spec: EntitySpec, scopes: tuple[str, ...] = ()) -> None:
         """P5 per-scope views (sql/schemas/05_scope_views.sql:9-41):

@@ -3879,8 +3879,8 @@ def multimodal_decode_h264(spark: SparkSession, sf_dir: str) -> DataFrame:
     "4:2:2/4:4:4 tier) rides the reference cross-pins in pytest.",
 )
 def multimodal_decode_hevc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every synthesize kernel now spreads its one-split id range itself
-    # (multimodal._spread_ids, r9) — no query-level repartition needed
+    # every synthesize kernel spreads its one-split id range itself
+    # (multimodal.id_kernel, r9) — no query-level repartition needed
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
     media = multimodal.synthesize_hevc_mp4_payloads(d, id_col="doc_id")
     return multimodal.decode_video_pixels(media, every_ms=400)
@@ -3928,7 +3928,7 @@ def multimodal_decode_hevc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "convention and libde265 the wire in tests/test_heif_codec.py.",
 )
 def multimodal_decode_heic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # synthesize kernels spread their own id range (multimodal._spread_ids)
+    # synthesize kernels spread their own id range (multimodal.id_kernel)
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 160)
     media = multimodal.synthesize_heic_payloads(d, id_col="doc_id")
     return multimodal.decode_images(media, id_col="doc_id")
@@ -6726,8 +6726,8 @@ def multimodal_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    # The FLAC-encode kernel needs text too, so the id-only _spread_ids
-    # doesn't apply — spread the (id, text) frame itself off the
+    # The FLAC-encode kernel needs text too, so the id-only
+    # multimodal.id_kernel doesn't apply — spread the (id, text) frame itself off the
     # one-split scan, priced for a ms-per-row kernel (r10 A/B: width 4
     # beat 1-split 3.19 s and full-32 2.80 s at 2.45 s).
     spread = text_ops.spread_small_input(

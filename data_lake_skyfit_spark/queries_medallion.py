@@ -417,7 +417,8 @@ def watermark_incremental_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reference's post-success ordering at run granularity
         store.advance("battery", "events", until)
         store.write_manifest("battery", run_id, {"leg": leg, "until": str(until)})
-    assert store.list_runs("battery") == ["r1", "r2", "r3"]  # K6 manifests
+    if store.list_runs("battery") != ["r1", "r2", "r3"]:  # K6 manifests
+        raise RuntimeError("watermark battery: run manifests not committed")
     out = legs[0].unionByName(legs[1]).unionByName(legs[2])
     return out
 

@@ -15,8 +15,36 @@ import numpy as np
 import pytest
 
 from data_lake_skyfit_spark.llm import av1
+from data_lake_skyfit_spark.llm.av1 import _Bits, _tile_log2
 
 from . import libav1_oracle
+
+
+# Test-only tile splitter (the structure walk keeps tile groups whole).
+def tile_group_ranges(tile_data: bytes, fh: dict) -> list[bytes]:
+    """§5.11.1: split one tile-group payload into per-tile byte
+    strings (tile_start_and_end_present + le(TileSizeBytes) sizes)."""
+    n_tiles = fh["tile_cols"] * fh["tile_rows"]
+    b = _Bits(tile_data)
+    if n_tiles > 1:
+        if b.f(1):  # tile_start_and_end_present
+            b.f(2 * _tile_log2(1, n_tiles))  # tg_start / tg_end
+    b.byte_align()
+    i = b.pos >> 3
+    out = []
+    sz_bytes = fh["tile_size_bytes"]
+    for t in range(n_tiles):
+        if t == n_tiles - 1:
+            out.append(tile_data[i:])
+            break
+        sz = int.from_bytes(tile_data[i : i + sz_bytes], "little") + 1
+        i += sz_bytes
+        if i + sz > len(tile_data):
+            raise ValueError("av1: tile size overruns tile group")
+        out.append(tile_data[i : i + sz])
+        i += sz
+    return out
+
 
 _AOM = libav1_oracle.load_aom()
 _DAV1D = libav1_oracle.load_dav1d()
@@ -69,7 +97,7 @@ def test_aom_stream_headers_parse(w, h, lossless):
     assert fh["coded_lossless"] == int(lossless)
     assert fh["frame_type"] == 0 and fh["show_frame"] == 1
     assert info["tile_data"], "frame carries a tile group"
-    tiles = av1.tile_group_ranges(info["tile_data"][0], fh)
+    tiles = tile_group_ranges(info["tile_data"][0], fh)
     assert len(tiles) == fh["tile_cols"] * fh["tile_rows"]
     assert all(len(t) > 0 for t in tiles)
 

@@ -82,17 +82,6 @@ def test_entity_type_conflict_keeps_branch_id(spark, evo_lake):
     assert prospects.filter(F.col("branch_id").isNull()).count() == 0
 
 
-def test_run_incremental_keeps_branch_id(spark, tmp_path):
-    root = str(tmp_path)
-    fixtures.gen_members(root)
-    fixtures.gen_prospects(root, branch_as_string=True)
-    lake = Lakehouse(spark, root)
-    lake.run_incremental(get_spec("evo_members"), WatermarkStore(root))
-    core = lake.read("core", "evo_members")
-    assert core.count() == 70
-    assert core.filter(F.col("branch_id").isNull()).count() == 0
-
-
 def test_rerun_without_new_bronze_does_no_work(spark, evo_lake, monkeypatch):
     before = _table_files(evo_lake.root)
     calls = _count_merges(monkeypatch)

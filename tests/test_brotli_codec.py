@@ -21,6 +21,23 @@ import pytest
 
 from data_lake_skyfit_spark.sources import brotli_codec as bc
 from data_lake_skyfit_spark.sources.brotli_codec import (
+    _BitWriter,
+    _COPY_BASE,
+    _COPY_EXTRA,
+    _DICT_OFFSETS,
+    _DICT_SIZE_BITS,
+    _INSERT_BASE,
+    _INSERT_EXTRA,
+    _cmd_symbol,
+    _copy_code,
+    _dictionary,
+    _dist_code_for,
+    _huffman_lengths,
+    _insert_code,
+    _transform_word,
+    _write_mlen,
+    _write_prefix_code,
+    _write_window_bits,
     brotli_compress,
     brotli_compress_store,
     brotli_decompress,
@@ -30,6 +47,106 @@ try:
     from .libbrotli_oracle import load_brotli
 except ImportError:  # pragma: no cover - direct pytest invocation
     from libbrotli_oracle import load_brotli
+
+
+# Test-only fixture builder for the hand-built dictionary-transform goldens.
+def _compress_commands(commands: list[tuple[bytes, int | None, int | None]],
+                       *, wbits: int = 22) -> bytes:
+    """Low-level fixture builder: one compressed meta-block from
+    explicit (insert_literals, copy_len, distance) commands; distance
+    None on the final command means the copy part is ignored
+    (meta-block exhausted), distance > the position's max backward
+    distance is a static-dictionary reference. This is how the
+    dictionary-transform goldens are hand-built for libbrotli to
+    arbitrate (the tests below)."""
+    mlen = 0
+    pos = 0
+    window = (1 << wbits) - 16
+    sized: list[tuple[bytes, int | None, int | None, int]] = []
+    for lits, clen, dist in commands:
+        mlen += len(lits)
+        pos += len(lits)
+        if dist is None:
+            if clen is not None:
+                raise ValueError("copy without distance must be final")
+            sized.append((lits, None, None, 0))
+            continue
+        max_dist = min(pos, window)
+        if dist > max_dist:  # dictionary word
+            if not 4 <= clen <= 24 or _DICT_SIZE_BITS[clen] == 0:
+                raise ValueError("bad dictionary copy length")
+            address = dist - max_dist - 1
+            tid = address >> _DICT_SIZE_BITS[clen]
+            if tid >= 121:
+                raise ValueError("transform id out of range")
+            word_idx = address & ((1 << _DICT_SIZE_BITS[clen]) - 1)
+            base = _DICT_OFFSETS[clen] + word_idx * clen
+            word = _dictionary()[base: base + clen]
+            out_len = len(_transform_word(word, tid))
+        else:
+            out_len = clen
+        mlen += out_len
+        pos += out_len
+        sized.append((lits, clen, dist, out_len))
+
+    lit_freq: dict[int, int] = {}
+    cmd_freq: dict[int, int] = {}
+    dist_freq: dict[int, int] = {}
+    cmds = []
+    for lits, clen, dist, _ in sized:
+        ic = _insert_code(len(lits))
+        cc = _copy_code(clen if clen is not None else 2)
+        sym = _cmd_symbol(ic, cc)
+        cmd_freq[sym] = cmd_freq.get(sym, 0) + 1
+        for b in lits:
+            lit_freq[b] = lit_freq.get(b, 0) + 1
+        if dist is not None:
+            dcode, dx, dxbits = _dist_code_for(dist)
+            dist_freq[dcode] = dist_freq.get(dcode, 0) + 1
+        else:
+            dcode = dx = dxbits = -1
+        cmds.append((sym,
+                     len(lits) - _INSERT_BASE[ic], _INSERT_EXTRA[ic],
+                     (clen if clen is not None else 2) - _COPY_BASE[cc],
+                     _COPY_EXTRA[cc], lits, dcode, dx, dxbits))
+
+    def _code_lengths(freqs: dict[int, int]) -> dict[int, int]:
+        if not freqs:
+            return {0: 0}
+        if len(freqs) == 1:
+            return {next(iter(freqs)): 0}  # single-symbol simple code
+        return _huffman_lengths(freqs, 15)
+
+    bw = _BitWriter()
+    _write_window_bits(bw, wbits)
+    bw.write(1, 1)  # ISLAST
+    bw.write(0, 1)  # not ISLASTEMPTY
+    _write_mlen(bw, mlen)
+    for _ in range(3):
+        bw.write(0, 1)  # NBLTYPES = 1 each
+    bw.write(0, 2)  # NPOSTFIX
+    bw.write(0, 4)  # NDIRECT
+    bw.write(0, 2)  # literal context mode LSB6
+    bw.write(0, 1)  # NTREESL = 1
+    bw.write(0, 1)  # NTREESD = 1
+    lit_enc = _write_prefix_code(bw, _code_lengths(lit_freq), 256)
+    cmd_enc = _write_prefix_code(bw, _code_lengths(cmd_freq), 704)
+    dist_enc = _write_prefix_code(bw, _code_lengths(dist_freq), 64)
+
+    for sym, ix, ixb, cx, cxb, lits, dcode, dx, dxbits in cmds:
+        if cmd_enc is not None:
+            cmd_enc.write(bw, sym)
+        bw.write(ix, ixb)
+        bw.write(cx, cxb)
+        for b in lits:
+            if lit_enc is not None:
+                lit_enc.write(bw, b)
+        if dcode >= 0:  # explicit distance present on the wire
+            if dist_enc is not None:
+                dist_enc.write(bw, dcode)
+            bw.write(dx, dxbits)
+    return bw.getvalue()
+
 
 _REF = load_brotli()
 
@@ -113,7 +230,7 @@ def test_all_121_transforms_reference_arbitrated():
     for tid in range(121):
         for clen, widx in ((5, 100), (8, 7), (24, 3)):
             dist = 8 + 1 + (tid << bc._DICT_SIZE_BITS[clen]) + widx
-            stream = bc._compress_commands(
+            stream = _compress_commands(
                 [(b"01234567", clen, dist), (b"tail", None, None)])
             mine = brotli_decompress(stream)
             ref = _REF.decompress(stream)

@@ -13,6 +13,7 @@ bit-flip fuzz gauntlets."""
 from __future__ import annotations
 
 import random
+import struct
 
 import pytest
 
@@ -25,6 +26,54 @@ from data_lake_skyfit_spark.llm.h264 import (
     _sps_writer,
     _write_cavlc_block,
 )
+from data_lake_skyfit_spark.llm.multimodal import _mp4_child, _mp4_walk
+
+
+# Test-only ctts reader: the decoder takes POC order from the slices,
+# so only the B-GOP container tests read the composition offsets back.
+def _mp4_composition_offsets(data: bytes, n: int) -> list[int]:
+    """Per-sample composition offsets (CT - DT, timescale units) from
+    the first video trak's ctts box: signed for version 1, unsigned
+    for version 0; all zeros when no ctts is present (decode order ==
+    display order).  Run-length entries are expanded and validated
+    against the sample count."""
+    moov = _mp4_child(data, 0, len(data), b"moov")
+    if moov is None:
+        raise ValueError("mp4: missing moov")
+    for fc, tb, te in _mp4_walk(data, *moov):
+        if fc != b"trak":
+            continue
+        mdia = _mp4_child(data, tb, te, b"mdia")
+        if mdia is None:
+            continue
+        hdlr = _mp4_child(data, *mdia, b"hdlr")
+        if hdlr is None or data[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
+            continue
+        minf = _mp4_child(data, *mdia, b"minf")
+        stbl = _mp4_child(data, *minf, b"stbl") if minf else None
+        if stbl is None:
+            raise ValueError("mp4: missing stbl")
+        ctts = _mp4_child(data, *stbl, b"ctts")
+        if ctts is None:
+            return [0] * n
+        b, e = ctts
+        version = data[b]
+        (count,) = struct.unpack_from(">I", data, b + 4)
+        if b + 8 + 8 * count > e:
+            raise ValueError("mp4: ctts overruns its box")
+        out: list[int] = []
+        for i in range(count):
+            cnt, off = struct.unpack_from(
+                ">Ii" if version == 1 else ">II", data, b + 8 + 8 * i)
+            if cnt > n:
+                raise ValueError("mp4: ctts run exceeds sample count")
+            out.extend([off] * cnt)
+            if len(out) > n:
+                raise ValueError("mp4: ctts entries exceed sample count")
+        if len(out) != n:
+            raise ValueError("mp4: ctts entries do not cover all samples")
+        return out
+    raise ValueError("mp4: no video trak")
 
 
 def _pcm_idr2(width: int, height: int, yplane: bytes, uplane: bytes,
@@ -743,7 +792,7 @@ def test_mp4_ctts_matches_poc_order():
     offs = [(p - i) * 500 for i, p in enumerate(pocs)]
     payload = mm.encode_mp4_frames(frames, codec="avc1",
                                    composition_offsets=offs)
-    parsed = mm._mp4_composition_offsets(payload, len(frames))
+    parsed = _mp4_composition_offsets(payload, len(frames))
     assert parsed == offs
     # composition order == POC order
     ct = [i * 500 + o for i, o in enumerate(parsed)]
@@ -751,13 +800,13 @@ def test_mp4_ctts_matches_poc_order():
         sorted(range(len(pocs)), key=lambda i: pocs[i])
     # an MP4 without ctts reports zero offsets
     plain = mm.encode_mp4_frames([b"x" * 40, b"y" * 40])
-    assert mm._mp4_composition_offsets(plain, 2) == [0, 0]
+    assert _mp4_composition_offsets(plain, 2) == [0, 0]
     # corrupt the ctts entry count upward: must raise, not overread
     idx = payload.index(b"ctts")
     bad = bytearray(payload)
     bad[idx + 8: idx + 12] = (1 << 20).to_bytes(4, "big")
     with pytest.raises(ValueError):
-        mm._mp4_composition_offsets(bytes(bad), len(frames))
+        _mp4_composition_offsets(bytes(bad), len(frames))
 
 
 def test_bpyramid_nested_averages():

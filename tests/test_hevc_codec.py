@@ -36,9 +36,11 @@ from data_lake_skyfit_spark.llm.hevc import (
     encode_hevc_iframe_bypass,
 )
 
-try:  # test-only reference bridges
+try:  # test-only reference bridges and fixture encoders
+    from . import hevc_fixture_encoders as hevc_fx
     from . import libde265_oracle, libx265_oracle
 except ImportError:  # pragma: no cover - direct invocation
+    import hevc_fixture_encoders as hevc_fx
     import libde265_oracle
     import libx265_oracle
 
@@ -783,7 +785,7 @@ def _tile_fixture(seed, w, h):
 @pytest.mark.parametrize("lf", [True, False])
 def test_tiled_streams_bit_exact_vs_libde265(w, h, nc, nr, lf):
     y, cb, cr = _tile_fixture(nc * 7 + nr, w, h)
-    stream = hevc.encode_hevc_iframe_bypass_tiled(
+    stream = hevc_fx.encode_hevc_iframe_bypass_tiled(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes(), nc, nr, lf)
     ref = _DE265.decode(stream)
     mine = decode_hevc_intra_stream(stream)
@@ -802,7 +804,7 @@ def test_tiled_streams_bit_exact_vs_libde265(w, h, nc, nr, lf):
 ])
 def test_dependent_slice_segments_bit_exact_vs_libde265(w, h, rows):
     y, cb, cr = _tile_fixture(sum(rows), w, h)
-    stream = hevc.encode_hevc_iframe_bypass_depslices(
+    stream = hevc_fx.encode_hevc_iframe_bypass_depslices(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes(), rows)
     ref = _DE265.decode(stream)
     mine = decode_hevc_intra_stream(stream)
@@ -817,7 +819,7 @@ def test_tile_prediction_is_tile_scoped():
     first CTU predicts from the 128 substitution, not its left
     neighbour)."""
     y, cb, cr = _tile_fixture(5, 64, 32)
-    tiled = hevc.encode_hevc_iframe_bypass_tiled(
+    tiled = hevc_fx.encode_hevc_iframe_bypass_tiled(
         64, 32, y.tobytes(), cb.tobytes(), cr.tobytes(), 2, 1, True)
     plain = encode_hevc_iframe_bypass(
         64, 32, y.tobytes(), cb.tobytes(), cr.tobytes())
@@ -1368,7 +1370,7 @@ def test_fixture_parts_b_small_pu_bit_exact():
     """Small-PU B rules: 8x4 merge selecting a BI candidate must
     convert to L0 (§8.5.3.2.1) and AMVP small PUs code the single-bin
     inter_pred_idc; 16x16 Nx2N CUs cycle L0/L1/BI two-bin coding."""
-    stream = hevc.encode_hevc_gop_parts_b(96, 64, 30, 40)
+    stream = hevc_fx.encode_hevc_gop_parts_b(96, 64, 30, 40)
     ref = _DE265.decode(stream)
     with _PartRecorder() as rec:
         mine = hevc.decode_hevc_stream(stream, max_frames=8)
@@ -1383,7 +1385,7 @@ def test_fixture_parts_b_small_pu_bit_exact():
 def test_fixture_parts_nxn_bit_exact(qp, c0):
     """Inter NxN at the min-CB-16 SPS (part_mode bin 2 at ctx 2) —
     no in-container encoder emits it; libde265 arbitrates."""
-    stream = hevc.encode_hevc_gop_parts_nxn(96, 64, qp, c0)
+    stream = hevc_fx.encode_hevc_gop_parts_nxn(96, 64, qp, c0)
     ref = _DE265.decode(stream)
     with _PartRecorder() as rec:
         mine = hevc.decode_hevc_stream(stream, max_frames=8)
@@ -1540,7 +1542,7 @@ def test_fixture_ref_list_modification_bit_exact(qp, c0, c2):
     it): picture 2 redirects refIdx 0 at the IRAP two POCs back,
     picture 3 picks from a 3-pic RPS — each skip-copy plane IS the
     list the modification built, and libde265 arbitrates the wire."""
-    stream = hevc.encode_hevc_gop_modlist(48, 32, qp, c0, c2)
+    stream = hevc_fx.encode_hevc_gop_modlist(48, 32, qp, c0, c2)
     ref = _DE265.decode(stream)
     mine = hevc.decode_hevc_stream(stream, max_frames=8)
     assert len(mine) == len(ref) == 4
@@ -1609,7 +1611,7 @@ def test_fixture_long_term_refs_bit_exact(qp, c0, c2):
     hevc._PicDecoder._temporal_mv = tmv
     hevc._PicDecoder._amvp_candidates = amvp
     try:
-        stream = hevc.encode_hevc_gop_lt(64, 48, qp, c0, c2)
+        stream = hevc_fx.encode_hevc_gop_lt(64, 48, qp, c0, c2)
         mine = hevc.decode_hevc_stream(stream, max_frames=8)
     finally:
         hevc._PicDecoder._temporal_mv = orig
@@ -1822,7 +1824,7 @@ def test_fixture_cabac_init_flag_swap_bit_exact():
     """cabac_init_flag (§9.3.1 init-type swap; x265 never sets
     cabac_init_present): a P slice initializing from the B column
     decodes to the same closed forms, libde265-arbitrated."""
-    stream = hevc.encode_hevc_gop_dc_cabac_init(48, 32, 30, 20, 6)
+    stream = hevc_fx.encode_hevc_gop_dc_cabac_init(48, 32, 30, 20, 6)
     ref = _DE265.decode(stream)
     mine = hevc.decode_hevc_stream(stream, max_frames=4)
     assert len(mine) == len(ref) == 2
@@ -1864,7 +1866,7 @@ def test_fixture_cabac_init_flag_swap_bit_exact():
                                  (96, 48)])
 def test_wpp_fixture_encoder_bit_exact_vs_libde265(w, h):
     y, cb, cr = _tile_fixture(w + h, w, h)
-    stream = hevc.encode_hevc_iframe_bypass_wpp(
+    stream = hevc_fx.encode_hevc_iframe_bypass_wpp(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes())
     ref = _DE265.decode(stream)
     mine = decode_hevc_intra_stream(stream)
@@ -1883,9 +1885,9 @@ def test_tiles_wpp_1x1_payload_bit_identical_to_wpp_wire(w, h):
     from data_lake_skyfit_spark.llm.hevc import _split_nals
 
     y, cb, cr = _tile_fixture(9, w, h)
-    s_wpp = hevc.encode_hevc_iframe_bypass_wpp(
+    s_wpp = hevc_fx.encode_hevc_iframe_bypass_wpp(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes())
-    s_comb = hevc.encode_hevc_iframe_bypass_tiled(
+    s_comb = hevc_fx.encode_hevc_iframe_bypass_tiled(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes(), 1, 1, True, wpp=True)
     slice_wpp = [n for n in _split_nals(s_wpp) if (n[0] >> 1) & 63 == 19][0]
     slice_comb = [n for n in _split_nals(s_comb) if (n[0] >> 1) & 63 == 19][0]
@@ -1905,7 +1907,7 @@ def test_tiles_wpp_1x1_payload_bit_identical_to_wpp_wire(w, h):
 @pytest.mark.parametrize("lf", [True, False])
 def test_tiles_wpp_lossless_contract(w, h, nc, nr, lf):
     y, cb, cr = _tile_fixture(nc * 11 + nr, w, h)
-    stream = hevc.encode_hevc_iframe_bypass_tiled(
+    stream = hevc_fx.encode_hevc_iframe_bypass_tiled(
         w, h, y.tobytes(), cb.tobytes(), cr.tobytes(), nc, nr, lf, wpp=True)
     got = decode_hevc_intra_stream(stream)
     assert len(got) == 1
@@ -1917,10 +1919,10 @@ def test_tiles_wpp_wire_differs_from_tiles_only():
     """The combined wire must actually change the substream layout
     (more substreams: one per row per tile), not just the PPS flag."""
     y, cb, cr = _tile_fixture(3, 96, 64)
-    comb = hevc.encode_hevc_iframe_bypass_tiled(
+    comb = hevc_fx.encode_hevc_iframe_bypass_tiled(
         96, 64, y.tobytes(), cb.tobytes(), cr.tobytes(), 2, 2, True,
         wpp=True)
-    tiles = hevc.encode_hevc_iframe_bypass_tiled(
+    tiles = hevc_fx.encode_hevc_iframe_bypass_tiled(
         96, 64, y.tobytes(), cb.tobytes(), cr.tobytes(), 2, 2, True)
     assert len(comb) > len(tiles)  # 8 substreams vs 4 → more entry points
     for s in (comb, tiles):
@@ -1935,7 +1937,7 @@ def test_libde265_still_lacks_the_combined_path():
     future libde265 decodes this bit-exactly, this test flags so the
     arbitration can be upgraded to a direct cross-pin."""
     y, cb, cr = _tile_fixture(7, 96, 64)
-    stream = hevc.encode_hevc_iframe_bypass_tiled(
+    stream = hevc_fx.encode_hevc_iframe_bypass_tiled(
         96, 64, y.tobytes(), cb.tobytes(), cr.tobytes(), 2, 2, True,
         wpp=True)
     try:

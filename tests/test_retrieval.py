@@ -3,10 +3,46 @@ rational-path ranking agreement, and plan-shape guarantees."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_lake_skyfit_spark.llm import retrieval
+
+
+def bm25_numpy_mirror(
+    corpus: list[tuple[int, str]], queries: list[tuple[int, list[str]]], k: int = 5
+) -> list[tuple[int, int, float]]:
+    """Independent sequential mirror of the log-idf path (tests only)."""
+    import collections
+
+    toks = {d: [t for t in text.split() if t] for d, text in corpus}
+    n = len(corpus)
+    totlen = sum(len(w) for w in toks.values())
+    avgdl = totlen / n
+    dfreq: collections.Counter = collections.Counter()
+    for w in toks.values():
+        dfreq.update(set(w))
+    out: list[tuple[int, int, float]] = []
+    k1, b = 1.2, 0.75
+    for qid, terms in queries:
+        scores: dict[int, float] = {}
+        for d, w in toks.items():
+            tfs = collections.Counter(w)
+            s = 0.0
+            for t in set(terms):
+                tf = tfs.get(t, 0)
+                if not tf:
+                    continue
+                idf = math.log(1 + (n - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
+                s += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(w) / avgdl))
+            if s > 0:
+                scores[d] = s
+        top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        out.extend((qid, d, s) for d, s in top)
+    return out
+
 
 CORPUS = [
     (0, "spark join fast table"),
@@ -41,7 +77,7 @@ def test_log_idf_matches_numpy_mirror(spark, frames):
     }
     want = {
         (qid, did): s
-        for qid, did, s in retrieval.bm25_numpy_mirror(CORPUS, QUERIES, k=3)
+        for qid, did, s in bm25_numpy_mirror(CORPUS, QUERIES, k=3)
     }
     assert set(got) == set(want)
     for key, s in want.items():
