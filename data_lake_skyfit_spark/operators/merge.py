@@ -9,7 +9,7 @@ tables (normalize_zendesk.py:723), and TRUNCATE+INSERT full refresh
 (normalize_evo_members_v2.py:101-115).
 
 Spark-first realization, parquet-native (no Delta/Iceberg jars): the
-same semantics are built from one join + a partition-aware rewrite:
+same semantics are built from one join + a scoped rewrite:
 
 - full-outer-join target⟷source on the key once, as Delta Lake's MERGE
   rewrite does, with a presence flag on each side; every column picks
@@ -18,17 +18,24 @@ same semantics are built from one join + a partition-aware rewrite:
 - for partitioned tables only the partitions containing source keys are
   rewritten (dynamic partition overwrite) — the 100 TB path: merging a
   day of entries rewrites one year partition's touched files, not the
-  table;
-- writes go to a temp dir then swap, so a failed job never corrupts the
-  table (the transactional-commit property Postgres gave the reference).
+  table; unpartitioned tables past `prune_min_bytes` rewrite only the
+  files whose footer key range meets the source;
+- every write commits one way (`ParquetTable._commit`): the new version
+  is built in a sibling directory, untouched files are carried in as
+  hardlinks, and the table path — a symlink — is swapped onto it with
+  one `os.replace`, as Delta Lake commits by swapping one pointer. A
+  failed or crashed job leaves the old version readable (the
+  transactional-commit property Postgres gave the reference), and the
+  table path stays a plain parquet directory to any reader.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -322,10 +329,30 @@ def touched_by_key_ranges(source: DataFrame, key: str, ranges) -> set | None:
     }
 
 
+def _await_tasks(spark: SparkSession, group: str | None, since: set[int]) -> None:
+    """Wait, at most 30 s, until no stage of a job that `group` started
+    after the jobs in `since` has an active task. A cancelled job fails
+    on the driver before its killed tasks stop, and those tasks can still
+    write under the job's output directory."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group)) - since
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline:
+        infos = [tracker.getJobInfo(j) for j in jobs]
+        stages = [tracker.getStageInfo(s) for i in infos if i for s in i.stageIds]
+        if not any(s and s.numActiveTasks for s in stages):
+            return
+        time.sleep(0.1)
+
+
 @dataclass
 class ParquetTable:
     """A keyed, optionally partitioned parquet table with MERGE/overwrite
-    semantics. The unit of storage for STG and CORE layers."""
+    semantics. The unit of storage for STG and CORE layers.
+
+    `path` is a relative symlink to the live version, a sibling directory
+    `<path>__v<hex>` holding a plain (hive-partitioned) parquet dataset;
+    `_commit` is the only write that makes data visible."""
 
     path: str
     key: Sequence[str]
@@ -338,15 +365,12 @@ class ParquetTable:
     prune_min_bytes: int = 64 * 1024 * 1024
 
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS")) or any(
-            n.endswith(".parquet") or n.startswith(("part-", "year=", "scope="))
-            for n in (os.listdir(self.path) if os.path.isdir(self.path) else ())
-        )
+        return os.path.islink(self.path.rstrip("/"))
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
 
-    # -- write paths --------------------------------------------------------
+    # -- the commit ---------------------------------------------------------
 
     def _write(self, df: DataFrame, path: str) -> None:
         w = df.write.mode("overwrite")
@@ -354,99 +378,106 @@ class ParquetTable:
             w = w.partitionBy(*self.partition_by)
         w.parquet(path)
 
-    def _write_tmp(self, df: DataFrame) -> str:
-        """Write `df` to a fresh scratch sibling of the table and return
-        its path; a failed or cancelled write leaves no scratch dir."""
-        tmp = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
+    def _commit(
+        self, df: DataFrame, carry: Callable[[str], Iterable[str]] | None = None
+    ) -> None:
+        """Make `df`, plus the live files `carry(new)` lists (relative to
+        the table), the table's next version:
+
+        1. Spark writes `df` into a fresh sibling `new` = `<path>__v<hex>`;
+        2. each carried file is hardlinked into `new` at the same place;
+        3. a relative symlink to `new` (the lake can move) is made inside
+           `new` and `os.replace`d onto `path` — the one atomic step;
+        4. the previous version directory is removed.
+
+        A crash before step 3 leaves the old version live, after it the
+        new one; `vacuum` reclaims what it leaves behind. A failed step
+        removes `new` once the write job's tasks have stopped.
+        """
+        base = self.path.rstrip("/")
+        new = f"{base}__v{uuid.uuid4().hex[:12]}"
+        link = os.path.join(new, ".link")  # resolves against its final dir
+        old = os.path.join(os.path.dirname(base), os.readlink(base)) if self.exists() else None
+        spark = df.sparkSession
+        group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        jobs_before = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
         try:
-            self._write(df, tmp)
+            self._write(df, new)
+            for rel in carry(new) if carry else ():
+                dst = os.path.join(new, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.link(os.path.join(base, rel), dst)
+            os.symlink(os.path.basename(new), link)
+            try:
+                os.replace(link, base)
+            except IsADirectoryError:
+                if os.listdir(base):
+                    raise IsADirectoryError(
+                        f"{base} is a plain directory (the pre-link table "
+                        "layout): move it aside and rewrite the table"
+                    )
+                os.rmdir(base)  # an empty directory holds no table
+                os.replace(link, base)
         except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
+            _await_tasks(spark, group, jobs_before)
+            shutil.rmtree(new, ignore_errors=True)
             raise
-        return tmp
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+
+    def _other_partitions(self, new: str) -> list[str]:
+        """Every live file under a partition directory the write to `new`
+        did not produce — the carry of a partition-scoped merge."""
+        depth = len(self.partition_by)
+        written = set(leaf_dirs(new, depth))
+        return [
+            os.path.relpath(os.path.join(dp, f), self.path)
+            for rel in leaf_dirs(self.path, depth)
+            if rel not in written
+            for dp, _, fs in os.walk(os.path.join(self.path, rel))
+            for f in fs
+        ]
 
     def overwrite(self, df: DataFrame) -> None:
         """Full refresh — the reference's TRUNCATE + INSERT (K5). In
         Spark there are no indexes to drop/recreate; the write IS the
         bulk path."""
-        self._swap_write(df)
-
-    def _partition_dirs(self, root: str) -> list[str]:
-        return leaf_dirs(root, len(self.partition_by))
-
-    def _swap_write(self, df: DataFrame, *, partition_scoped: bool = False) -> None:
-        """Materialize to a temp dir, then atomically swap into place.
-
-        Reading and overwriting the same parquet path in one lazy plan
-        is a self-destruction hazard; the temp+swap makes every merge a
-        safe, restartable commit.
-        """
-        tmp = self._write_tmp(df)
-        if partition_scoped and self.partition_by and os.path.isdir(self.path):
-            # Partition-scoped commit: move only rewritten partitions —
-            # every partition dir present in tmp IS a rewritten one (the
-            # merge plan filtered the target to touched partitions), so
-            # the on-disk listing is the authoritative move list.
-            for rel in self._partition_dirs(tmp):
-                dst = os.path.join(self.path, rel)
-                src = os.path.join(tmp, rel)
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(src, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            if os.path.isdir(self.path):
-                back = f"{self.path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(self.path, back)
-                os.rename(tmp, self.path)
-                shutil.rmtree(back, ignore_errors=True)
-            else:
-                os.rename(tmp, self.path)
+        self._commit(df)
 
     def vacuum(self, *, min_age_s: int = 3600) -> list[str]:
-        """Remove stale `__tmp_*` / `__old_*` siblings left by swaps
-        that crashed mid-commit (the swap itself is atomic — the
-        crash-injection test proves no data loss — but an interrupted
-        run can leave orphaned scratch dirs that cost storage and
-        confuse listings; the reference's VACUUM-ish maintenance is
-        optimize_storage.py's cleanup section). Returns removed paths.
-        Never touches the live table dir, and skips scratch dirs
-        modified within `min_age_s` seconds — a concurrent writer's
-        in-flight tmp dir must not be destroyed mid-commit."""
-        import time
+        """Remove every `<path>__*` sibling directory that is not the live
+        version — versions left by crashed or replaced commits (the
+        reference's VACUUM-ish maintenance is optimize_storage.py's
+        cleanup section). Returns the removed paths.
 
+        A directory whose newest mtime, of itself or anything in it, is
+        within `min_age_s` seconds is kept: it may be a concurrent
+        writer's version in flight. Adding a hardlink moves the
+        directory's mtime, so a version built from old-mtime hardlinks
+        counts as fresh."""
         base = self.path.rstrip("/")
         parent, name = os.path.dirname(base), os.path.basename(base)
-        removed: list[str] = []
         if not os.path.isdir(parent):
-            return removed
+            return []
+        live = os.path.join(parent, os.readlink(base)) if self.exists() else None
         cutoff = time.time() - min_age_s
-        for entry in os.listdir(parent):
-            full = os.path.join(parent, entry)
-            if (
-                os.path.isdir(full)
-                and full != base
-                and (
-                    entry.startswith(f"{name}__tmp_")
-                    or entry.startswith(f"{name}__old_")
+        removed: list[str] = []
+        with os.scandir(parent) as entries:
+            siblings = [e.path for e in entries if e.name.startswith(f"{name}__")]
+        for full in siblings:
+            if full == live or os.path.islink(full) or not os.path.isdir(full):
+                continue
+            try:
+                newest = max(
+                    os.lstat(os.path.join(dp, n)).st_mtime
+                    for dp, ds, fs in os.walk(full)
+                    for n in (".", *ds, *fs)
                 )
-            ):
-                try:
-                    newest = max(
-                        (
-                            os.path.getmtime(os.path.join(dp, f))
-                            for dp, _, fs in os.walk(full)
-                            for f in fs
-                        ),
-                        default=os.path.getmtime(full),
-                    )
-                except OSError:
-                    # The dir vanished mid-scan — a concurrent writer
-                    # just committed or cleaned it. Leave it alone.
-                    continue
-                if newest > cutoff:
-                    continue  # possibly a live writer's scratch dir
+            except (OSError, ValueError):
+                # Vanished mid-scan — a concurrent writer just committed
+                # or cleaned it. Leave it alone.
+                continue
+            if newest <= cutoff:
                 shutil.rmtree(full, ignore_errors=True)
                 removed.append(full)
         return removed
@@ -486,7 +517,7 @@ class ParquetTable:
             df = df.repartition(int(n_files), *self.partition_by)
         else:
             df = df.repartition(int(n_files))
-        self._swap_write(df)
+        self._commit(df)
 
     def stats(self, spark: SparkSession) -> dict:
         """File-level health report (scripts/health_check.ps1 storage
@@ -512,7 +543,7 @@ class ParquetTable:
             self.overwrite(df)
             return
         kept = self.read(spark).filter(f"NOT ({condition})")
-        self._swap_write(kept.unionByName(df.filter(condition)))
+        self._commit(kept.unionByName(df.filter(condition)))
 
     # -- MERGE --------------------------------------------------------------
 
@@ -540,43 +571,6 @@ class ParquetTable:
             return None
         untouched = [f for f, *_ in ranges if f not in touched]
         return sorted(touched), untouched
-
-    def _commit_file_pruned(self, tmp: str, untouched: list[str]) -> None:
-        """Atomic commit of a file-pruned merge: build the next table
-        dir from hardlinks to every untouched data file (same inode —
-        zero copy, mtimes preserved) plus the freshly written files
-        from `tmp`, then swap dirs exactly like a full rewrite.
-
-        Hardlinks carry the ORIGINAL files' old mtimes (code-review
-        r3), which would defeat vacuum()'s newest-mtime recency guard
-        for in-flight scratch dirs — so a fresh `_inflight` marker file
-        is written FIRST into the commit dir, and into the live dir
-        just before the rename pair (its `__old_` incarnation inherits
-        the marker). Hadoop-style readers ignore underscore-prefixed
-        files, and the marker is removed once the swap lands.
-        """
-        commit = f"{self.path.rstrip('/')}__tmp_{uuid.uuid4().hex[:8]}"
-        os.makedirs(commit)
-        with open(os.path.join(commit, "_inflight"), "w") as fh:
-            fh.write("file-pruned merge commit in progress\n")
-        for f in untouched:
-            os.link(f, os.path.join(commit, os.path.basename(f)))
-        for name in os.listdir(tmp):
-            src = os.path.join(tmp, name)
-            if os.path.isfile(src) and not name.startswith("."):
-                shutil.move(src, os.path.join(commit, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-        back = f"{self.path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-        with open(os.path.join(self.path, "_inflight"), "w") as fh:
-            fh.write("swap in progress\n")
-        os.rename(self.path, back)
-        os.rename(commit, self.path)
-        for leftover in ("_inflight",):
-            try:
-                os.remove(os.path.join(self.path, leftover))
-            except OSError:
-                pass
-        shutil.rmtree(back, ignore_errors=True)
 
     def merge(
         self,
@@ -614,7 +608,7 @@ class ParquetTable:
 
         spark = source.sparkSession
         if not self.exists():
-            self._write(source, self.path)
+            self._commit(source)
             return
 
         # Unpartitioned tables: file-level pruned rewrite. Only files
@@ -631,17 +625,18 @@ class ParquetTable:
                 pr = self._touched_files(source)
                 if pr is not None:
                     touched, untouched = pr
+                    kept = [os.path.relpath(f, self.path) for f in untouched]
                     if not touched:
                         # Pure-insert batch: no existing file can hold a
                         # matching key — append without reading the table.
                         _, src = align_schemas(self.read(spark).limit(0), source)
-                        self._commit_file_pruned(self._write_tmp(src), untouched)
+                        self._commit(src, lambda new: kept)
                         return
                     if untouched:
                         tsub = spark.read.parquet(*touched)
                         tsub, src = align_schemas(tsub, source)
                         merged = merge_rows(tsub, src, keys, mode, update_subset, order)
-                        self._commit_file_pruned(self._write_tmp(merged), untouched)
+                        self._commit(merged, lambda new: kept)
                         return
                     # touched == every file: fall through to full rewrite
 
@@ -649,14 +644,16 @@ class ParquetTable:
         target, source = align_schemas(target, source)
 
         # Prune the rewrite to partitions the source actually touches
-        # (see partition_scope for the NULL and key-migration rules).
-        partition_scoped = False
+        # (see partition_scope for the NULL and key-migration rules); the
+        # commit carries every other partition.
+        carry = None
         if self.partition_by:
             partition_scoped, cond = partition_scope(
                 target, source, keys, self.partition_by
             )
             if partition_scoped:
                 target = target.filter(cond)
+                carry = self._other_partitions
 
         merged = merge_rows(target, source, keys, mode, update_subset, order)
-        self._swap_write(merged, partition_scoped=partition_scoped)
+        self._commit(merged, carry)

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from ..sources import bronze
 from ..sources.watermarks import WatermarkStore
 from ..specs.base import ChildSpec, EntitySpec
-from .dedupe import latest_wins
 from .merge import ParquetTable
 
 __all__ = ["Lakehouse"]
@@ -118,21 +117,14 @@ class Lakehouse:
 
     # -- STG → CORE ---------------------------------------------------------
 
-    def _deduped_stg(self, spec: EntitySpec) -> DataFrame:
-        stg = self.stg_table(spec).read(self.spark)
-        keys = list(spec.stg_key) + (["scope"] if spec.scoped else [])
-        order_col = (
-            F.col(f"raw.{spec.dedupe_order}")
-            if spec.dedupe_order not in stg.columns
-            else F.col(spec.dedupe_order)
-        )
-        # W1: keep-newest before every CORE normalize
-        # (normalize_pipedrive.py:122-133).
-        return latest_wins(stg, keys, [order_col], tie_breakers=[F.col("_source_file")])
-
     def normalize_core(self, spec: EntitySpec, *, full_refresh: bool = False) -> None:
-        """Typed CORE projection + children (the transformer stage)."""
-        stg = self._deduped_stg(spec)
+        """Typed CORE projection + children (the transformer stage).
+
+        STG is read as is: its MERGE keeps it unique on the STG key plus
+        scope, newest row per key (the reference's W1 keep-newest CTE,
+        normalize_pipedrive.py:122-133), and the audit's
+        `stg_duplicate_keys` check verifies that."""
+        stg = self.stg_table(spec).read(self.spark)
 
         cols = [expr.alias(name) for name, expr in spec.columns().items()]
         if spec.derived_key is not None:

@@ -128,7 +128,8 @@ def test_deleted_stg_table_reloads_every_run(spark, evo_lake, monkeypatch):
     stg_path = os.path.join(evo_lake.root, "stg", "evo_members")
     keys_before = stg_keys()
     core_before = evo_lake.read("core", "evo_members").count()
-    shutil.rmtree(stg_path)
+    shutil.rmtree(os.path.realpath(stg_path))
+    os.remove(stg_path)
 
     read_runs = []
     real = Lakehouse.load_stg
@@ -184,19 +185,22 @@ def test_entity_failure_fails_fast(spark, evo_lake, monkeypatch):
         run_daily(evo_lake, sources=("evo",), full_refresh=True)
     assert audits == []
     for layer in ("stg", "core"):
-        names = os.listdir(os.path.join(evo_lake.root, layer))
-        assert not [n for n in names if "__tmp_" in n or "__old_" in n], names
-        for n in names:
-            assert spark.read.parquet(os.path.join(evo_lake.root, layer, n)).count() > 0, n
+        d = os.path.join(evo_lake.root, layer)
+        names = set(os.listdir(d))
+        links = {n for n in names if os.path.islink(os.path.join(d, n))}
+        # every entry is a live table link or its target, nothing else
+        assert names == links | {os.readlink(os.path.join(d, n)) for n in links}, names
+        for n in links:
+            assert spark.read.parquet(os.path.join(d, n)).count() > 0, n
 
 
 def test_failed_write_leaves_no_scratch_dir(spark, tmp_path):
     """A MERGE whose write job fails keeps the table as it was and
-    removes its `__tmp_*` scratch dir."""
+    removes its unfinished version dir."""
     t = ParquetTable(str(tmp_path / "t"), ["id"])
     t.overwrite(spark.range(3).select("id", F.lit(0).alias("v")))
     bad = spark.range(1).select("id", F.raise_error(F.lit("boom")).cast("int").alias("v"))
     with pytest.raises(Exception, match="boom"):
         t.merge(bad)
-    assert os.listdir(tmp_path) == ["t"]
+    assert sorted(os.listdir(tmp_path)) == sorted(["t", os.readlink(t.path)])
     assert sorted(r["v"] for r in t.read(spark).collect()) == [0, 0, 0]

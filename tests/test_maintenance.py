@@ -128,19 +128,21 @@ def test_vacuum_removes_only_stale_scratch_dirs(spark, tmp_path):
 
     t = ParquetTable(str(tmp_path / "t"), ["id"])
     t.overwrite(spark.range(10).select(F.col("id"), F.lit(1).alias("v")))
-    # Simulate crashed-swap leftovers plus an unrelated sibling table.
-    stale1 = str(tmp_path / "t__tmp_deadbeef")
-    stale2 = str(tmp_path / "t__old_cafebabe")
+    live = str(tmp_path / os.readlink(t.path))
+    # Simulate crashed-commit leftovers plus an unrelated sibling table.
+    stale1 = str(tmp_path / "t__vdeadbeef")
+    stale2 = str(tmp_path / "t__vcafebabe")
     other = str(tmp_path / "t2")
     for d in (stale1, stale2, other):
         os.makedirs(d)
-    # Default min_age protects a concurrent writer's fresh scratch dir:
+    # Default min_age protects a concurrent writer's fresh version dir:
     assert t.vacuum() == []
     assert os.path.isdir(stale1)
     removed = t.vacuum(min_age_s=0)
     assert sorted(removed) == sorted([stale1, stale2])
     assert not os.path.isdir(stale1) and not os.path.isdir(stale2)
     assert os.path.isdir(other)  # unrelated dirs untouched
+    assert os.path.isdir(live)  # the live version untouched
     assert t.read(spark).count() == 10  # live data untouched
 
 

@@ -9,9 +9,11 @@ mtimes, not just results.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_lake_skyfit_spark.operators.merge import ParquetTable
@@ -75,66 +77,154 @@ def test_partition_filter_prunes_merge_scan(spark, tmp_path):
     assert "(year" in plan.split("PartitionFilters:", 1)[1].splitlines()[0]
 
 
-def test_swap_write_crash_never_loses_rows(spark, tmp_path, monkeypatch):
-    """Crash-injection (VERDICT r1 #8): kill the commit at every stage
-    boundary of the temp+swap and assert the table still reads back
-    either the OLD state or the NEW state — never a partial one, never
-    lost rows. This is the transactional property Postgres gave the
-    reference's ON-CONFLICT upserts."""
-    import os
-    import shutil as _shutil
+class _Boom(RuntimeError):
+    pass
 
+
+_SCHEMA = "id long, year int, v double"
+_BASE = [(i, 2020 + i % 3, float(i)) for i in range(60)]
+#: kind -> (ParquetTable options, builds the old version, source of the merge)
+_COMMITS = {
+    "full": ({}, True, [(i, 2020 + i % 3, -1.0) for i in range(0, 60, 7)] + [(99, 2021, 9.0)]),
+    "partition": ({"partition_by": ["year"]}, True, [(i, 2021, -1.0) for i in range(1, 60, 3)]),
+    "pruned": ({"prune_min_bytes": 0}, True, [(i, 2020, -1.0) for i in range(3, 9)]),
+    "first": ({}, False, _BASE),
+}
+#: step -> what raises: right after the write, at the symlink (so after
+#: the hardlinks), at os.replace (after the symlink) and at the old
+#: version's removal (after os.replace)
+_STEPS = ("write", "links", "symlink", "replace")
+
+
+def _rows(t, spark) -> set:
+    if not t.exists():
+        return set()
+    return {tuple(r) for r in t.read(spark).select("id", "year", "v").collect()}
+
+
+@pytest.mark.parametrize("kind", sorted(_COMMITS))
+def test_commit_crash_reads_old_or_new_version(spark, tmp_path, monkeypatch, kind):
+    """Crash-injection: kill the commit at each step — after the write,
+    after the hardlinks, after the symlink, after os.replace — with no
+    cleanup running (as a killed process runs none). The table reads back
+    exactly the old rows before the os.replace and exactly the new rows
+    after it, and vacuum(min_age_s=0) then leaves only the live version.
+    This is the transactional property Postgres gave the reference's
+    ON-CONFLICT upserts."""
     from data_lake_skyfit_spark.operators import merge as merge_mod
-    from data_lake_skyfit_spark.operators.merge import ParquetTable
 
-    base_rows = {(i, float(i)) for i in range(20)}
-    delta_rows = {(i, float(i) + 100.0) for i in range(0, 20, 4)}
-    merged_rows = {(i, v + 100.0 if i % 4 == 0 else v) for i, v in base_rows}
+    opts, has_old, source = _COMMITS[kind]
+    old_rows = set(_BASE) if has_old else set()
+    new_rows = {r[0]: r for r in (_BASE if has_old else [])}
+    new_rows.update({r[0]: r for r in source})
+    new_rows = set(new_rows.values())
 
-    def build(path):
-        t = ParquetTable(path, ["id"])
-        t.overwrite(spark.createDataFrame(sorted(base_rows), "id long, v double"))
-        return t
+    real_write = ParquetTable._write
 
-    def read_set(t):
-        return {(r["id"], r["v"]) for r in t.read(spark).collect()}
+    def write_then_die(self, df, path):
+        real_write(self, df, path)
+        raise _Boom("after the write")
 
-    class Boom(RuntimeError):
-        pass
+    def die(*a, **k):
+        raise _Boom("injected")
 
-    # Crash point 1: after the tmp write, before any rename — old state intact.
-    t1 = build(str(tmp_path / "t1"))
-    real_rename = os.rename
+    real_rmtree = merge_mod.shutil.rmtree
 
-    def explode_rename(*a, **k):
-        raise Boom("injected before rename")
+    def killed_rmtree(path, *a, **k):
+        # A killed process removes nothing more. Removing the live
+        # version still happens, so a commit that deletes live data
+        # before the pointer moves fails the reads below.
+        if os.path.realpath(path) == os.path.realpath(root):
+            real_rmtree(path, *a, **k)
+        raise _Boom("killed")
 
-    monkeypatch.setattr(merge_mod.os, "rename", explode_rename)
-    try:
-        t1.merge(spark.createDataFrame(sorted(delta_rows), "id long, v double"))
-        raise AssertionError("expected injected crash")
-    except Boom:
-        pass
-    monkeypatch.setattr(merge_mod.os, "rename", real_rename)
-    assert read_set(t1) == base_rows  # untouched old state
+    for step in _STEPS:
+        os.makedirs(tmp_path / step)
+        root = str(tmp_path / step / "t")
+        t = ParquetTable(root, ["id"], **opts)
+        if has_old:
+            df = spark.createDataFrame(_BASE, _SCHEMA)
+            t.overwrite(df.repartitionByRange(4, "id") if kind == "pruned" else df)
+        with monkeypatch.context() as mp:
+            mp.setattr(merge_mod.shutil, "rmtree", killed_rmtree)
+            if step == "write":
+                mp.setattr(ParquetTable, "_write", write_then_die)
+            elif step == "links":
+                mp.setattr(merge_mod.os, "symlink", die)
+            elif step == "symlink":
+                mp.setattr(merge_mod.os, "replace", die)
+            # a first write has no old version to remove: it completes
+            crash = has_old or step != "replace"
+            with pytest.raises(_Boom) if crash else contextlib.nullcontext():
+                t.merge(spark.createDataFrame(source, _SCHEMA))
+        leftover = sorted(n for n in os.listdir(tmp_path / step) if n != "t")
+        if step == "links" and kind in ("partition", "pruned"):
+            # the crashed version holds the carried hardlinks
+            assert any(
+                os.stat(os.path.join(dp, f)).st_nlink > 1
+                for n in leftover
+                for dp, _, fs in os.walk(tmp_path / step / n)
+                for f in fs
+                if f.endswith(".parquet")
+            ), leftover
+        want = new_rows if step == "replace" else old_rows
+        assert _rows(t, spark) == want, (kind, step)
 
-    # Crash point 2: after the old dir is moved aside and the new dir
-    # renamed in (crash during old-state cleanup) — new state intact.
-    t2 = build(str(tmp_path / "t2"))
-    real_rmtree = _shutil.rmtree
+        t.vacuum(min_age_s=0)
+        live = ["t", os.readlink(root)] if t.exists() else []
+        assert sorted(os.listdir(tmp_path / step)) == sorted(live), (kind, step)
+        assert _rows(t, spark) == want, (kind, step)
 
-    def explode_rmtree(path, *a, **k):
-        if "__old_" in str(path):
-            raise Boom("injected during old cleanup")
-        return real_rmtree(path, *a, **k)
 
-    monkeypatch.setattr(merge_mod.shutil, "rmtree", explode_rmtree)
-    try:
-        t2.merge(spark.createDataFrame(sorted(delta_rows), "id long, v double"))
-    except Boom:
-        pass
-    monkeypatch.setattr(merge_mod.shutil, "rmtree", real_rmtree)
-    assert read_set(t2) == merged_rows  # fully committed new state
+def _inodes(root: str) -> set[int]:
+    return {
+        os.stat(os.path.join(dp, f)).st_ino
+        for dp, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def test_plain_parquet_readers_see_exactly_the_live_table(spark, tmp_path):
+    """The table path reads as a plain parquet dataset (a benchmark check
+    reads CORE tables with pyarrow): after every kind of write,
+    pyarrow.dataset over `t.path` returns exactly `t.read(spark)`."""
+    import dataclasses
+
+    import pyarrow.dataset as ds
+
+    def check(t):
+        got = ds.dataset(t.path, format="parquet", partitioning="hive").to_table()
+        plain = sorted(tuple(r[c] for c in ("id", "year", "v")) for r in got.to_pylist())
+        engine = sorted(tuple(r) for r in t.read(spark).select("id", "year", "v").collect())
+        assert plain == engine and plain
+
+    def rows(ids, v):
+        return spark.createDataFrame([(i, 2020 + i % 3, v) for i in ids], _SCHEMA)
+
+    flat = ParquetTable(str(tmp_path / "flat"), ["id"])
+    flat.merge(rows(range(400), 0.0).repartitionByRange(4, "id"))  # first write
+    check(flat)
+    before = _inodes(flat.path)
+    dataclasses.replace(flat, prune_min_bytes=0).merge(rows(range(10, 20), 2.0))
+    assert len(before & _inodes(flat.path)) == 3  # file-pruned: untouched files carried
+    check(flat)
+    flat.merge(rows(range(0, 500, 5), 1.0))  # below the prune floor: full rewrite
+    check(flat)
+    flat.compact(spark, n_files=2)
+    check(flat)
+
+    part = ParquetTable(str(tmp_path / "part"), ["id"], partition_by=["year"])
+    part.overwrite(rows(range(300), 0.0))
+    check(part)
+    untouched = _inodes(os.path.join(part.path, "year=2020"))
+    part.merge(rows(range(1, 300, 3), 1.0))  # touches year=2021 only
+    assert untouched == _inodes(os.path.join(part.path, "year=2020"))
+    check(part)
+    part.replace_where(rows(range(2, 40, 3), 3.0), "year = 2022")
+    check(part)
+    part.compact(spark, n_files=1)
+    check(part)
 
 
 def test_merge_key_migrating_partitions_leaves_no_stale_duplicate(spark, tmp_path):
@@ -268,9 +358,11 @@ def test_unpartitioned_merge_null_keys_and_subset_mode(spark, tmp_path):
 
 
 def test_pruned_commit_dir_survives_concurrent_vacuum(spark, tmp_path, monkeypatch):
-    """code-review r3: hardlinked untouched files carry OLD mtimes, so
-    a vacuum racing the commit must be held off by the fresh _inflight
-    marker, not fooled into reclaiming the in-flight dir."""
+    """code-review r3: hardlinked untouched files carry OLD mtimes, so a
+    vacuum racing a file-pruned commit must not take the in-flight
+    version for a stale one. Every file in it is aged past the vacuum's
+    window here; the directory mtimes, moved by adding the hardlinks,
+    alone keep it."""
     import data_lake_skyfit_spark.operators.merge as m
 
     root = str(tmp_path / "race")
@@ -280,49 +372,28 @@ def test_pruned_commit_dir_survives_concurrent_vacuum(spark, tmp_path, monkeypat
         .select(F.col("id"), F.lit(0).alias("v"))
         .repartitionByRange(5, "id")
     )
-    time.sleep(1.1)
-
+    old = time.time() - 7200
+    real_symlink = m.os.symlink
     observed = {}
-    orig = m.ParquetTable._commit_file_pruned
 
-    def racing_commit(self, tmp, untouched):
-        # simulate: commit dir fully built (old-mtime hardlinks), then a
-        # concurrent vacuum fires before the swap
-        commit_holder = {}
-        orig_makedirs = os.makedirs
+    def vacuum_before_flip(target, link):
+        # the version is fully built: written files plus carried hardlinks
+        inflight = os.path.dirname(link)
+        files = [os.path.join(dp, f) for dp, _, fs in os.walk(inflight) for f in fs]
+        for f in files:
+            os.utime(f, (old, old))
+        observed["inflight"] = inflight
+        observed["carried"] = sum(os.stat(f).st_nlink > 1 for f in files)
+        observed["removed"] = t.vacuum(min_age_s=3600)
+        real_symlink(target, link)
 
-        def spy_makedirs(path, *a, **k):
-            if "__tmp_" in os.path.basename(path):
-                commit_holder["p"] = path
-            return orig_makedirs(path, *a, **k)
-
-        monkeypatch.setattr(os, "makedirs", spy_makedirs)
-        try:
-            orig(self, tmp, untouched)
-        finally:
-            monkeypatch.setattr(os, "makedirs", orig_makedirs)
-        observed["commit"] = commit_holder.get("p")
-
-    monkeypatch.setattr(m.ParquetTable, "_commit_file_pruned", racing_commit)
+    monkeypatch.setattr(m.os, "symlink", vacuum_before_flip)
     t.merge(spark.range(100, 200).select(F.col("id"), F.lit(-1).alias("v")))
-    monkeypatch.setattr(m.ParquetTable, "_commit_file_pruned", orig)
+    monkeypatch.setattr(m.os, "symlink", real_symlink)
 
-    # The marker protocol: a freshly built commit dir always holds a
-    # just-written _inflight file, so vacuum's newest-mtime check sees
-    # recent activity even though every data file is an old hardlink.
-    # Verify directly on a reconstructed commit dir:
-    commit = f"{root}__tmp_test"
-    os.makedirs(commit)
-    with open(os.path.join(commit, "_inflight"), "w") as fh:
-        fh.write("x")
-    for n in os.listdir(root):
-        if n.endswith(".parquet"):
-            os.link(os.path.join(root, n), os.path.join(commit, n))
-    time.sleep(0.1)
-    removed = t.vacuum(min_age_s=3600)
-    assert commit not in removed and os.path.isdir(commit)
-    # and the live table carries no leftover marker after a real commit
-    assert not os.path.exists(os.path.join(root, "_inflight"))
+    assert observed["carried"] >= 4  # the merge took the file-pruned path
+    assert observed["removed"] == []
+    assert os.path.realpath(root) == observed["inflight"]
     out = t.read(spark)
     assert out.count() == 5000 and out.filter("v = -1").count() == 100
 
