@@ -1559,7 +1559,7 @@ _Z_INTERLEAVE_SQL = " + ".join(
     """,
     tags=("storage", "scale-path"),
     doc="Z-order (Morton) clustering layout (operators/scale.with_zorder — "
-    "the key OPTIMIZE ZORDER sorts by, versioned.compact(zorder_by=...)): "
+    "the key OPTIMIZE ZORDER sorts by, ParquetTable.compact(zorder_by=...)): "
     "orders interleave 8-bit bucket ordinates of (custkey, orderdate-days); "
     "a 'file' is a z-quadrant (top 4 interleaved bits — a pure map, no "
     "global sort in the plan), and the output is exactly what a manifest "

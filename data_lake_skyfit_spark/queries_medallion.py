@@ -266,30 +266,28 @@ def medallion_nested_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v1
     """,
     tags=("versioned", "time-travel"),
-    doc="Versioned-table manifest machinery under the driver hash check "
-    "(VERDICT r3 'What's missing' #3): build a VersionedParquetTable "
-    "from a pure function of `events` — overwrite v1 (event_id % 7 <> "
-    "0), MERGE v2 (event_id % 3 = 0 at doubled value: copy-on-write "
-    "inserts + updates), then TIME-TRAVEL read(v1) AFTER the merge "
-    "committed, read(v2), diff(v1, v2), and COMPACT (key-clustered "
-    "rewrite into one generation) + re-read — per-row output of all "
-    "four legs, so the manifest resolution, COW generation splice, CDC "
-    "feed AND the OPTIMIZE path are each hash-graded, not "
-    "pytest-asserted (compaction must be a pure layout change: its leg "
-    "hashes identical rows to v1_read under a different label). Oracle "
-    "is plain SQL replaying the same overwrite/upsert algebra. Doubling "
-    "a DOUBLE is an exponent bump (exact both engines); NULL values "
-    "stay 'unchanged' under null-safe compare on both sides.",
+    doc="Table versions under the driver hash check (VERDICT r3 "
+    "'What's missing' #3): build a ParquetTable that keeps every version "
+    "(retain_last=None) from a pure function of `events` — overwrite v0 "
+    "(event_id % 7 <> 0), MERGE v1 (event_id % 3 = 0 at doubled value: "
+    "inserts + updates), then TIME-TRAVEL read(v0) lazily, after v1 and "
+    "v2 committed, read(v1), diff(v0, v1), and COMPACT v2 (key-clustered "
+    "rewrite) + re-read — per-row output of all four legs, so the "
+    "version directories, the MERGE, the CDC feed AND the OPTIMIZE path "
+    "are each hash-graded, not pytest-asserted (compaction must be a "
+    "pure layout change: its leg hashes identical rows to v1_read under "
+    "a different label). Oracle is plain SQL replaying the same "
+    "overwrite/upsert algebra. Doubling a DOUBLE is an exponent bump "
+    "(exact both engines); NULL values stay 'unchanged' under null-safe "
+    "compare on both sides.",
 )
 def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.versioned import VersionedParquetTable
-
     root = tempfile.mkdtemp(prefix="skyfit_versioned_tt_")
-    t = VersionedParquetTable(path=root + "/events_versioned", key=("event_id",))
+    t = ParquetTable(root + "/events_versioned", ("event_id",), retain_last=None)
     base = (
         _t(spark, sf_dir, "events")
         # deterministic quarter of the table: the graded machinery is the
-        # manifest/COW/diff plumbing, not scan volume (bench r4)
+        # version/MERGE/diff plumbing, not scan volume (bench r4)
         .filter(F.col("event_id") % 4 == 1)
         .select(
             "event_id", "user_id", "event_type",
@@ -302,7 +300,7 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value", F.col("value") * 2
         )
     )
-    old_read = t.read(spark, v0)  # time travel: v0 resolved AFTER v1 committed
+    old_read = t.read(spark, v0)  # time travel: read lazily after v1 and v2 commit
     new_read = t.read(spark, v1)
     d = t.diff(spark, v0, v1, compare_cols=("value",))
 
@@ -350,8 +348,8 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(leg_diff)
         .unionByName(leg_compacted)
     )
-    # This query writes THREE generations (v0, COW merge, full compact)
-    # under a fresh mkdtemp per invocation; eagerly checkpointing the
+    # This query writes THREE versions (overwrite, merge, compact) under
+    # a fresh mkdtemp per invocation; eagerly checkpointing the
     # result lets the parquet tree be deleted NOW instead of leaking
     # tens of MB per verify/bench cycle (code-review r4). The caller
     # still collects lazily from the checkpointed blocks.

@@ -238,26 +238,19 @@ def stream_merge_sink(
     keys. The exactly-once contract of the reference's
     watermark+ON CONFLICT pipeline, with Spark holding the cursor.
 
-    Tables whose merge accepts `txn` (VersionedParquetTable) get a
-    (checkpoint-derived app id, batch_id) transaction per batch: a
-    batch redelivered after a crash between sink commit and checkpoint
-    advance is a manifest-level no-op instead of a redundant version —
-    keyed-MERGE idempotency already made replays SAFE; the txn makes
-    them FREE and keeps version history 1:1 with real batches.
+    Each batch merges as the transaction (checkpoint-derived app id,
+    batch_id) — `ParquetTable.merge`'s `txn`: a batch redelivered after a
+    crash between the sink commit and the checkpoint advance commits
+    nothing. Keyed-MERGE idempotency already made replays SAFE; the txn
+    makes them FREE and keeps the table's versions 1:1 with real batches.
     """
-    import inspect
-    import os as _os
-
-    accepts_txn = "txn" in inspect.signature(table.merge).parameters
-    app_id = f"stream:{_os.path.abspath(checkpoint_dir)}"
+    app_id = f"stream:{os.path.abspath(checkpoint_dir)}"
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        kwargs: dict = {"source_order": list(source_order)}
-        if accepts_txn:
-            kwargs["txn"] = (app_id, int(batch_id))
-        table.merge(batch_df, **kwargs)
+        if not batch_df.isEmpty():
+            table.merge(
+                batch_df, source_order=list(source_order), txn=(app_id, int(batch_id))
+            )
 
     q = (
         stream_df.writeStream.foreachBatch(merge_batch)

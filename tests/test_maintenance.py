@@ -129,9 +129,10 @@ def test_vacuum_removes_only_stale_scratch_dirs(spark, tmp_path):
     t = ParquetTable(str(tmp_path / "t"), ["id"])
     t.overwrite(spark.range(10).select(F.col("id"), F.lit(1).alias("v")))
     live = str(tmp_path / os.readlink(t.path))
-    # Simulate crashed-commit leftovers plus an unrelated sibling table.
+    # Simulate crashed-commit leftovers (one of the next version) plus an
+    # unrelated sibling table.
     stale1 = str(tmp_path / "t__vdeadbeef")
-    stale2 = str(tmp_path / "t__vcafebabe")
+    stale2 = str(tmp_path / "t__v1")
     other = str(tmp_path / "t2")
     for d in (stale1, stale2, other):
         os.makedirs(d)

@@ -11,7 +11,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from data_lake_skyfit_spark.operators.merge import MergeMode, ParquetTable
-from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
 
 KEYS = st.integers(min_value=0, max_value=6)
 ROW = st.tuples(KEYS, st.integers(min_value=0, max_value=99))
@@ -26,15 +25,12 @@ _SETTINGS = settings(
 
 
 def _make_table(kind, tmp):
-    """Three write paths share one contract: the plain swap table, the
-    same table with file-level pruning forced on (prune_min_bytes=0),
-    and the versioned table whose merges run the manifest range+bloom
-    COW path."""
-    if kind == "plain":
-        return ParquetTable(str(tmp), ["id"])
+    """Two write paths share one contract: the full-rewrite merge, and
+    the same table with file-level pruning forced on
+    (prune_min_bytes=0)."""
     if kind == "pruned":
         return ParquetTable(str(tmp), ["id"], prune_min_bytes=0)
-    return VersionedParquetTable(str(tmp), ["id"])
+    return ParquetTable(str(tmp), ["id"])
 
 
 def _run(spark, tmp, batches, mode, kind="plain"):
@@ -57,7 +53,7 @@ def _run(spark, tmp, batches, mode, kind="plain"):
     return got, state
 
 
-@pytest.mark.parametrize("kind", ["plain", "pruned", "versioned"])
+@pytest.mark.parametrize("kind", ["plain", "pruned"])
 @given(batches=BATCHES)
 @_SETTINGS
 def test_update_all_equals_dict_fold(spark, tmp_path_factory, kind, batches):
@@ -66,7 +62,7 @@ def test_update_all_equals_dict_fold(spark, tmp_path_factory, kind, batches):
     assert got == want
 
 
-@pytest.mark.parametrize("kind", ["plain", "pruned", "versioned"])
+@pytest.mark.parametrize("kind", ["plain", "pruned"])
 @given(batches=BATCHES)
 @_SETTINGS
 def test_insert_only_keeps_first(spark, tmp_path_factory, kind, batches):

@@ -89,10 +89,15 @@ _COMMITS = {
     "partition": ({"partition_by": ["year"]}, True, [(i, 2021, -1.0) for i in range(1, 60, 3)]),
     "pruned": ({"prune_min_bytes": 0}, True, [(i, 2020, -1.0) for i in range(3, 9)]),
     "first": ({}, False, _BASE),
+    # every version kept: v0 (half the rows) and v1 (all of them) must
+    # read back unchanged whatever step the commit of v2 dies at
+    "retained": ({"partition_by": ["year"], "retain_last": None}, True,
+                 [(i, 2021, -1.0) for i in range(1, 60, 3)]),
 }
 #: step -> what raises: right after the write, at the symlink (so after
-#: the hardlinks), at os.replace (after the symlink) and at the old
-#: version's removal (after os.replace)
+#: the hardlinks and `_commit.json`), at os.replace (after the symlink)
+#: and at the old version's removal (after os.replace; a table that
+#: keeps every version removes nothing, so its commit completes)
 _STEPS = ("write", "links", "symlink", "replace")
 
 
@@ -108,9 +113,11 @@ def test_commit_crash_reads_old_or_new_version(spark, tmp_path, monkeypatch, kin
     after the hardlinks, after the symlink, after os.replace — with no
     cleanup running (as a killed process runs none). The table reads back
     exactly the old rows before the os.replace and exactly the new rows
-    after it, and vacuum(min_age_s=0) then leaves only the live version.
-    This is the transactional property Postgres gave the reference's
-    ON-CONFLICT upserts."""
+    after it, and vacuum(min_age_s=0) then leaves only the kept versions.
+    With every version kept, each earlier version also reads back
+    unchanged, `versions()` never lists the crashed directory, and the
+    next commit takes the next number. This is the transactional
+    property Postgres gave the reference's ON-CONFLICT upserts."""
     from data_lake_skyfit_spark.operators import merge as merge_mod
 
     opts, has_old, source = _COMMITS[kind]
@@ -142,9 +149,12 @@ def test_commit_crash_reads_old_or_new_version(spark, tmp_path, monkeypatch, kin
         os.makedirs(tmp_path / step)
         root = str(tmp_path / step / "t")
         t = ParquetTable(root, ["id"], **opts)
+        if kind == "retained":
+            t.overwrite(spark.createDataFrame(_BASE[:30], _SCHEMA))
         if has_old:
             df = spark.createDataFrame(_BASE, _SCHEMA)
             t.overwrite(df.repartitionByRange(4, "id") if kind == "pruned" else df)
+        kept = {v: sorted(t.read(spark, v).collect()) for v in t.versions()}
         with monkeypatch.context() as mp:
             mp.setattr(merge_mod.shutil, "rmtree", killed_rmtree)
             if step == "write":
@@ -153,12 +163,12 @@ def test_commit_crash_reads_old_or_new_version(spark, tmp_path, monkeypatch, kin
                 mp.setattr(merge_mod.os, "symlink", die)
             elif step == "symlink":
                 mp.setattr(merge_mod.os, "replace", die)
-            # a first write has no old version to remove: it completes
-            crash = has_old or step != "replace"
+            # with no old version to remove, the commit completes
+            crash = step != "replace" or (has_old and "retain_last" not in opts)
             with pytest.raises(_Boom) if crash else contextlib.nullcontext():
                 t.merge(spark.createDataFrame(source, _SCHEMA))
         leftover = sorted(n for n in os.listdir(tmp_path / step) if n != "t")
-        if step == "links" and kind in ("partition", "pruned"):
+        if step == "links" and kind in ("partition", "pruned", "retained"):
             # the crashed version holds the carried hardlinks
             assert any(
                 os.stat(os.path.join(dp, f)).st_nlink > 1
@@ -170,8 +180,16 @@ def test_commit_crash_reads_old_or_new_version(spark, tmp_path, monkeypatch, kin
         want = new_rows if step == "replace" else old_rows
         assert _rows(t, spark) == want, (kind, step)
 
+        if kind == "retained":
+            # earlier versions intact, the crashed directory never listed,
+            # and the next commit takes the next number over its leftover
+            committed = [*kept, len(kept)] if step == "replace" else [*kept]
+            assert t.versions() == committed, step
+            assert {v: sorted(t.read(spark, v).collect()) for v in kept} == kept, step
+            assert t.overwrite(spark.createDataFrame(sorted(want), _SCHEMA)) == len(committed)
+
         t.vacuum(min_age_s=0)
-        live = ["t", os.readlink(root)] if t.exists() else []
+        live = ["t"] * t.exists() + [os.path.basename(t._dir(v)) for v in t.versions()]
         assert sorted(os.listdir(tmp_path / step)) == sorted(live), (kind, step)
         assert _rows(t, spark) == want, (kind, step)
 

@@ -200,15 +200,15 @@ def test_trigram_language_id_is_shuffle_free_map(spark, sf_dir, qreg):
 
 
 def test_versioned_diff_is_single_outer_join(spark, sf_dir, tmp_path):
-    """VersionedParquetTable.diff must be ONE full-outer hash join on
-    the key — never a window or an interval product; the manifest reads
-    feed it directly."""
+    """ParquetTable.diff between two kept versions must be ONE
+    full-outer hash join on the key — never a window or an interval
+    product; the version reads feed it directly."""
     from pyspark.sql import functions as F
 
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
+    from data_lake_skyfit_spark.operators.merge import ParquetTable
     from data_lake_skyfit_spark.tables import load_table
 
-    t = VersionedParquetTable(path=str(tmp_path / "vt"), key=("event_id",))
+    t = ParquetTable(str(tmp_path / "vt"), ("event_id",), retain_last=2)
     base = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("value").cast("double").alias("value")
     ).filter(F.col("event_id") < 2000)

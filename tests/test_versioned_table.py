@@ -1,16 +1,17 @@
-"""VersionedParquetTable: manifest-committed writes, time travel,
-copy-on-write partition merges, CDC diff between versions, vacuum
-retention, and crash tolerance of the commit protocol."""
+"""ParquetTable versions: numbered version directories, time travel,
+copy-on-write merges that share untouched files by hardlink, CDC feeds
+between versions, retention, writer transactions, and crash tolerance of
+the commit."""
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from data_lake_skyfit_spark.operators.merge import MergeMode
-from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
+from data_lake_skyfit_spark.operators.merge import MergeMode, ParquetTable, file_key_ranges
 
 
 def _rows(t, spark, version=None):
@@ -19,11 +20,12 @@ def _rows(t, spark, version=None):
     }
 
 
-def _mk(tmp_path, partitioned=True):
-    return VersionedParquetTable(
+def _mk(tmp_path, partitioned=True, **opts):
+    return ParquetTable(
         str(tmp_path / "t"),
         ["id"],
         ["year"] if partitioned else (),
+        **{"retain_last": None, **opts},
     )
 
 
@@ -31,27 +33,33 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, val string, year int")
 
 
+def _inodes(t, version, sub=""):
+    """(st_dev, st_ino) of the data files of `version` (under `sub`)."""
+    return {k for k, p in t._files(version).items() if f"{os.sep}{sub}{os.sep}" in p or not sub}
+
+
 def test_versions_accumulate_and_time_travel(spark, tmp_path):
     t = _mk(tmp_path)
-    v1 = t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024)]))
-    v2 = t.merge(_df(spark, [(2, "B", 2024), (3, "c", 2024)]))
-    assert (v1, v2) == (1, 2)
-    assert _rows(t, spark, v1) == {1: ("a", 2023), 2: ("b", 2024)}
-    assert _rows(t, spark, v2) == {1: ("a", 2023), 2: ("B", 2024), 3: ("c", 2024)}
-    # latest == v2
-    assert _rows(t, spark) == _rows(t, spark, v2)
+    v0 = t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024)]))
+    v1 = t.merge(_df(spark, [(2, "B", 2024), (3, "c", 2024)]))
+    assert (v0, v1) == (0, 1) and t.versions() == [0, 1]
+    assert os.readlink(t.path) == "t__v1"
+    assert _rows(t, spark, v0) == {1: ("a", 2023), 2: ("b", 2024)}
+    assert _rows(t, spark, v1) == {1: ("a", 2023), 2: ("B", 2024), 3: ("c", 2024)}
+    # latest == v1
+    assert _rows(t, spark) == _rows(t, spark, v1)
 
 
 def test_copy_on_write_partition_merge_shares_untouched_generations(spark, tmp_path):
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024)]))
-    m1 = t._manifest(1)["partitions"]
     t.merge(_df(spark, [(2, "B", 2024)]))  # touches only year=2024
-    m2 = t._manifest(2)["partitions"]
-    assert m2["year=2023"] == m1["year=2023"]  # untouched: same generation
-    assert m2["year=2024"] != m1["year=2024"]  # touched: rewritten
+    # untouched partition: the same files (hardlinks) in both versions
+    assert _inodes(t, 1, "year=2023") == _inodes(t, 0, "year=2023")
+    # touched partition: rewritten
+    assert not _inodes(t, 1, "year=2024") & _inodes(t, 0, "year=2024")
     # and the old version still reads the pre-merge state
-    assert _rows(t, spark, 1)[2] == ("b", 2024)
+    assert _rows(t, spark, 0)[2] == ("b", 2024)
 
 
 def test_merge_modes_match_contract(spark, tmp_path):
@@ -73,65 +81,62 @@ def test_diff_between_versions(spark, tmp_path):
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024)]))
     t.merge(_df(spark, [(2, "B", 2024), (3, "c", 2024)]))
-    d = {r["id"]: r["change_type"] for r in t.diff(spark, 1, 2).collect()}
+    d = {r["id"]: r["change_type"] for r in t.diff(spark, 0, 1).collect()}
     assert d == {2: "update", 3: "insert"}
     # reverse direction flips insert → delete
-    rd = {r["id"]: r["change_type"] for r in t.diff(spark, 2, 1).collect()}
+    rd = {r["id"]: r["change_type"] for r in t.diff(spark, 1, 0).collect()}
     assert rd == {2: "update", 3: "delete"}
 
 
 def test_vacuum_keeps_retained_versions_readable(spark, tmp_path):
-    t = _mk(tmp_path)
+    t = _mk(tmp_path, retain_last=2)
     for i in range(4):
-        t.merge(_df(spark, [(i, f"v{i}", 2020 + i)]))
-    removed = t.vacuum(retain_last=2, min_age_s=0)
-    assert t.versions() == [3, 4]
-    assert removed  # old manifests went away
-    # retained versions fully readable (every referenced gen kept)
-    assert len(_rows(t, spark, 3)) == 3
-    assert len(_rows(t, spark, 4)) == 4
-    # all remaining generation dirs are referenced by kept manifests
-    refd = set()
-    for v in (3, 4):
-        refd.update(t._manifest(v)["partitions"].values())
-    on_disk = set(os.listdir(t._data_dir))
-    assert on_disk <= refd
+        assert t.merge(_df(spark, [(i, f"v{i}", 2020 + i)])) == i
+    # the commit itself drops versions past the window
+    assert t.versions() == [2, 3]
+    assert sorted(os.listdir(tmp_path)) == ["t", "t__v2", "t__v3"]
+    assert t.vacuum(min_age_s=0) == []
+    # retained versions fully readable
+    assert len(_rows(t, spark, 2)) == 3
+    assert len(_rows(t, spark, 3)) == 4
+    with pytest.raises(FileNotFoundError):
+        t.read(spark, 1)
+    with pytest.raises(ValueError):
+        dataclasses.replace(t, retain_last=0)
 
 
 def test_crashed_commit_leaves_previous_version_intact(spark, tmp_path):
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023)]))
     before = _rows(t, spark)
-    # Simulate a crash AFTER data write but BEFORE the manifest commit:
-    # an orphan generation dir appears, no manifest references it.
-    gen, _parts = t._write_generation(_df(spark, [(9, "zzz", 2030)]))
-    assert t.latest_version() == 1
+    # Simulate a crash AFTER the data write but BEFORE the symlink swap:
+    # a version dir numbered above the live one appears.
+    crashed = t._dir(1)
+    t._write(_df(spark, [(9, "zzz", 2030)]), crashed)
+    assert t.latest_version() == 0 and t.versions() == [0]
     assert _rows(t, spark) == before  # readers unaffected
+    with pytest.raises(FileNotFoundError):
+        t.read(spark, 1)
     # The default min-age guard protects a possibly-in-flight writer's
-    # scratch generation; with the guard waived, vacuum reclaims it.
-    t.vacuum(retain_last=5)
-    assert os.path.isdir(t._gen_dir(gen))
-    t.vacuum(retain_last=5, min_age_s=0)
-    assert not os.path.isdir(t._gen_dir(gen))
-
-
-def test_manifest_pointer_fallback(spark, tmp_path):
-    t = _mk(tmp_path)
-    t.merge(_df(spark, [(1, "a", 2023)]))
-    t.merge(_df(spark, [(2, "b", 2023)]))
-    # Crash between manifest write and pointer swap: pointer one behind.
-    os.remove(os.path.join(t.path, "_LATEST"))
-    assert t.latest_version() == 2  # falls back to highest manifest
-    assert len(_rows(t, spark)) == 2
+    # version dir; with the guard waived, vacuum reclaims it.
+    assert t.vacuum() == []
+    assert os.path.isdir(crashed)
+    assert t.vacuum(min_age_s=0) == [crashed]
+    # a leftover at the next number is replaced by the next commit
+    t._write(_df(spark, [(9, "zzz", 2030)]), crashed)
+    assert t.merge(_df(spark, [(2, "b", 2023)])) == 1
+    assert _rows(t, spark) == {1: ("a", 2023), 2: ("b", 2023)}
 
 
 def test_compact_collapses_to_one_generation(spark, tmp_path):
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023)]))
-    t.merge(_df(spark, [(2, "b", 2024)]))
-    v = t.compact(spark)
-    mapping = t._manifest(v)["partitions"]
-    assert len(set(mapping.values())) == 1
+    t.merge(_df(spark, [(2, "b", 2024)]))  # carries year=2023
+    v = t.compact(spark, n_files=1)
+    assert v == 2
+    # compaction rewrites every file: nothing is shared with v1
+    assert not _inodes(t, v) & _inodes(t, 1)
+    assert len(_inodes(t, v)) == 2  # one file per partition
     assert _rows(t, spark) == {1: ("a", 2023), 2: ("b", 2024)}
 
 
@@ -144,12 +149,12 @@ def test_schema_evolution_across_versions(spark, tmp_path):
     t.merge(wider)
     rows = {r["id"]: r for r in t.read(spark).collect()}
     assert rows[1]["score"] is None and rows[2]["score"] == 9.5
+    assert "score" not in t.read(spark, 0).columns
 
 
 def test_stream_merge_sink_into_versioned_table(spark, tmp_path):
-    """The streaming foreachBatch MERGE bridge is table-duck-typed: a
-    VersionedParquetTable sink gives every micro-batch its own
-    committed, time-travelable version."""
+    """The streaming foreachBatch MERGE bridge gives every micro-batch
+    its own committed, time-travelable version."""
     import json as _json
 
     from pyspark.sql import types as T
@@ -164,7 +169,7 @@ def test_stream_merge_sink_into_versioned_table(spark, tmp_path):
     )
     src, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
     os.makedirs(src)
-    t = VersionedParquetTable(str(tmp_path / "vt"), ["id"])
+    t = ParquetTable(str(tmp_path / "vt"), ["id"], retain_last=None)
 
     def land(name, rows):
         with open(os.path.join(src, name), "w") as f:
@@ -179,10 +184,10 @@ def test_stream_merge_sink_into_versioned_table(spark, tmp_path):
     run()
     land("b2.json", [(1, "A", 2023), (2, "b", 2024)])
     run()
-    assert t.latest_version() == 2
-    assert {r["id"]: r["val"] for r in t.read(spark, 1).collect()} == {1: "a"}
-    assert {r["id"]: r["val"] for r in t.read(spark, 2).collect()} == {1: "A", 2: "b"}
-    d = {r["id"]: r["change_type"] for r in t.diff(spark, 1, 2).collect()}
+    assert t.latest_version() == 1
+    assert {r["id"]: r["val"] for r in t.read(spark, 0).collect()} == {1: "a"}
+    assert {r["id"]: r["val"] for r in t.read(spark, 1).collect()} == {1: "A", 2: "b"}
+    d = {r["id"]: r["change_type"] for r in t.diff(spark, 0, 1).collect()}
     assert d == {1: "update", 2: "insert"}
 
 
@@ -209,10 +214,11 @@ _BATCHES = st.lists(st.lists(_ROW, min_size=1, max_size=5), min_size=1, max_size
 )
 def test_every_version_equals_fold_prefix(spark, tmp_path_factory, batches):
     """After N merges, version v must equal the dict-fold of batches
-    1..v for EVERY v — time travel returns exactly the states that were
-    committed, including across copy-on-write partition splices."""
+    0..v for EVERY v — time travel returns exactly the states that were
+    committed, including across partition-scoped merges that carry
+    other partitions' files as hardlinks."""
     tmp = tmp_path_factory.mktemp("vt")
-    t = VersionedParquetTable(str(tmp / "t"), ["id"], ["year"])
+    t = ParquetTable(str(tmp / "t"), ["id"], ["year"], retain_last=None)
     states = []
     state: dict[int, tuple[int, int]] = {}
     for batch in batches:
@@ -224,8 +230,8 @@ def test_every_version_equals_fold_prefix(spark, tmp_path_factory, batches):
         for i, v, y in batch:  # last occurrence per id wins (source_order)
             state[i] = (v, 2020 + y)
         states.append(dict(state))
-    assert t.latest_version() == len(batches)
-    for v, want in enumerate(states, start=1):
+    assert t.versions() == list(range(len(batches)))
+    for v, want in enumerate(states):
         got = {
             r["id"]: (r["val"], r["year"])
             for r in t.read(spark, v).drop("pos").collect()
@@ -234,55 +240,47 @@ def test_every_version_equals_fold_prefix(spark, tmp_path_factory, batches):
 
 
 def test_empty_overwrite_commits_and_reads_back(spark, tmp_path):
-    """ADVICE r2: an empty commit must stay readable — partitioned
-    empty overwrite used to crash read() (reduce over no frames), and
-    an unpartitioned one left a schema-less generation dir. The schema
-    rides in the manifest now."""
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
+    """ADVICE r2: an empty commit must stay readable and mergeable. A
+    partitioned empty overwrite writes no data file at all (and an
+    unpartitioned one a schema-only file); `_commit.json` carries the
+    schema, so the version reads back as zero rows of it. Default
+    retention: the non-empty version before it is gone."""
     for part in ([], ["year"]):
-        t = VersionedParquetTable(
-            str(tmp_path / ("p" if part else "u")), ["id"], partition_by=part
-        )
+        t = ParquetTable(str(tmp_path / ("p" if part else "u")), ["id"], partition_by=part)
         full = spark.createDataFrame([(1, 2024, "a")], "id long, year int, v string")
         t.overwrite(full)
         t.overwrite(full.limit(0))
         out = t.read(spark)
         assert out.count() == 0
         assert set(out.columns) == {"id", "year", "v"}
-        # time travel to the non-empty parent still works
-        assert t.read(spark, version=1).count() == 1
+        assert t.versions() == [1]
+        with pytest.raises(FileNotFoundError):
+            t.read(spark, 0)
         # and a subsequent merge onto the empty table recovers
         t.merge(spark.createDataFrame([(2, 2025, "b")], "id long, year int, v string"))
-        assert t.read(spark).count() == 1
+        assert [tuple(r) for r in t.read(spark).select("id", "year", "v").collect()] == [
+            (2, 2025, "b")
+        ]
 
 
 def test_unpartitioned_merge_is_file_level_cow(spark, tmp_path):
-    """File-level copy-on-write (VERDICT r2 #2, versioned form): the
-    manifest records per-file merge-key min/max at write time; a merge
-    touching a narrow key range rewrites only intersecting files, the
-    rest are carried over as entries pointing at their ORIGINAL
-    generation — untouched bytes never move, parent stays readable."""
-    import os
-
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "fcow"), ["id"])
+    """File-level copy-on-write (VERDICT r2 #2, versioned form): a merge
+    touching a narrow key range rewrites only the files whose footer
+    range meets it; the rest are hardlinked into the new version —
+    untouched bytes never move, and the parent stays readable."""
+    t = ParquetTable(str(tmp_path / "fcow"), ["id"], prune_min_bytes=0, retain_last=None)
     base = spark.range(50_000).select(F.col("id"), (F.col("id") % 7).alias("v"))
     t.overwrite(base.repartitionByRange(20, "id").sortWithinPartitions("id"))
-    m1 = t._manifest(1)
-    assert len(m1["files"]) == 20
-    paths_before = {t._entry_path(e): os.path.getmtime(t._entry_path(e)) for e in m1["files"]}
+    f0 = t._files(0)
+    assert len(f0) == 20
+    mtimes = {k: os.path.getmtime(p) for k, p in f0.items()}
 
     t.merge(spark.range(1000, 2000).select(F.col("id"), F.lit(-1).alias("v")))
-    m2 = t._manifest(2)
-    carried = [e for e in m2["files"] if e["gen"] == m1["files"][0]["gen"]]
-    fresh = [e for e in m2["files"] if e["gen"] != m1["files"][0]["gen"]]
-    # ≥ 90% of entries carried over verbatim; original bytes untouched
+    f1 = t._files(1)
+    carried, fresh = set(f1) & set(f0), set(f1) - set(f0)
+    # ≥ 90% of files carried over as hardlinks; original bytes untouched
     assert len(carried) >= 18 and fresh
-    for e in carried:
-        p = t._entry_path(e)
-        assert paths_before[p] == os.path.getmtime(p)
+    assert all(os.path.getmtime(f1[k]) == mtimes[k] for k in carried)
 
     out = t.read(spark)
     assert out.count() == 50_000
@@ -290,120 +288,30 @@ def test_unpartitioned_merge_is_file_level_cow(spark, tmp_path):
     # dedupe correctness: no key appears twice across carried+fresh files
     assert out.select("id").distinct().count() == 50_000
     # time travel: parent version pre-merge
-    assert t.read(spark, version=1).filter("v = -1").count() == 0
+    assert t.read(spark, version=0).filter("v = -1").count() == 0
 
-    # pure-insert batch outside every range: all entries carried
+    # pure-insert batch outside every range: every file carried
     t.merge(spark.range(90_000, 90_010).select(F.col("id"), F.lit(9).alias("v")))
-    m3 = t._manifest(3)
-    assert {(e["gen"], e["name"]) for e in m2["files"]} <= {
-        (e["gen"], e["name"]) for e in m3["files"]
-    }
+    assert set(f1) <= set(t._files(2))
     assert t.read(spark).count() == 50_010
 
-    # vacuum keeps every generation still referenced by carried entries
-    removed = t.vacuum(retain_last=1, min_age_s=0)
-    assert t.read(spark).count() == 50_010
-    gens_live = {e["gen"] for e in m3["files"]}
-    for r in removed:
-        assert os.path.basename(r) not in gens_live
-
-
-def test_versioned_migration_from_rootmap_manifest(spark, tmp_path):
-    """A pre-file-tracking manifest (partitions={_ROOT: gen}, no files
-    key) still merges: entries are synthesized by a one-time footer
-    scan of the generation dir."""
-    import json as _json
-    import os
-
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "mig"), ["id"])
-    t.overwrite(
-        spark.range(1000)
-        .select(F.col("id"), F.lit("x").alias("v"))
-        .repartitionByRange(4, "id")
-    )
-    mpath = os.path.join(t._manifest_dir, "v00000001.json")
-    doc = _json.load(open(mpath))
-    del doc["files"]  # simulate an old manifest
-    _json.dump(doc, open(mpath, "w"))
-
-    t.merge(spark.createDataFrame([(5, "y")], "id long, v string"))
-    out = t.read(spark)
-    assert out.count() == 1000
-    assert out.filter("id = 5").collect()[0]["v"] == "y"
-
-
-def test_bloom_skips_files_on_unclustered_layout(spark, tmp_path):
-    """Range pruning is useless on a hash-distributed table (every
-    file's min/max spans the whole key space); the manifest blooms must
-    still skip almost every file for a narrow merge."""
-    import os
-
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "bloomy"), ["id"])
-    base = spark.range(40_000).select(F.col("id"), (F.col("id") % 5).alias("v"))
-    # hash-repartition => every file covers ~the full key range
-    t.overwrite(base.repartition(20, "id"))
-    m1 = t._manifest(1)
-    assert all(e.get("bloom") for e in m1["files"])
-    # ranges are useless by construction:
-    from data_lake_skyfit_spark.operators.versioned import _stat_decode
-
-    spans = [
-        _stat_decode(e["max"]) - _stat_decode(e["min"]) for e in m1["files"]
-    ]
-    assert min(spans) > 30_000
-
-    paths_before = {
-        t._entry_path(e): os.path.getmtime(t._entry_path(e)) for e in m1["files"]
-    }
-    # merge 3 keys: blooms should localize to the 1-3 files holding them
-    t.merge(
-        spark.createDataFrame([(17, -1), (23_456, -1), (39_999, -1)], "id long, v long")
-    )
-    m2 = t._manifest(2)
-    carried = [e for e in m2["files"] if t._entry_path(e) in paths_before]
-    assert len(carried) >= 15, f"bloom skipped too few: {len(carried)}/20"
-    for e in carried:
-        assert paths_before[t._entry_path(e)] == os.path.getmtime(t._entry_path(e))
-
-    out = t.read(spark)
-    assert out.count() == 40_000
-    assert out.filter("v = -1").count() == 3
-    assert out.select("id").distinct().count() == 40_000
-
-
-def test_bloom_null_keys_still_merge(spark, tmp_path):
-    """A null source key must not be bloom-skipped: files whose footer
-    reports nulls stay touched when the source carries nulls."""
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "bnull"), ["id"])
-    t.overwrite(
-        spark.createDataFrame(
-            [(None, "a"), (1, "b"), (2, "c")], "id long, v string"
-        ).repartition(2, "id")
-    )
-    t.merge(spark.createDataFrame([(None, "A")], "id long, v string"))
-    rows = {r["id"]: r["v"] for r in t.read(spark).collect()}
-    assert rows[None] == "A" and len(rows) == 3
+    # dropping old versions leaves the live version's hardlinks intact
+    short = dataclasses.replace(t, retain_last=1)
+    short.merge(spark.createDataFrame([(5, -5)], "id long, v long"))
+    assert short.versions() == [3] and sorted(os.listdir(tmp_path)) == ["fcow", "fcow__v3"]
+    assert short.read(spark).count() == 50_010
 
 
 def test_txn_merge_is_idempotent_per_writer(spark, tmp_path):
     """Delta-style writer transactions: a merge at or below an app's
-    recorded txn watermark is a manifest-level no-op; other apps and
-    higher versions proceed; watermarks survive compaction."""
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
-
-    t = VersionedParquetTable(str(tmp_path / "txn"), ["id"])
-    t.merge(spark.createDataFrame([(1, "a")], "id long, v string"), txn=("app1", 0))
-    v1 = t.latest_version()
+    recorded txn watermark commits nothing; other apps and higher
+    versions proceed; watermarks carry through every commit."""
+    t = ParquetTable(str(tmp_path / "txn"), ["id"])
+    v0 = t.merge(spark.createDataFrame([(1, "a")], "id long, v string"), txn=("app1", 0))
     # replay of batch 0 → no new version, no data change
     assert t.merge(
         spark.createDataFrame([(1, "REPLAYED")], "id long, v string"), txn=("app1", 0)
-    ) == v1
+    ) == v0 == t.latest_version()
     assert t.read(spark).collect()[0]["v"] == "a"
     # next batch applies
     t.merge(spark.createDataFrame([(2, "b")], "id long, v string"), txn=("app1", 1))
@@ -411,8 +319,10 @@ def test_txn_merge_is_idempotent_per_writer(spark, tmp_path):
     # a different writer app with the same numbers is independent
     t.merge(spark.createDataFrame([(3, "c")], "id long, v string"), txn=("app2", 0))
     assert t.read(spark).count() == 3
-    # watermarks carry through a compaction commit
+    # watermarks carry through a compaction and an overwrite commit
     t.compact(spark)
+    t.overwrite(t.read(spark))
+    assert t._meta(t.latest_version())["txns"] == {"app1": 1, "app2": 0}
     assert t.merge(
         spark.createDataFrame([(9, "x")], "id long, v string"), txn=("app1", 1)
     ) == t.latest_version()
@@ -420,13 +330,9 @@ def test_txn_merge_is_idempotent_per_writer(spark, tmp_path):
 
 
 def test_stream_sink_into_versioned_table(spark, tmp_path):
-    """stream_merge_sink drives a VersionedParquetTable with per-batch
-    transactions: draining the same landing dir twice adds no rows AND
-    no versions (checkpoint holds the cursor; txns absorb replays)."""
-    import json as _json
-    import os
-
-    from data_lake_skyfit_spark.operators.versioned import VersionedParquetTable
+    """stream_merge_sink merges each batch as a writer transaction:
+    draining the same landing dir twice adds no rows AND no versions
+    (checkpoint holds the cursor; txns absorb replays)."""
     from data_lake_skyfit_spark.streaming.windowed import stream_merge_sink
 
     land = tmp_path / "land"
@@ -435,7 +341,7 @@ def test_stream_sink_into_versioned_table(spark, tmp_path):
         [(1, "a", 10), (2, "b", 20)], "id long, v string, seq long"
     ).coalesce(1).write.mode("overwrite").parquet(str(land / "batch0"))
 
-    t = VersionedParquetTable(str(tmp_path / "vt"), ["id"])
+    t = ParquetTable(str(tmp_path / "vt"), ["id"])
     stream = (
         spark.readStream.schema("id long, v string, seq long")
         .option("maxFilesPerTrigger", "1")
@@ -445,8 +351,7 @@ def test_stream_sink_into_versioned_table(spark, tmp_path):
     stream_merge_sink(stream, t, checkpoint_dir=ckpt, source_order=("seq",))
     assert t.read(spark).count() == 2
     v_after = t.latest_version()
-    applied = t._manifest(v_after).get("txns", {})
-    assert applied, "sink did not record writer transactions"
+    assert t._meta(v_after)["txns"], "sink did not record writer transactions"
 
     # drain again: nothing new to read, nothing committed
     stream2 = (
@@ -459,44 +364,27 @@ def test_stream_sink_into_versioned_table(spark, tmp_path):
 
 
 def test_clustered_compaction_restores_range_pruning(spark, tmp_path):
-    """Merges degrade clustering (fresh generations hold arbitrary key
-    mixes → ranges widen → range pruning decays toward bloom-only).
-    compact(cluster_by=key) must restore tight disjoint per-file ranges
-    in the new manifest."""
-    from data_lake_skyfit_spark.operators.versioned import (
-        VersionedParquetTable,
-        _stat_decode,
-    )
-
-    t = VersionedParquetTable(str(tmp_path / "cc"), ["id"])
+    """Merges degrade clustering (rewritten files hold arbitrary key
+    mixes → footer ranges widen → range pruning touches everything).
+    compact(cluster_by=key) must restore tight disjoint per-file
+    ranges, so a narrow merge carries most files again."""
+    t = ParquetTable(str(tmp_path / "cc"), ["id"], prune_min_bytes=0, retain_last=None)
     t.overwrite(
         spark.range(20_000).select(F.col("id"), F.lit(0).alias("v")).repartition(8, "id")
     )
     # hash layout: every file spans ~the full key space
-    spans = [
-        _stat_decode(e["max"]) - _stat_decode(e["min"])
-        for e in t._manifest(t.latest_version())["files"]
-    ]
-    assert min(spans) > 15_000
+    assert min(hi - lo for _, lo, hi, _ in file_key_ranges(t.path, "id")) > 15_000
 
-    t.compact(spark, cluster_by=["id"], n_files=8)
-    entries = t._manifest(t.latest_version())["files"]
-    ranges = sorted(
-        (_stat_decode(e["min"]), _stat_decode(e["max"])) for e in entries
-    )
-    assert len(entries) == 8
+    v = t.compact(spark, cluster_by=["id"], n_files=8)
+    ranges = sorted((lo, hi) for _, lo, hi, _ in file_key_ranges(t.path, "id"))
+    assert len(ranges) == 8
     # tight: each file covers ~1/8 of the space; disjoint and ordered
     assert all(hi - lo < 6_000 for lo, hi in ranges)
     assert all(ranges[i][1] < ranges[i + 1][0] for i in range(len(ranges) - 1))
     assert t.read(spark).count() == 20_000
     # a narrow merge after compaction touches few files again
-    import os
-
-    before = {t._entry_path(e): os.path.getmtime(t._entry_path(e)) for e in entries}
     t.merge(spark.range(100, 200).select(F.col("id"), F.lit(1).alias("v")))
-    after_entries = t._manifest(t.latest_version())["files"]
-    carried = [e for e in after_entries if t._entry_path(e) in before]
-    assert len(carried) >= 7
+    assert len(_inodes(t, v + 1) & _inodes(t, v)) >= 7
 
 
 def _feed_set(df):
@@ -508,35 +396,35 @@ def _feed_set(df):
 
 
 def test_changes_matches_full_diff_partitioned(spark, tmp_path):
-    """The file-pruned feed returns exactly diff()'s rows across merges
+    """The inode-pruned feed returns exactly diff()'s rows across merges
     and an overwrite (insert/update/delete all represented), including
     a version-skipping window."""
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2024)]))
     t.merge(_df(spark, [(2, "B", 2024), (4, "d", 2025)]))
     t.overwrite(_df(spark, [(1, "a", 2023), (2, "B", 2024), (5, "e", 2025)]))
-    for v0, v1 in [(1, 2), (2, 3), (1, 3)]:
+    for v0, v1 in [(0, 1), (1, 2), (0, 2)]:
         pruned = _feed_set(t.changes(spark, v0, v1, compare_cols=["val"]))
         full = _feed_set(t.diff(spark, v0, v1, compare_cols=["val"]))
         assert pruned == full, (v0, v1)
-    got = _feed_set(t.changes(spark, 2, 3, compare_cols=["val"]))
+    got = _feed_set(t.changes(spark, 1, 2, compare_cols=["val"]))
     assert (3, "delete", "c", None) in got and (5, "insert", None, "e") in got
 
 
 def test_changes_matches_full_diff_unpartitioned(spark, tmp_path):
-    """Same equivalence on the file-level COW path, where rewritten
-    files carry unchanged neighbor rows that must fall out of the feed."""
-    t = VersionedParquetTable(str(tmp_path / "cdc"), ["id"])
+    """Same equivalence on the file-pruned path, where rewritten files
+    carry unchanged neighbor rows that must fall out of the feed."""
+    t = ParquetTable(str(tmp_path / "cdc"), ["id"], prune_min_bytes=0, retain_last=None)
     base = spark.range(5_000).select(F.col("id"), (F.col("id") % 7).cast("string").alias("v"))
     t.overwrite(base.repartitionByRange(10, "id").sortWithinPartitions("id"))
     t.merge(spark.range(900, 1100).select(F.col("id"), F.lit("X").alias("v")))
     pruned = {
         (r["id"], r["change_type"], r["old_v"], r["new_v"])
-        for r in t.changes(spark, 1, 2, compare_cols=["v"]).collect()
+        for r in t.changes(spark, 0, 1, compare_cols=["v"]).collect()
     }
     full = {
         (r["id"], r["change_type"], r["old_v"], r["new_v"])
-        for r in t.diff(spark, 1, 2, compare_cols=["v"]).collect()
+        for r in t.diff(spark, 0, 1, compare_cols=["v"]).collect()
     }
     assert pruned == full
     # only genuinely updated keys appear — carried rows in rewritten
@@ -545,33 +433,63 @@ def test_changes_matches_full_diff_unpartitioned(spark, tmp_path):
     assert all(ct == "update" for _, ct, _, _ in pruned)
 
 
-def test_changes_never_reads_carried_files(spark, tmp_path):
-    """Scale pin: carried (untouched) files are not merely unscanned —
-    they can be unreadable garbage and the pruned feed still computes.
-    diff() by contrast must read both full snapshots."""
-    t = VersionedParquetTable(str(tmp_path / "cdcpin"), ["id"])
-    base = spark.range(5_000).select(F.col("id"), (F.col("id") % 7).alias("v"))
-    t.overwrite(base.repartitionByRange(10, "id").sortWithinPartitions("id"))
-    m1 = t._manifest(1)
-    t.merge(spark.range(0, 300).select(F.col("id"), F.lit(-1).alias("v")))
-    m2 = t._manifest(2)
-    fids2 = {f'{e["gen"]}/{e["name"]}' for e in m2["files"]}
-    carried = [e for e in m1["files"] if f'{e["gen"]}/{e["name"]}' in fids2]
+def _changes_with_garbage_carried(spark, t):
+    """changes(0, 1) while every file shared by versions 0 and 1 holds
+    garbage bytes (restored afterwards): the feed must never read one."""
+    f0, f1 = t._files(0), t._files(1)
+    carried = [f1[k] for k in set(f0) & set(f1)]
     assert carried  # the merge left most files untouched
     saved = {}
     try:
-        for e in carried:
-            p = t._entry_path(e)
+        for p in carried:
             with open(p, "rb") as f:
                 saved[p] = f.read()
             with open(p, "wb") as f:
                 f.write(b"GARBAGE-NOT-PARQUET")
-        feed = t.changes(spark, 1, 2, compare_cols=["v"]).collect()
-        assert {r["id"] for r in feed} == set(range(300))
+        return t.changes(spark, 0, 1, compare_cols=["v"]).collect()
     finally:
         for p, blob in saved.items():
             with open(p, "wb") as f:
                 f.write(blob)
+
+
+def test_changes_never_reads_carried_files(spark, tmp_path):
+    """Scale pin, file-pruned merge: carried (hardlinked) files are not
+    merely unscanned — they can be unreadable garbage and the feed
+    still computes exactly the changed keys. diff() by contrast must
+    read both full snapshots."""
+    t = ParquetTable(str(tmp_path / "cdcpin"), ["id"], prune_min_bytes=0, retain_last=None)
+    base = spark.range(5_000).select(F.col("id"), (F.col("id") % 7).alias("v"))
+    t.overwrite(base.repartitionByRange(10, "id").sortWithinPartitions("id"))
+    t.merge(spark.range(0, 300).select(F.col("id"), F.lit(-1).alias("v")))
+    feed = _changes_with_garbage_carried(spark, t)
+    assert {r["id"] for r in feed} == set(range(300))
+
+
+def test_changes_never_reads_carried_partitions(spark, tmp_path):
+    """Scale pin, partition-scoped merge: the partitions the merge did
+    not touch are hardlinked into the new version, and the feed reads
+    none of their files."""
+    t = ParquetTable(str(tmp_path / "cdcpart"), ["id"], ["year"], retain_last=None)
+    t.overwrite(
+        spark.range(3_000).select(
+            F.col("id"), (F.col("id") % 7).alias("v"), (2020 + F.col("id") % 3).cast("int").alias("year")
+        )
+    )
+    # ids 1, 4, 7, ... live in year=2021: update 100 of them, insert 5
+    src = spark.range(1, 300, 3).select(
+        F.col("id"), F.lit(-1).cast("long").alias("v"), F.lit(2021).alias("year")
+    ).unionByName(
+        spark.range(10_000, 10_005).select(
+            F.col("id"), F.lit(-1).cast("long").alias("v"), F.lit(2021).alias("year")
+        )
+    )
+    t.merge(src)
+    feed = _changes_with_garbage_carried(spark, t)
+    assert {(r["id"], r["change_type"]) for r in feed} == {
+        *((i, "update") for i in range(1, 300, 3)),
+        *((i, "insert") for i in range(10_000, 10_005)),
+    }
 
 
 def test_poll_changes_cursor_loop(spark, tmp_path):
@@ -581,14 +499,14 @@ def test_poll_changes_cursor_loop(spark, tmp_path):
     t = _mk(tmp_path)
     t.merge(_df(spark, [(1, "a", 2023), (2, "b", 2024)]))
     feed, cur = t.poll_changes(spark, None, compare_cols=["val"])
-    assert cur == 1
+    assert cur == 0
     assert _feed_set(feed) == {
         (1, "insert", None, "a"),
         (2, "insert", None, "b"),
     }
     t.merge(_df(spark, [(2, "B", 2024), (3, "c", 2025)]))
     feed, cur = t.poll_changes(spark, cur, compare_cols=["val"])
-    assert cur == 2
+    assert cur == 1
     assert _feed_set(feed) == {
         (2, "update", "b", "B"),
         (3, "insert", None, "c"),
