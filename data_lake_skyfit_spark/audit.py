@@ -37,7 +37,6 @@ from .specs.base import EntitySpec
 __all__ = [
     "check_date_anomalies",
     "run_audit",
-    "observed_write",
 ]
 
 #: Columns of every per-table aggregate; a table fills the ones its
@@ -217,47 +216,3 @@ def run_audit(
         report.append(_row(f"orphan_fk_{fk}", fact.name, orph["rows"], orph["rows"] == 0))
     return report
 
-
-def observed_write(
-    df: DataFrame,
-    table,
-    *,
-    key_cols: list[str],
-    ts_col: str | None = None,
-    mode: str = "overwrite",
-) -> dict:
-    """Write a frame AND collect its audit counters in the SAME job via
-    `df.observe` — zero extra scans. The reference audits by re-querying
-    the table after load (audit_stg.sql, health_check.ps1); at 100 TB
-    that second full scan costs as much as the load. Spark's observed
-    metrics piggyback aggregates onto the write job itself:
-
-        n_rows, n_null_keys (any key column null), approx_n_keys
-        (HLL++ distinct of the key tuple), max_ts/min_ts freshness.
-
-    Returns the collected metric dict. `table` is a ParquetTable (or
-    anything exposing overwrite/merge); mode 'overwrite' or 'merge'.
-    The null-key and distinct counters use the same definitions as
-    run_audit's core_null_business_keys / core_duplicate_keys checks, so
-    a follow-up full audit agrees with the inline numbers.
-    """
-    from pyspark.sql import Observation
-
-    null_any = _any([F.col(c).isNull() for c in key_cols])
-    metrics = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(null_any, 1).otherwise(0)).alias("n_null_keys"),
-        F.approx_count_distinct(F.concat_ws("\x1f", *key_cols)).alias("approx_n_keys"),
-    ]
-    if ts_col is not None:
-        metrics.append(F.max(ts_col).alias("max_ts"))
-        metrics.append(F.min(ts_col).alias("min_ts"))
-    obs = Observation()
-    observed = df.observe(obs, *metrics)
-    if mode == "overwrite":
-        table.overwrite(observed)
-    elif mode == "merge":
-        table.merge(observed)
-    else:
-        raise ValueError(f"observed_write mode must be overwrite|merge, got {mode!r}")
-    return dict(obs.get)

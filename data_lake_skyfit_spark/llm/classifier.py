@@ -323,7 +323,3 @@ def apply_quantized(
             "doc_id", "margin", (F.col("margin") > 0).cast("int").alias("label")
         )
     )
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

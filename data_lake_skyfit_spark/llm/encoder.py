@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import kernels
 from .multimodal import _image_channel_bytes
 from .similarity import _register_kernel_broadcast
 from .tokenizer import _ascii_words
@@ -115,37 +116,19 @@ def image_grid_features(
     grid: int = 8,
 ) -> DataFrame:
     """(id, payload) → (id, features array<double>[grid²]) from REAL
-    decoded pixels, Arrow-batched. Non-decodable payloads are dropped
-    (no fake leg on the learned path)."""
-    import pandas as pd
+    decoded pixels, the scaffold's explode. Non-decodable and NULL
+    payloads are dropped (no fake leg on the learned path)."""
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
+    def rows_of(data) -> list[tuple]:
+        vec = _image_feature_vec(data, grid)
+        return [] if vec is None else [(vec,)]
+
+    return kernels.explode(
+        df,
+        rows_of,
+        [(id_col, T.LongType(), None), ("features", T.ArrayType(T.DoubleType()), None)],
+        inputs=(payload_col,),
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            ids, feats = [], []
-            for rid, data in zip(pdf[id_col], pdf[payload_col]):
-                if data is None:
-                    continue
-                vec = _image_feature_vec(data, grid)
-                if vec is not None:
-                    ids.append(int(rid))
-                    feats.append(vec)
-            # explicit dtypes: an all-dropped batch must not coerce the
-            # list column to float64 (Arrow can't cast that to list<double>)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="int64"),
-                    "features": pd.Series(feats, dtype="object"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, schema)
 
 
 def _text_bucket(word: str, buckets: int) -> int:
@@ -174,33 +157,14 @@ def text_hash_features(
 ) -> DataFrame:
     """(id, text) → (id, features array<double>[buckets]): L2-normalized
     hashed bag-of-words, md5-bucketed, ASCII-whitespace tokens (the
-    tier's shared convention — ADVICE r3 one-regex rule)."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
+    tier's shared convention — ADVICE r3 one-regex rule). A NULL text
+    featurizes as the empty string."""
+    return kernels.row_map(
+        df,
+        lambda t: (_text_feature_vec("" if t is None else str(t), buckets),),
+        [(id_col, T.LongType(), None), ("features", T.ArrayType(T.DoubleType()), None)],
+        inputs=(text_col,),
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "features": pd.Series(
-                        [
-                            _text_feature_vec(str(t), buckets)
-                            for t in pdf[text_col].fillna("")
-                        ],
-                        dtype="object",
-                        index=pdf.index,
-                    ),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(kernel, schema)
 
 
 @dataclass

@@ -295,10 +295,6 @@ def _type_row(name: str, n_ctx: int, init_type: int) -> tuple[int, ...]:
     return row[:n_ctx]
 
 
-def _i_row(name: str, n_ctx: int) -> tuple[int, ...]:
-    return _type_row(name, n_ctx, 0)
-
-
 # flat context layout (inter elements appended r8; I slices never
 # read them, so the I-slice wire is unchanged)
 _ELEMS = [

@@ -4,7 +4,8 @@ Model: media lives as an opaque `binary` payload column plus a typed
 metadata struct — mirroring the reference's bronze "raw blob + lineage"
 pattern (reference: src/common/lake.py:59-71 blob handling) lifted into
 columns. Decode/feature-extract/resize/frame-sample are Arrow-batched
-`mapInPandas` operators so media bytes never round-trip per row.
+kernels on the package's one scaffold (functions/kernels.py) so media
+bytes never round-trip per row.
 
 Codec strategy: formats pure Python + numpy can parse are decoded FOR
 REAL — PCM WAV via `wave`/`struct`, 24-bpp BMP via `struct`, 8-bit
@@ -45,13 +46,15 @@ encoded media from an id column with documented closed-form content,
 so battery fixtures can encode → decode and a SQL oracle can compute
 the expected decoded values arithmetically (see queries_llm.py).
 
-One scaffold serves every kernel. Each `synthesize_*` is a per-id
-`encode_one(id) -> bytes` on `id_kernel`, which owns the id spread,
-the Arrow batch loop and the `(id, payload)` schema. Each decode
-kernel runs its media family's sniff→decoder ladder (the tables at
-the end of the module) through `_first_decode`; a payload no entry
-decodes takes that kernel's own fallback. `_typed_frame` turns the
-decoded tuples into the kernel's typed output frame.
+One scaffold serves every kernel: functions/kernels.py, which owns the
+Arrow batch loop and builds each kernel's Spark schema and typed
+frames from its one `(name, Spark type, pandas dtype)` declaration.
+Each `synthesize_*` is a per-id `encode_one(id) -> bytes` on
+`id_kernel`, which adds the id spread. Each decode kernel is a
+`row_map` (one row per payload) or an `explode` (one row per frame)
+whose row function runs its media family's sniff→decoder ladder (the
+tables at the end of the module) through `_first_decode`; a payload
+no entry decodes takes that kernel's own fallback.
 """
 
 from __future__ import annotations
@@ -63,14 +66,13 @@ import os
 import struct
 import wave
 import zlib
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import kernels
+from ..functions.kernels import id_kernel
 from . import av1
 from .h264 import (
     _parse_sps as _h264_parse_sps,
@@ -171,52 +173,6 @@ def _fake_decode_enabled() -> bool:
     return os.environ.get("SKYFIT_FAKE_DECODE", "1") == "1"
 
 
-def id_kernel(
-    df: DataFrame,
-    id_col: str,
-    encode_one: Callable[[int], bytes],
-    *,
-    rows_per_task: int | None = None,
-) -> DataFrame:
-    """The scaffold every ``synthesize_*`` fixture kernel runs on: the
-    id column in, ``(id long, payload binary)`` out, one
-    ``encode_one(id) -> bytes`` call per id inside an Arrow-batched
-    mapInPandas.
-
-    The ids are hash-repartitioned to the session's default parallelism
-    first. Per-id encode/decode kernels are embarrassingly parallel, but
-    a small filtered id range usually sits in 1-2 parquet splits (the
-    r7d one-split trap, measured again in r9: multimodal_decode_h264 ran
-    its whole 500-GOP encode+decode chain on ONE core — 8.5 s vs ~1.4 s
-    spread). The downstream decode mapInPandas inherits this
-    partitioning, so the pipeline pays exactly one exchange of 8-byte
-    ids. Hash partitioning by id is deterministic (no round-robin retry
-    hazard, guide §2.5) and scale-adaptive: the count follows the
-    cluster's parallelism, not a constant.
-
-    ``rows_per_task`` (r10, the VERDICT-r9 dedup_audio_envelope fix):
-    LIGHT fixture kernels feeding shuffle-heavy consumers should NOT fan
-    a 200-row frame to full parallelism — every downstream stage then
-    pays ~32 near-empty tasks. Passing a row budget prices the width
-    with one bounded count of the id column (scan-rooted, cheap); heavy
-    codec kernels (~ms-row) keep the default full spread."""
-    n = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ids = df.select(id_col)
-    if rows_per_task is not None:
-        rows = ids.count()
-        n = min(n, max(1, -(-rows // rows_per_task)))
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [encode_one(int(v)) for v in pdf[id_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return ids.repartition(n, id_col).mapInPandas(kernel, schema)
-
-
 def _first_decode(data: bytes, ladder, *args):
     """Run a media family's sniff→decoder ladder: the first entry whose
     ``sniff(data)`` holds and whose ``decode(data, *args)`` returns a
@@ -234,28 +190,6 @@ def _first_decode(data: bytes, ladder, *args):
             if out is not None:
                 return out
     return None
-
-
-def _explode(pdf: pd.DataFrame, id_col: str, rows_of) -> tuple[list, list]:
-    """A 1→N kernel's batch: ``rows_of(payload)`` records for every
-    payload, each paired with its row's id."""
-    ids, recs = [], []
-    for rid, b in zip(pdf[id_col], pdf["payload"]):
-        for rec in rows_of(bytes(b)):
-            ids.append(rid)
-            recs.append(rec)
-    return ids, recs
-
-
-def _typed_frame(id_col: str, ids, rows: list, columns) -> pd.DataFrame:
-    """Decoded tuples → a kernel's output frame: ``ids`` first, then one
-    column per ``(name, dtype)`` from the tuples' positions (a dtype of
-    None keeps plain Python values, e.g. bytes and strings)."""
-    values = list(zip(*rows)) or [()] * len(columns)
-    out = {id_col: ids}
-    for (name, dtype), vals in zip(columns, values):
-        out[name] = pd.array(list(vals), dtype=dtype) if dtype else list(vals)
-    return pd.DataFrame(out)
 
 
 def attach_binary_payload(df: DataFrame, source_col: str, *, mime: str = "application/octet-stream") -> DataFrame:
@@ -2837,34 +2771,27 @@ def decode_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     Other formats (arithmetic-coded JPEG, VP8 interframes...) would
     need PIL: fake path derives dims from the content hash with
     pixel_sum null (or raises without SKYFIT_FAKE_DECODE)."""
-    schema = T.StructType(
+    def one(data) -> tuple[int, int, int, int | None]:
+        data = bytes(data)
+        decoded = _first_decode(data, _IMAGE_SUM_LADDER)
+        if decoded is not None:
+            return decoded
+        _require_codec("PIL")
+        d = hashlib.md5(data).digest()
+        return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 3, None
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("width", T.IntegerType(), "int32"),
+            ("height", T.IntegerType(), "int32"),
+            ("n_channels", T.IntegerType(), "int32"),
+            ("pixel_sum", T.LongType(), "Int64"),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("width", "int32"), ("height", "int32"), ("n_channels", "int32"),
-               ("pixel_sum", "Int64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple[int, int, int, int | None]:
-            data = bytes(b)
-            decoded = _first_decode(data, _IMAGE_SUM_LADDER)
-            if decoded is not None:
-                return decoded
-            _require_codec("PIL")
-            d = hashlib.md5(data).digest()
-            return 64 + d[0] % 192, 64 + d[1] % 192, 1 + d[2] % 3, None
-
-        for pdf in batches:
-            decoded = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def _image_channel_bytes(data: bytes) -> tuple[int, int, int, bytes] | None:
@@ -2966,28 +2893,21 @@ def extract_embeddings(df: DataFrame, *, id_col: str = "doc_id", dims: int = 8) 
     md5 fake path (or raise without SKYFIT_FAKE_DECODE).
     Double-typed features: float32 would re-round and break exact
     cross-engine reproducibility."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def features_of(b) -> list[float]:
+    def features_of(b) -> tuple[list[float]]:
         data = bytes(b)
         if dims == 8:
             feats = _first_decode(data, _FEATURE_LADDER) or _image_features(data)
             if feats is not None:
-                return feats
+                return (feats,)
         _require_codec("torch")
-        return [x / 255.0 for x in hashlib.md5(data).digest()[:dims]]
+        return ([x / 255.0 for x in hashlib.md5(data).digest()[:dims]],)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(features_of)
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
+    return kernels.row_map(
+        df,
+        features_of,
+        [(id_col, T.LongType(), None), ("features", T.ArrayType(T.DoubleType()), None)],
+        inputs=("payload",),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3773,39 +3693,32 @@ def decode_audio(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     walker). Other formats would
     need librosa/soundfile: fake path derives stats from the content
     hash with sample_sum null (or raises without SKYFIT_FAKE_DECODE)."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("sample_sum", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-        ]
-    )
+    def one(b) -> tuple[int, int, int, int | None, float | None]:
+        data = bytes(b)
+        decoded = _first_decode(data, _AUDIO_STATS_LADDER)
+        if decoded is not None:
+            return decoded
+        _require_codec("soundfile")
+        d = hashlib.md5(data).digest()
+        sr = WAV_RATES[d[3] % len(WAV_RATES)]
+        n = len(data) * 32
+        return sr, n, n * 1000 // sr, None, d[4] / 255.0
 
     # nullable Float64 rms: MP3 rows carry NULL rms (header walk yields
     # timing, not samples), never NaN
-    columns = [("sample_rate", "int32"), ("n_samples", "int64"),
-               ("duration_ms", "int64"), ("sample_sum", "Int64"), ("rms", "Float64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple[int, int, int, int | None, float | None]:
-            data = bytes(b)
-            decoded = _first_decode(data, _AUDIO_STATS_LADDER)
-            if decoded is not None:
-                return decoded
-            _require_codec("soundfile")
-            d = hashlib.md5(data).digest()
-            sr = WAV_RATES[d[3] % len(WAV_RATES)]
-            n = len(data) * 32
-            return sr, n, n * 1000 // sr, None, d[4] / 255.0
-
-        for pdf in batches:
-            decoded = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
+    return kernels.row_map(
+        df,
+        one,
+        [
+            (id_col, T.LongType(), None),
+            ("sample_rate", T.IntegerType(), "int32"),
+            ("n_samples", T.LongType(), "int64"),
+            ("duration_ms", T.LongType(), "int64"),
+            ("sample_sum", T.LongType(), "Int64"),
+            ("rms", T.DoubleType(), "Float64"),
+        ],
+        inputs=("payload",),
+    )
 
 
 def _resize_bmp(data: bytes, dw: int, dh: int) -> bytes:
@@ -3860,40 +3773,29 @@ def resize_images(
     need PIL: the fake path tiles
     the ASCII content hash to width·height deterministic bytes. Payload
     in, payload out — the 1→1 binary-transform mapInPandas shape."""
-    schema = T.StructType(
+    def one(b) -> tuple[bytes, int, int]:
+        data = bytes(b)
+        resized = _first_decode(data, _RESIZE_LADDER, width, height)
+        if resized is not None:
+            return resized, width, height
+        _require_codec("PIL")
+        # Fake bytes = ASCII md5 hexdigest tiled to width·height —
+        # reproducible as plain-string SQL in any engine:
+        # substr(repeat(md5(x), k), 1, w*h).
+        fake = hashlib.md5(data).hexdigest().encode() * (width * height // 32 + 1)
+        return fake[: width * height], width, height
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("payload", T.BinaryType(), None),
+            ("width", T.IntegerType(), "int32"),
+            ("height", T.IntegerType(), "int32"),
+        ],
+        inputs=("payload",),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> bytes:
-            data = bytes(b)
-            resized = _first_decode(data, _RESIZE_LADDER, width, height)
-            if resized is not None:
-                return resized
-            _require_codec("PIL")
-            # Fake bytes = ASCII md5 hexdigest tiled to width·height —
-            # reproducible as plain-string SQL in any engine:
-            # substr(repeat(md5(x), k), 1, w*h).
-            return (
-                hashlib.md5(data).hexdigest().encode() * (width * height // 32 + 1)
-            )[: width * height]
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "payload": [one(b) for b in pdf["payload"]],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def _decimate_wav(data: bytes, factor: int) -> bytes:
@@ -3958,34 +3860,28 @@ def resample_audio(
     a full lossless-codec round trip inside the transform. Other
     formats would need librosa: fake path keeps every 4th byte of the
     md5-tiled fake stream. 1→1 binary transform via mapInPandas."""
-    schema = T.StructType(
+    def one(b) -> tuple[bytes, int, int]:
+        data = bytes(b)
+        resampled = _first_decode(data, _RESAMPLE_LADDER, factor)
+        if resampled is not None:
+            return resampled
+        _require_codec("soundfile")
+        d = hashlib.md5(data).digest()
+        sr = WAV_RATES[d[3] % len(WAV_RATES)] // factor
+        fake = (hashlib.md5(data).hexdigest().encode() * 64)[::factor]
+        return fake, sr, len(fake)
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("payload", T.BinaryType(), None),
+            ("sample_rate", T.IntegerType(), "int32"),
+            ("n_samples", T.LongType(), "int64"),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("payload", None), ("sample_rate", "int32"), ("n_samples", "int64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple[bytes, int, int]:
-            data = bytes(b)
-            resampled = _first_decode(data, _RESAMPLE_LADDER, factor)
-            if resampled is not None:
-                return resampled
-            _require_codec("soundfile")
-            d = hashlib.md5(data).digest()
-            sr = WAV_RATES[d[3] % len(WAV_RATES)] // factor
-            fake = (hashlib.md5(data).hexdigest().encode() * 64)[::factor]
-            return fake, sr, len(fake)
-
-        for pdf in batches:
-            decoded = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
@@ -4286,43 +4182,31 @@ def decode_video_pixels(
     production sampling mode that skips every P/B reference chain;
     AVI/MJPEG streams are all-sync by construction, so the flag is a
     no-op there."""
-    fields = [
-        T.StructField(id_col, T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("pixel_sum", T.LongType()),
+    columns = [
+        (id_col, T.LongType(), None),
+        ("frame_idx", T.IntegerType(), "int32"),
+        ("ts_ms", T.LongType(), "int64"),
+        ("width", T.IntegerType(), "int32"),
+        ("height", T.IntegerType(), "int32"),
+        ("n_channels", T.IntegerType(), "int32"),
+        ("pixel_sum", T.LongType(), "Int64"),
     ]
     if include_sq:
-        fields.append(T.StructField("pixel_sq", T.LongType()))
-    schema = T.StructType(fields)
+        columns.append(("pixel_sq", T.LongType(), "Int64"))
 
-    columns = [("frame_idx", "int32"), ("ts_ms", "int64"), ("width", "int32"),
-               ("height", "int32"), ("n_channels", "int32"), ("pixel_sum", "Int64")]
-    if include_sq:
-        columns.append(("pixel_sq", "Int64"))
+    def rows(b):
+        data = bytes(b)
+        decoded = _first_decode(data, _VIDEO_PIXEL_LADDER, every_ms, keyframes_only)
+        if decoded is not None:
+            return decoded
+        _require_codec("av")
+        h = hashlib.md5(data).digest()
+        return [
+            (i, i * every_ms, 64 + h[0] % 192, 64 + h[1] % 192, 1 + h[2] % 3, None, None)
+            for i in range(1 + len(data) % 5)
+        ]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def rows(data: bytes):
-            decoded = _first_decode(data, _VIDEO_PIXEL_LADDER, every_ms, keyframes_only)
-            if decoded is not None:
-                return decoded
-            _require_codec("av")
-            h = hashlib.md5(data).digest()
-            return [
-                (
-                    i, i * every_ms, 64 + h[0] % 192, 64 + h[1] % 192,
-                    1 + h[2] % 3, None, None,
-                )
-                for i in range(1 + len(data) % 5)
-            ]
-
-        for pdf in batches:
-            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
+    return kernels.explode(df, rows, columns, inputs=("payload",))
 
 
 # ---------------------------------------------------------------------------
@@ -5757,36 +5641,32 @@ def sample_video_frames(
     movi chunk walk for the frames, one sampled frame per `every_ms`
     of stream time, md5 over actual frame bytes). Other containers
     would need pyav: fake path derives frames from the content hash."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("ts_ms", T.LongType()),
-            T.StructField("frame_md5", T.StringType()),
+    def rows(b):
+        data = bytes(b)
+        decoded = _first_decode(data, _FRAME_SAMPLE_LADDER, every_ms)
+        if decoded is not None:
+            return decoded
+        _require_codec("av")
+        # Fake frame hash chains through the ASCII content hash so
+        # it stays reproducible as plain-string SQL:
+        # md5(md5(x) || ':frame:' || i).
+        h = hashlib.md5(data).hexdigest()
+        return [
+            (i, i * every_ms, hashlib.md5(f"{h}:frame:{i}".encode()).hexdigest())
+            for i in range(1 + len(data) % 5)
         ]
+
+    return kernels.explode(
+        df,
+        rows,
+        [
+            (id_col, T.LongType(), None),
+            ("frame_idx", T.IntegerType(), None),
+            ("ts_ms", T.LongType(), None),
+            ("frame_md5", T.StringType(), None),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("frame_idx", None), ("ts_ms", None), ("frame_md5", None)]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def rows(data: bytes):
-            decoded = _first_decode(data, _FRAME_SAMPLE_LADDER, every_ms)
-            if decoded is not None:
-                return decoded
-            _require_codec("av")
-            # Fake frame hash chains through the ASCII content hash so
-            # it stays reproducible as plain-string SQL:
-            # md5(md5(x) || ':frame:' || i).
-            h = hashlib.md5(data).hexdigest()
-            return [
-                (i, i * every_ms, hashlib.md5(f"{h}:frame:{i}".encode()).hexdigest())
-                for i in range(1 + len(data) % 5)
-            ]
-
-        for pdf in batches:
-            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5871,35 +5751,28 @@ def image_dhash(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     image crosses the shuffle downstream, so at 100 TB the decode is
     embarrassingly parallel and the join cost is owned by
     hamming_neardup_pairs' banded equi-join."""
-    schema = T.StructType(
+    def one(b) -> tuple[int | None, int | None, int | None, int | None]:
+        dec = _image_channel_bytes(bytes(b))
+        if dec is None:
+            return None, None, None, None
+        w, h, ch, raw = dec
+        bits = _dhash_bits(w, h, ch, raw)
+        if bits is None:
+            return w, h, None, None
+        return w, h, bits[0], bits[1]
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("hash_hi", T.LongType()),
-            T.StructField("hash_lo", T.LongType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("width", T.IntegerType(), "Int32"),
+            ("height", T.IntegerType(), "Int32"),
+            ("hash_hi", T.LongType(), "Int64"),
+            ("hash_lo", T.LongType(), "Int64"),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("width", "Int32"), ("height", "Int32"), ("hash_hi", "Int64"),
-               ("hash_lo", "Int64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple[int | None, int | None, int | None, int | None]:
-            dec = _image_channel_bytes(bytes(b))
-            if dec is None:
-                return None, None, None, None
-            w, h, ch, raw = dec
-            bits = _dhash_bits(w, h, ch, raw)
-            if bits is None:
-                return w, h, None, None
-            return w, h, bits[0], bits[1]
-
-        for pdf in batches:
-            decoded = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], decoded, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def synthesize_neardup_png_payloads(
@@ -5995,33 +5868,29 @@ def audio_vad_frames(
     derives a deterministic frame count and energies from the content
     hash (or raises without SKYFIT_FAKE_DECODE). Arrow-batched 1→N
     mapInPandas."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.LongType()),
-            T.StructField("energy", T.LongType()),
-            T.StructField("active", T.IntegerType()),
+    def rows(b):
+        data = bytes(b)
+        decoded = _first_decode(data, _VAD_LADDER, frame_size, energy_threshold)
+        if decoded is not None:
+            return decoded
+        _require_codec("librosa")
+        d = hashlib.md5(data).digest()
+        return [
+            (t, 1000 + d[t % 16], 1 if d[t % 16] > 127 else 0)
+            for t in range(2 + d[0] % 4)
         ]
+
+    return kernels.explode(
+        df,
+        rows,
+        [
+            (id_col, T.LongType(), None),
+            ("frame_idx", T.LongType(), None),
+            ("energy", T.LongType(), None),
+            ("active", T.IntegerType(), None),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("frame_idx", None), ("energy", None), ("active", None)]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def rows(data: bytes):
-            decoded = _first_decode(data, _VAD_LADDER, frame_size, energy_threshold)
-            if decoded is not None:
-                return decoded
-            _require_codec("librosa")
-            d = hashlib.md5(data).digest()
-            return [
-                (t, 1000 + d[t % 16], 1 if d[t % 16] > 127 else 0)
-                for t in range(2 + d[0] % 4)
-            ]
-
-        for pdf in batches:
-            yield _typed_frame(id_col, *_explode(pdf, id_col, rows), columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def vad_segments(frames: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -6613,36 +6482,24 @@ def extract_image_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
     container declares them); undecodable payloads yield all-NULL.
     Arrow-batched mapInPandas — pure header scans, pixels never
     decode."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("orientation", T.IntegerType()),
-            T.StructField("make", T.StringType()),
-            T.StructField("model", T.StringType()),
-            T.StructField("datetime_str", T.StringType()),
-            T.StructField("iso", T.IntegerType()),
-            T.StructField("exposure_num", T.LongType()),
-            T.StructField("exposure_den", T.LongType()),
-        ]
-    )
     columns = [
-        ("width", "Int32"), ("height", "Int32"), ("orientation", "Int32"),
-        ("make", None), ("model", None), ("datetime_str", None), ("iso", "Int32"),
-        ("exposure_num", "Int64"), ("exposure_den", "Int64"),
+        (id_col, T.LongType(), None),
+        ("width", T.IntegerType(), "Int32"),
+        ("height", T.IntegerType(), "Int32"),
+        ("orientation", T.IntegerType(), "Int32"),
+        ("make", T.StringType(), None),
+        ("model", T.StringType(), None),
+        ("datetime_str", T.StringType(), None),
+        ("iso", T.IntegerType(), "Int32"),
+        ("exposure_num", T.LongType(), "Int64"),
+        ("exposure_den", T.LongType(), "Int64"),
     ]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple:
-            meta = _first_decode(bytes(b), _IMAGE_META_LADDER) or {}
-            return tuple(meta.get(c) for c, _dtype in columns)
+    def one(b) -> tuple:
+        meta = _first_decode(bytes(b), _IMAGE_META_LADDER) or {}
+        return tuple(meta.get(c) for c, _t, _dtype in columns[1:])
 
-        for pdf in batches:
-            rows = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], rows, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
+    return kernels.row_map(df, one, columns, inputs=("payload",))
 
 
 def _fixture_exif_app1(rid: int, w: int, h: int) -> bytes:
@@ -6758,50 +6615,40 @@ def extract_audio_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
     frame walker (_mp3_frames) runs on the remainder for timing — the
     header-only audio-curation pass. Payloads without a tag yield NULL
     text fields (frame timing still fills); non-MP3 yields all-NULL."""
-    schema = T.StructType(
+    def one(b) -> tuple:
+        data = bytes(b)
+        if not _looks_like_mp3(data):
+            return (None,) * 7
+        try:
+            tags, tag_len = _parse_id3v2(data)
+        except (ValueError, struct.error):
+            return (None,) * 7
+        n_frames: int | None = None
+        duration: int | None = None
+        try:
+            sr, bitrates = _mp3_frames(data)  # walker skips the tag
+            n_frames = len(bitrates)
+            duration = n_frames * MP3_SAMPLES_PER_FRAME * 1000 // sr
+        except (ValueError, struct.error, IndexError):
+            pass  # tag-only payloads: text fields still real
+        return (tags.get("TIT2"), tags.get("TPE1"), tags.get("TALB"), tags.get("TRCK"),
+                tag_len, n_frames, duration)
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("artist", T.StringType()),
-            T.StructField("album", T.StringType()),
-            T.StructField("track", T.StringType()),
-            T.StructField("tag_bytes", T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("duration_ms", T.LongType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("title", T.StringType(), None),
+            ("artist", T.StringType(), None),
+            ("album", T.StringType(), None),
+            ("track", T.StringType(), None),
+            ("tag_bytes", T.LongType(), "Int64"),
+            ("n_frames", T.IntegerType(), "Int32"),
+            ("duration_ms", T.LongType(), "Int64"),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("title", None), ("artist", None), ("album", None), ("track", None),
-               ("tag_bytes", "Int64"), ("n_frames", "Int32"), ("duration_ms", "Int64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b) -> tuple:
-            data = bytes(b)
-            if not _looks_like_mp3(data):
-                return (None,) * 7
-            try:
-                tags, tag_len = _parse_id3v2(data)
-            except (ValueError, struct.error):
-                return (None,) * 7
-            title = tags.get("TIT2")
-            artist = tags.get("TPE1")
-            album = tags.get("TALB")
-            track = tags.get("TRCK")
-            n_frames: int | None = None
-            duration: int | None = None
-            try:
-                sr, bitrates = _mp3_frames(data)  # walker skips the tag
-                n_frames = len(bitrates)
-                duration = n_frames * MP3_SAMPLES_PER_FRAME * 1000 // sr
-            except (ValueError, struct.error, IndexError):
-                pass  # tag-only payloads: text fields still real
-            return title, artist, album, track, tag_len, n_frames, duration
-
-        for pdf in batches:
-            rows = [one(b) for b in pdf["payload"]]
-            yield _typed_frame(id_col, pdf[id_col], rows, columns)
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def synthesize_id3_mp3_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -8185,43 +8032,37 @@ def decode_avif_structure(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame
     the tile-group byte extraction summed as `tile_sum` — proving the
     byte plumbing end-to-end.  Pixel decode (MSAC symbol tier) lands
     in a later round; this leg grades the layers that are complete."""
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("profile", T.IntegerType()),
-        T.StructField("bit_depth", T.IntegerType()),
-        T.StructField("lossless", T.IntegerType()),
-        T.StructField("n_obus", T.IntegerType()),
-        T.StructField("tile_bytes", T.IntegerType()),
-        T.StructField("tile_sum", T.LongType()),
-    ])
+    def one(payload) -> tuple:
+        data = bytes(payload)
+        meta = _HeifMeta(data)
+        if meta.item_types.get(meta.primary) != b"av01":
+            raise ValueError("avif: primary item is not av01")
+        info = parse_avif_info(data)
+        stream = None
+        for name, body in meta.item_properties(meta.primary):
+            if name == b"av1C":
+                stream = _parse_av1c(body)
+        tiles = av1.parse_av1_stream(stream + meta.item_data(meta.primary))["tile_data"]
+        return (info["width"], info["height"], info["profile"], info["bit_depth"],
+                info["coded_lossless"], info["n_obus"], info["tile_bytes"],
+                sum(sum(t) for t in tiles))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                data = bytes(payload)
-                meta = _HeifMeta(data)
-                if meta.item_types.get(meta.primary) != b"av01":
-                    raise ValueError("avif: primary item is not av01")
-                info = parse_avif_info(data)
-                stream = None
-                for name, body in meta.item_properties(meta.primary):
-                    if name == b"av1C":
-                        stream = _parse_av1c(body)
-                tiles = av1.parse_av1_stream(
-                    stream + meta.item_data(meta.primary))["tile_data"]
-                tile_sum = sum(sum(t) for t in tiles)
-                rows.append((int(rid), info["width"], info["height"],
-                             info["profile"], info["bit_depth"],
-                             info["coded_lossless"], info["n_obus"],
-                             info["tile_bytes"], tile_sum))
-            yield pd.DataFrame(rows, columns=[
-                id_col, "width", "height", "profile", "bit_depth",
-                "lossless", "n_obus", "tile_bytes", "tile_sum"])
-
-    return df.mapInPandas(kernel, out_schema)
+    return kernels.row_map(
+        df,
+        one,
+        [
+            (id_col, T.LongType(), None),
+            ("width", T.IntegerType(), None),
+            ("height", T.IntegerType(), None),
+            ("profile", T.IntegerType(), None),
+            ("bit_depth", T.IntegerType(), None),
+            ("lossless", T.IntegerType(), None),
+            ("n_obus", T.IntegerType(), None),
+            ("tile_bytes", T.IntegerType(), None),
+            ("tile_sum", T.LongType(), None),
+        ],
+        inputs=("payload",),
+    )
 
 
 def synthesize_heic_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
@@ -8728,30 +8569,21 @@ def webp_animation_frames(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame
     """payload → one row per animation frame with REAL decoded pixel
     stats — the WebP analog of the animated-GIF walk, over the
     libwebp-validated VP8/VP8L decoders."""
-    schema = T.StructType(
+    return kernels.explode(
+        df,
+        lambda b: _webp_animation_frames(bytes(b)),
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("ts_ms", T.LongType()),
-            T.StructField("duration_ms", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("frame_idx", T.IntegerType(), "int32"),
+            ("ts_ms", T.LongType(), "int64"),
+            ("duration_ms", T.IntegerType(), "int32"),
+            ("width", T.IntegerType(), "int32"),
+            ("height", T.IntegerType(), "int32"),
+            ("n_channels", T.IntegerType(), "int32"),
+            ("pixel_sum", T.LongType(), "Int64"),
+        ],
+        inputs=("payload",),
     )
-
-    columns = [("frame_idx", "int32"), ("ts_ms", "int64"), ("duration_ms", "int32"),
-               ("width", "int32"), ("height", "int32"), ("n_channels", "int32"),
-               ("pixel_sum", "Int64")]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _typed_frame(
-                id_col, *_explode(pdf, id_col, _webp_animation_frames), columns
-            )
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def synthesize_webp_animation_payloads(

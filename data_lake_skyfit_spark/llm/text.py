@@ -851,41 +851,31 @@ def fix_mojibake(
     must be provably reversible, never heuristic damage). Pure-ASCII
     documents round-trip to themselves and stay untouched.
 
-    Returns (id, fixed, was_fixed). Arrow-batched mapInPandas — the
-    str.encode/decode pair is exact and deterministic, so the output
-    is engine-reproducible (oracles build both sides from chr()
+    Returns (id, fixed, was_fixed). The scaffold's Arrow-batched row
+    map — the str.encode/decode pair is exact and deterministic, so the
+    output is engine-reproducible (oracles build both sides from chr()
     arithmetic, never non-ASCII literals — the r4c escape rule). Zero
     shuffles; a corpus map like pii_scan at 100 TB."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    schema = T.StructType(
+    from ..functions import kernels
+
+    def one(s: str | None) -> tuple[str | None, int]:
+        if s is None:
+            return None, 0
+        try:
+            d = s.encode("latin-1").decode("utf-8")
+        except (UnicodeEncodeError, UnicodeDecodeError):
+            return s, 0
+        return (d, 1) if d != s else (s, 0)
+
+    return kernels.row_map(
+        df,
+        one,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("fixed", T.StringType()),
-            T.StructField("was_fixed", T.IntegerType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("fixed", T.StringType(), None),
+            ("was_fixed", T.IntegerType(), "int32"),
+        ],
+        inputs=(text_col,),
     )
-
-    def kernel(batches):
-        def one(s: str | None) -> tuple[str | None, int]:
-            if s is None:
-                return None, 0
-            try:
-                d = s.encode("latin-1").decode("utf-8")
-            except (UnicodeEncodeError, UnicodeDecodeError):
-                return s, 0
-            return (d, 1) if d != s else (s, 0)
-
-        for pdf in batches:
-            fixed = [one(s) for s in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "fixed": [f[0] for f in fixed],
-                    "was_fixed": pd.array([f[1] for f in fixed], dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(kernel, schema)

@@ -13,7 +13,7 @@ itself:
 - salted_count_distinct: COUNT(DISTINCT x) GROUP BY k with hot k —
   two-stage: shuffle once on (k, x) to dedupe (spreading hot k across
   the x dimension), then count per k with map-side partial aggregation.
-- write_bucketed / bucketed_table: persist both sides of a recurring
+- write_bucketed: persist both sides of a recurring
   equi-join bucketed by the join key so every future join is
   shuffle-free (the Spark analog of the reference's co-located Postgres
   tables + indexes).
@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -286,10 +286,6 @@ def write_bucketed(
     if sort_keys:
         w = w.sortBy(*sort_keys)
     w.saveAsTable(name)
-
-
-def bucketed_table(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)
 
 
 def with_zorder(

@@ -16,6 +16,7 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import kernels
 from .queries import register, _t
 from .llm import curation, dedup, hnsw, multimodal, pq, retrieval, similarity, text as text_ops
 from .streaming import windowed
@@ -3145,26 +3146,14 @@ def curation_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULL by design (FLAC frames need a real codec).",
 )
 def multimodal_flac_streaminfo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-    import pandas as pd
-
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    media = kernels.payload_map(
+        d,
+        "doc_id",
+        lambda rid: multimodal.encode_flac_streaminfo(
+            (44100, 48000, 96000)[rid % 3], 1000 + rid * 37, n_channels=1 + rid % 2
+        ),
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = [
-                multimodal.encode_flac_streaminfo(
-                    (44100, 48000, 96000)[rid % 3], 1000 + rid * 37,
-                    n_channels=1 + rid % 2,
-                )
-                for rid in (int(v) for v in pdf["doc_id"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = d.select("doc_id").mapInPandas(kernel, out_schema)
     return multimodal.decode_audio(media)
 
 
@@ -3880,7 +3869,7 @@ def multimodal_decode_h264(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_hevc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every synthesize kernel spreads its one-split id range itself
-    # (multimodal.id_kernel, r9) — no query-level repartition needed
+    # (kernels.id_kernel, r9) — no query-level repartition needed
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 240)
     media = multimodal.synthesize_hevc_mp4_payloads(d, id_col="doc_id")
     return multimodal.decode_video_pixels(media, every_ms=400)
@@ -3928,7 +3917,7 @@ def multimodal_decode_hevc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "convention and libde265 the wire in tests/test_heif_codec.py.",
 )
 def multimodal_decode_heic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # synthesize kernels spread their own id range (multimodal.id_kernel)
+    # synthesize kernels spread their own id range (kernels.id_kernel)
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 160)
     media = multimodal.synthesize_heic_payloads(d, id_col="doc_id")
     return multimodal.decode_images(media, id_col="doc_id")
@@ -5429,37 +5418,20 @@ def text_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arithmetically.",
 )
 def multimodal_webdataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import webdataset
 
+    def encode(rid: int, text) -> bytes:
+        key = f"{rid:06d}"
+        return webdataset.encode_tar(
+            [
+                (f"{key}.txt", ("" if text is None else str(text)).encode()),
+                (f"{key}.cls", str(rid % 10).encode()),
+                (f"{key}.seg.png", f"px{rid}".encode()),
+            ]
+        )
+
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                key = f"{rid:06d}"
-                payloads.append(
-                    webdataset.encode_tar(
-                        [
-                            (f"{key}.txt", ("" if text is None else str(text)).encode()),
-                            (f"{key}.cls", str(rid % 10).encode()),
-                            (f"{key}.seg.png", f"px{rid}".encode()),
-                        ]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    shards = d.select("doc_id", "text").mapInPandas(kernel, out_schema)
+    shards = kernels.payload_map(d, "doc_id", encode, inputs=("text",))
     return webdataset.read_tar_members(shards)
 
 @register(
@@ -5493,36 +5465,15 @@ def multimodal_webdataset_manifest(spark: SparkSession, sf_dir: str) -> DataFram
     "lengths/md5s arithmetically.",
 )
 def multimodal_tfrecord_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import tfrecord
 
+    def encode(rid: int, text) -> bytes:
+        return tfrecord.encode_tfrecord(
+            [("" if text is None else str(text)).encode(), f"label={rid % 10}".encode(), b""]
+        )
+
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                payloads.append(
-                    tfrecord.encode_tfrecord(
-                        [
-                            ("" if text is None else str(text)).encode(),
-                            f"label={rid % 10}".encode(),
-                            b"",
-                        ]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    shards = d.select("doc_id", "text").mapInPandas(kernel, out_schema)
+    shards = kernels.payload_map(d, "doc_id", encode, inputs=("text",))
     return tfrecord.read_tfrecord_records(shards)
 
 
@@ -6207,37 +6158,17 @@ def multimodal_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "payloads quarantine to rec_idx -1.",
 )
 def multimodal_zipshard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import zipshard
 
+    def encode(rid: int, text) -> bytes:
+        key = f"{rid:06d}"
+        body = (f"shard:{key}:" * 8) + ("" if text is None else str(text))
+        return zipshard.encode_zip(
+            [(f"{key}.txt", body.encode()), (f"{key}.cls", str(rid % 10).encode())]
+        )
+
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                key = f"{rid:06d}"
-                body = (f"shard:{key}:" * 8) + ("" if text is None else str(text))
-                payloads.append(
-                    zipshard.encode_zip(
-                        [
-                            (f"{key}.txt", body.encode()),
-                            (f"{key}.cls", str(rid % 10).encode()),
-                        ]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    shards = d.select("doc_id", "text").mapInPandas(kernel, out_schema)
+    shards = kernels.payload_map(d, "doc_id", encode, inputs=("text",))
     return zipshard.read_zip_members(shards)
 
 
@@ -6357,43 +6288,26 @@ def multimodal_webp_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sibling for the image-shard tier.",
 )
 def multimodal_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import zipshard
 
+    def encode(rid: int, text) -> bytes:
+        png = multimodal.encode_png(
+            4 + rid % 17,
+            4 + rid % 15,
+            lambda x, y, c: (5 * rid + 11 * x + 13 * y + 17 * c) % 256,
+        )
+        key = f"{rid:06d}"
+        return zipshard.encode_zip(
+            [
+                (f"{key}.png", png),
+                (f"{key}.txt", ("" if text is None else str(text)).encode()),
+            ]
+        )
+
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                key = f"{rid:06d}"
-                png = multimodal.encode_png(
-                    4 + rid % 17,
-                    4 + rid % 15,
-                    lambda x, y, c, rid=rid: (5 * rid + 11 * x + 13 * y + 17 * c) % 256,
-                )
-                payloads.append(
-                    zipshard.encode_zip(
-                        [
-                            (f"{key}.png", png),
-                            (f"{key}.txt", ("" if text is None else str(text)).encode()),
-                        ]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
     # No input spread (r10 interleaved A/B: 0.95 -> 1.27 s — this
     # kernel is too light to pay the count+exchange).
-    shards = d.select("doc_id", "text").mapInPandas(kernel, out_schema).localCheckpoint(
+    shards = kernels.payload_map(d, "doc_id", encode, inputs=("text",)).localCheckpoint(
         eager=False  # two consumers: the .png leg and the .txt leg
     )
     pngs = zipshard.extract_zip_members(shards, suffix=".png")
@@ -6477,6 +6391,17 @@ def _image_curation_sql() -> str:
     """
 
 
+def _caption(rid: int, text) -> str:
+    """The pipeline fixtures' caption: the first 1 + rid % 12 tokens of
+    the text, split on EXACTLY the Java/RE2 \\s class [ \\t\\n\\v\\f\\r]
+    (str.split() also splits on \\x1c-\\x1f/\\xa0/Unicode spaces, which
+    would diverge from the oracle tokens on a regenerated non-ASCII
+    corpus — code-review r5)."""
+    text = "" if text is None else str(text)
+    toks = [t for t in _re.split("[ \t\n\x0b\f\r]+", text) if t]
+    return " ".join(toks[: 1 + rid % 12])
+
+
 @register(
     "multimodal_curation_pipeline",
     _image_curation_sql(),
@@ -6499,56 +6424,27 @@ def _image_curation_sql() -> str:
     "size dup join — no corpus-sized shuffle anywhere.",
 )
 def multimodal_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from .llm import encoder
     from .sources import webdataset
 
+    def encode(rid: int, text) -> bytes:
+        img_key = rid - 3 if rid % 7 == 3 else rid
+        w, h = 8 * (1 + img_key % 4), 8 * (1 + img_key % 3)
+        jpg = multimodal.encode_jpeg(
+            w, h, lambda x, y: (3 * img_key + 5 * (x // 8) + 7 * (y // 8)) % 256
+        )
+        key = f"{rid:06d}"
+        return webdataset.encode_tar(
+            [(f"{key}.jpg", jpg), (f"{key}.txt", _caption(rid, text).encode())]
+        )
+
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                img_key = rid - 3 if rid % 7 == 3 else rid
-                w, h = 8 * (1 + img_key % 4), 8 * (1 + img_key % 3)
-                jpg = multimodal.encode_jpeg(
-                    w, h,
-                    lambda x, y, s=img_key: (3 * s + 5 * (x // 8) + 7 * (y // 8)) % 256,
-                )
-                # split on EXACTLY the Java/RE2 \s class [ \t\n\v\f\r]
-                # (str.split() also splits on \x1c-\x1f/\xa0/Unicode
-                # spaces, which would diverge from the oracle tokens on
-                # a regenerated non-ASCII corpus — code-review r5)
-                toks = [
-                    t for t in _re.split("[ \t\n\x0b\f\r]+",
-                                         "" if text is None else str(text))
-                    if t
-                ]
-                caption = " ".join(toks[: 1 + rid % 12])
-                key = f"{rid:06d}"
-                payloads.append(
-                    webdataset.encode_tar(
-                        [(f"{key}.jpg", jpg), (f"{key}.txt", caption.encode())]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    shards = text_ops.spread_small_input(
-        d.select("doc_id", "text"), "doc_id", rows_per_task=64
-    ).mapInPandas(kernel, out_schema).localCheckpoint(
+    shards = kernels.payload_map(
+        text_ops.spread_small_input(d.select("doc_id", "text"), "doc_id", rows_per_task=64),
+        "doc_id", encode, inputs=("text",),
+    ).localCheckpoint(
         eager=False  # two consumers: the .jpg leg and the .txt leg
     )
     jpgs = webdataset.extract_tar_members(shards, suffix=".jpg")
@@ -6674,66 +6570,38 @@ def _audio_pipeline_sql() -> str:
     "schedule and set arithmetic end-to-end.",
 )
 def multimodal_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import webdataset
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                key = rid - 3 if rid % 7 == 3 else rid
-                sr = 8000 + 8000 * (key % 2)
-                nf = 3 + key % 3
-                sam = []
-                for f in range(nf):
-                    if key % 5 == 0 and f % 3 != 0:
-                        sam += [0] * 160
-                    else:
-                        sam += [
-                            (((f * 160 + s) * 7919 + key * 104729) % 65536) - 32768
-                            for s in range(160)
-                        ]
-                flac = multimodal.encode_flac(sr, sam)
-                # split on EXACTLY the Java/RE2 \s class [ \t\n\v\f\r]
-                # (str.split() also splits on \x1c-\x1f/\xa0/Unicode
-                # spaces, which would diverge from the oracle tokens on
-                # a regenerated non-ASCII corpus — code-review r5)
-                toks = [
-                    t for t in _re.split("[ \t\n\x0b\f\r]+",
-                                         "" if text is None else str(text))
-                    if t
+    def encode(rid: int, text) -> bytes:
+        key = rid - 3 if rid % 7 == 3 else rid
+        sr = 8000 + 8000 * (key % 2)
+        nf = 3 + key % 3
+        sam = []
+        for f in range(nf):
+            if key % 5 == 0 and f % 3 != 0:
+                sam += [0] * 160
+            else:
+                sam += [
+                    (((f * 160 + s) * 7919 + key * 104729) % 65536) - 32768
+                    for s in range(160)
                 ]
-                cap = " ".join(toks[: 1 + rid % 12])
-                k = f"{rid:06d}"
-                payloads.append(
-                    webdataset.encode_tar(
-                        [(f"{k}.flac", flac), (f"{k}.txt", cap.encode())]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+        k = f"{rid:06d}"
+        return webdataset.encode_tar(
+            [
+                (f"{k}.flac", multimodal.encode_flac(sr, sam)),
+                (f"{k}.txt", _caption(rid, text).encode()),
+            ]
+        )
 
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
     # The FLAC-encode kernel needs text too, so the id-only
-    # multimodal.id_kernel doesn't apply — spread the (id, text) frame itself off the
-    # one-split scan, priced for a ms-per-row kernel (r10 A/B: width 4
-    # beat 1-split 3.19 s and full-32 2.80 s at 2.45 s).
+    # kernels.id_kernel doesn't apply — spread the (id, text) frame
+    # itself off the one-split scan, priced for a ms-per-row kernel
+    # (r10 A/B: width 4 beat 1-split 3.19 s and full-32 2.80 s at 2.45 s).
     spread = text_ops.spread_small_input(
         d.select("doc_id", "text"), "doc_id", rows_per_task=64
     )
-    shards = spread.mapInPandas(kernel, out_schema).localCheckpoint(
+    shards = kernels.payload_map(spread, "doc_id", encode, inputs=("text",)).localCheckpoint(
         eager=False  # two consumers: the .flac leg and the .txt leg
     )
     flacs = webdataset.extract_tar_members(shards, suffix=".flac").select(
@@ -6882,82 +6750,57 @@ def _video_pipeline_sql() -> str:
     "arithmetic closed-form.",
 )
 def multimodal_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from .sources import webdataset
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf["doc_id"], pdf["text"]):
-                rid = int(rid)
-                key = rid - 3 if rid % 7 == 3 else rid
-                w, h = 8 * (1 + key % 3), 8 * (1 + key % 2)
-                static = key % 5 == 0
-                nf = 2 + key % 4
-                if key % 11 == 4:
-                    # AVC leg (r6): real H.264 IDR samples in an MP4 —
-                    # flat per-frame planes whose moments have the
-                    # h264_flat_expected closed form (qp 28)
-                    frames = [
-                        multimodal.encode_h264_iframe_flat(
-                            w, h, qp=28,
-                            y_coeff=1 + (3 * key + (0 if static else 11 * f)) % 90,
-                            u_coeff=1 + key % 40,
-                            v_coeff=1 + (key // 3) % 40,
-                        )
-                        for f in range(nf)
-                    ]
-                    vid_member = (
-                        "mp4",
-                        multimodal.encode_mp4_frames(
-                            frames, codec="avc1", frame_duration_ms=250
-                        ),
-                    )
-                else:
-                    frames = [
-                        multimodal.encode_jpeg(
-                            w, h,
-                            lambda x, y, f=f: (
-                                3 * key + (0 if static else 11 * f)
-                                + 5 * (x // 8) + 7 * (y // 8)
-                            ) % 256,
-                        )
-                        for f in range(nf)
-                    ]
-                    vid_member = (
-                        "avi", multimodal.encode_avi_mjpeg(w, h, 250_000, frames)
-                    )
-                toks = [
-                    t for t in _re.split("[ \t\n\x0b\f\r]+",
-                                         "" if text is None else str(text))
-                    if t
-                ]
-                cap = " ".join(toks[: 1 + rid % 12])
-                k = f"{rid:06d}"
-                ext, vid_bytes = vid_member
-                payloads.append(
-                    webdataset.encode_tar(
-                        [(f"{k}.{ext}", vid_bytes), (f"{k}.txt", cap.encode())]
-                    )
+    def encode(rid: int, text) -> bytes:
+        key = rid - 3 if rid % 7 == 3 else rid
+        w, h = 8 * (1 + key % 3), 8 * (1 + key % 2)
+        static = key % 5 == 0
+        nf = 2 + key % 4
+        if key % 11 == 4:
+            # AVC leg (r6): real H.264 IDR samples in an MP4 —
+            # flat per-frame planes whose moments have the
+            # h264_flat_expected closed form (qp 28)
+            frames = [
+                multimodal.encode_h264_iframe_flat(
+                    w, h, qp=28,
+                    y_coeff=1 + (3 * key + (0 if static else 11 * f)) % 90,
+                    u_coeff=1 + key % 40,
+                    v_coeff=1 + (key // 3) % 40,
                 )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+                for f in range(nf)
+            ]
+            vid_member = (
+                "mp4",
+                multimodal.encode_mp4_frames(
+                    frames, codec="avc1", frame_duration_ms=250
+                ),
+            )
+        else:
+            frames = [
+                multimodal.encode_jpeg(
+                    w, h,
+                    lambda x, y, f=f: (
+                        3 * key + (0 if static else 11 * f)
+                        + 5 * (x // 8) + 7 * (y // 8)
+                    ) % 256,
+                )
+                for f in range(nf)
+            ]
+            vid_member = (
+                "avi", multimodal.encode_avi_mjpeg(w, h, 250_000, frames)
+            )
+        k = f"{rid:06d}"
+        ext, vid_bytes = vid_member
+        return webdataset.encode_tar(
+            [(f"{k}.{ext}", vid_bytes), (f"{k}.txt", _caption(rid, text).encode())]
+        )
 
-    shards = text_ops.spread_small_input(
-        d.select("doc_id", "text"), "doc_id", rows_per_task=64
-    ).mapInPandas(kernel, out_schema).localCheckpoint(
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
+    shards = kernels.payload_map(
+        text_ops.spread_small_input(d.select("doc_id", "text"), "doc_id", rows_per_task=64),
+        "doc_id", encode, inputs=("text",),
+    ).localCheckpoint(
         eager=False  # two consumers: the .avi leg and the .txt leg
     )
     avis = (

@@ -25,12 +25,11 @@ Reference analog: none (north-star web-pipeline surface, SURVEY §7.5)
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import kernels
 
 __all__ = ["parse_robots", "robots_rules", "robots_filter"]
 
@@ -87,31 +86,20 @@ def robots_rules(
     agent: str = "*",
 ) -> DataFrame:
     """(host, robots_txt) → exploded rule rows (host, prefix, allow,
-    rule_len) via Arrow-batched mapInPandas — the broadcast-sized side
-    of robots_filter. Hosts whose file yields no applicable rules emit
-    nothing (no rule ⇒ allowed, decided at match time)."""
-    schema = T.StructType(
+    rule_len) via the scaffold's explode — the broadcast-sized side
+    of robots_filter. Hosts whose file yields no applicable rules (or
+    is NULL) emit nothing (no rule ⇒ allowed, decided at match time)."""
+    return kernels.explode(
+        df.select(F.col(host_col).alias("host"), F.col(robots_col).alias("robots_txt")),
+        lambda txt: [(p, a, len(p)) for p, a in parse_robots(str(txt), agent)],
         [
-            T.StructField("host", T.StringType()),
-            T.StructField("prefix", T.StringType()),
-            T.StructField("allow", T.BooleanType()),
-            T.StructField("rule_len", T.IntegerType()),
-        ]
+            ("host", T.StringType(), None),
+            ("prefix", T.StringType(), None),
+            ("allow", T.BooleanType(), None),
+            ("rule_len", T.IntegerType(), "int32"),
+        ],
+        inputs=("robots_txt",),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, txt in zip(pdf[host_col], pdf[robots_col]):
-                for prefix, allow in parse_robots(
-                    "" if txt is None else str(txt), agent
-                ):
-                    rows.append((host, prefix, allow, len(prefix)))
-            yield pd.DataFrame(
-                rows, columns=["host", "prefix", "allow", "rule_len"]
-            ).astype({"rule_len": "int32"})
-
-    return df.select(host_col, robots_col).mapInPandas(kernel, schema)
 
 
 def robots_filter(

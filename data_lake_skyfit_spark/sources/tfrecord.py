@@ -29,11 +29,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..functions import kernels
 
 __all__ = ["crc32c", "encode_tfrecord", "parse_tfrecord", "read_tfrecord_records"]
 
@@ -103,38 +102,25 @@ def parse_tfrecord(data: bytes) -> list[dict]:
 
 def read_tfrecord_records(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """payload → one row per record: (id, rec_idx, length, payload_md5)
-    via Arrow-batched mapInPandas; malformed shards quarantine to one
+    via the scaffold's explode; malformed shards quarantine to one
     rec_idx −1 row (the warc/webdataset discipline)."""
-    schema = T.StructType(
+
+    def rows_of(payload) -> list[tuple]:
+        recs = parse_tfrecord(bytes(payload))
+        if not recs:
+            raise ValueError("no records in shard")
+        return [(i, r["length"], r["payload_md5"]) for i, r in enumerate(recs)]
+
+    return kernels.explode(
+        df,
+        rows_of,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("rec_idx", T.IntegerType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("payload_md5", T.StringType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("rec_idx", T.IntegerType(), "int32"),
+            ("length", T.LongType(), "Int64"),
+            ("payload_md5", T.StringType(), None),
+        ],
+        inputs=("payload",),
+        errors=(ValueError, TypeError),
+        quarantine=(-1, None, None),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                rid = int(rid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    recs = parse_tfrecord(bytes(payload))
-                    if not recs:
-                        raise ValueError("no records in shard")
-                except (ValueError, TypeError):
-                    rows.append((rid, -1, None, None))
-                    continue
-                for i, r in enumerate(recs):
-                    rows.append((rid, i, r["length"], r["payload_md5"]))
-            out = pd.DataFrame(
-                rows, columns=[id_col, "rec_idx", "length", "payload_md5"]
-            )
-            out["rec_idx"] = out["rec_idx"].astype("int32")
-            out["length"] = out["length"].astype("Int64")
-            yield out
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)

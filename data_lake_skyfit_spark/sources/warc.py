@@ -15,8 +15,8 @@ one-shot decompress), and malformed records raise ValueError — the
 Spark kernel quarantines those rows with a NULL type instead of
 failing the task (the corrupt-row discipline of sources/formats.py).
 
-Spark surface: `read_warc_records` is an Arrow-batched mapInPandas
-over a binary payload column — at scale each task parses its own
+Spark surface: `read_warc_records` is the scaffold's Arrow-batched
+explode (functions/kernels.py) over a binary payload column — at scale each task parses its own
 archive payloads independently (WARC's member-gzip framing exists
 precisely so archives split; a production path-listing reader would
 pair this kernel with per-file splits, same as the bronze reader).
@@ -30,11 +30,10 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..functions import kernels
 
 __all__ = [
     "encode_warc",
@@ -225,44 +224,34 @@ def synthesize_warc_payloads(df: DataFrame, *, id_col: str = "doc_id") -> DataFr
     45+strlen(text) / strlen('length: ' || strlen(text)); body md5s are
     md5 of the literal strings. Byte lengths, not codepoint counts —
     the oracle must use strlen(), not length()."""
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(rid: int, text) -> bytes:
         from .brotli_codec import brotli_compress_store
 
-        for pdf in batches:
-            payloads = []
-            for rid, text in zip(pdf[id_col], pdf["text"]):
-                rid = int(rid)
-                body = ("" if text is None else str(text)).encode("utf-8")
-                uri = f"http://corpus.test/{rid}"
-                # HTTP Content-Encoding rotates by id — identity /
-                # gzip(stored) / brotli(store), both encoders chosen
-                # for CLOSED-FORM lengths the oracle can mirror
-                mode = rid % 3
-                if mode == 1:
-                    http = (_HTTP_HEADERS[:-2] + b"Content-Encoding: gzip\r\n"
-                            + _CRLF + _gzip_store(body))
-                elif mode == 2:
-                    http = (_HTTP_HEADERS[:-2] + b"Content-Encoding: br\r\n"
-                            + _CRLF + brotli_compress_store(body))
-                else:
-                    http = _HTTP_HEADERS + body
-                payloads.append(
-                    encode_warc(
-                        [
-                            ("warcinfo", None, b"software: skyfit\r\n"),
-                            ("response", uri, http),
-                            ("metadata", uri, f"length: {len(body)}".encode()),
-                        ],
-                        gzip_members=bool(rid % 2),
-                    )
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+        body = ("" if text is None else str(text)).encode("utf-8")
+        uri = f"http://corpus.test/{rid}"
+        # HTTP Content-Encoding rotates by id — identity /
+        # gzip(stored) / brotli(store), both encoders chosen
+        # for CLOSED-FORM lengths the oracle can mirror
+        mode = rid % 3
+        if mode == 1:
+            http = (_HTTP_HEADERS[:-2] + b"Content-Encoding: gzip\r\n"
+                    + _CRLF + _gzip_store(body))
+        elif mode == 2:
+            http = (_HTTP_HEADERS[:-2] + b"Content-Encoding: br\r\n"
+                    + _CRLF + brotli_compress_store(body))
+        else:
+            http = _HTTP_HEADERS + body
+        return encode_warc(
+            [
+                ("warcinfo", None, b"software: skyfit\r\n"),
+                ("response", uri, http),
+                ("metadata", uri, f"length: {len(body)}".encode()),
+            ],
+            gzip_members=bool(rid % 2),
+        )
 
-    return df.select(id_col, "text").mapInPandas(kernel, out_schema)
+    return kernels.payload_map(df, id_col, encode, inputs=("text",))
 
 
 def read_warc_records(
@@ -270,65 +259,37 @@ def read_warc_records(
 ) -> DataFrame:
     """payload → one row per WARC record: (id, rec_idx, warc_type,
     target_uri, content_length, http_status, body_md5[, body]) via
-    Arrow-batched mapInPandas. A malformed archive yields ONE
-    quarantine row with NULL warc_type and rec_idx -1 (same corrupt-row
-    discipline as the CSV PERMISSIVE reader) rather than failing the
-    task. `include_body` adds the decoded body text (utf-8, replace) —
-    the column downstream extraction stages consume; leave it off for
-    manifest-style scans so record metadata, not page bytes, crosses
-    the exchange."""
-    fields = [
-        T.StructField(id_col, T.LongType()),
-        T.StructField("rec_idx", T.IntegerType()),
-        T.StructField("warc_type", T.StringType()),
-        T.StructField("target_uri", T.StringType()),
-        T.StructField("content_length", T.LongType()),
-        T.StructField("http_status", T.IntegerType()),
-        T.StructField("content_encoding", T.StringType()),
-        T.StructField("body_md5", T.StringType()),
-    ]
-    if include_body:
-        fields.append(T.StructField("body", T.StringType()))
-    schema = T.StructType(fields)
-    cols = [f.name for f in fields]
+    the scaffold's explode. A malformed, NULL or record-less archive
+    yields ONE quarantine row with NULL warc_type and rec_idx -1 (same
+    corrupt-row discipline as the CSV PERMISSIVE reader) rather than
+    failing the task. `include_body` adds the decoded body text (utf-8,
+    replace) — the column downstream extraction stages consume; leave
+    it off for manifest-style scans so record metadata, not page bytes,
+    crosses the exchange."""
+    fields = ["warc_type", "target_uri", "content_length", "http_status",
+              "content_encoding", "body_md5"] + (["body"] if include_body else [])
+    columns = [
+        (id_col, T.LongType(), None),
+        ("rec_idx", T.IntegerType(), "int32"),
+        ("warc_type", T.StringType(), None),
+        ("target_uri", T.StringType(), None),
+        ("content_length", T.LongType(), "Int64"),
+        ("http_status", T.IntegerType(), "Int32"),
+        ("content_encoding", T.StringType(), None),
+        ("body_md5", T.StringType(), None),
+    ] + ([("body", T.StringType(), None)] if include_body else [])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                rid = int(rid)
-                try:
-                    # NULL and zero-record payloads take the quarantine
-                    # row too (code-review r4c): bytes(None) raises
-                    # TypeError, and parse_warc(b'') returns [] — both
-                    # previously either failed the task or silently
-                    # dropped the doc from the output.
-                    if payload is None:
-                        raise ValueError("null payload")
-                    recs = parse_warc(bytes(payload), include_body=include_body)
-                    if not recs:
-                        raise ValueError("no WARC records in payload")
-                except (ValueError, TypeError):
-                    rows.append((rid, -1) + (None,) * (len(cols) - 2))
-                    continue
-                for i, r in enumerate(recs):
-                    row = (
-                        rid,
-                        i,
-                        r["warc_type"],
-                        r["target_uri"],
-                        r["content_length"],
-                        r["http_status"],
-                        r["content_encoding"],
-                        r["body_md5"],
-                    )
-                    if include_body:
-                        row += (r["body"],)
-                    rows.append(row)
-            out = pd.DataFrame(rows, columns=cols)
-            out["content_length"] = out["content_length"].astype("Int64")
-            out["http_status"] = out["http_status"].astype("Int32")
-            out["rec_idx"] = out["rec_idx"].astype("int32")
-            yield out
+    def rows_of(payload) -> list[tuple]:
+        recs = parse_warc(bytes(payload), include_body=include_body)
+        if not recs:
+            raise ValueError("no WARC records in payload")
+        return [(i, *(r[f] for f in fields)) for i, r in enumerate(recs)]
 
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
+    return kernels.explode(
+        df,
+        rows_of,
+        columns,
+        inputs=("payload",),
+        errors=(ValueError, TypeError),
+        quarantine=(-1,) + (None,) * len(fields),
+    )

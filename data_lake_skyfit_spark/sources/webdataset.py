@@ -12,8 +12,8 @@ length-checked against the buffer BEFORE slicing, data padded to
 512-byte blocks, two zero blocks at the end. Malformed shards
 quarantine per payload (rec_idx −1), never fail the task.
 
-Spark surface mirrors sources/warc.py: `read_tar_members` is an
-Arrow-batched mapInPandas over a binary payload column — one task per
+Spark surface mirrors sources/warc.py: `read_tar_members` is the
+scaffold's Arrow-batched explode over a binary payload column — one task per
 shard-sized payload, embarrassingly parallel, nothing shuffles but the
 rows the caller asks for. `sample_key_expr` splits member names into
 (key, ext) so a groupBy(key) reassembles samples — the WebDataset
@@ -26,12 +26,13 @@ Reference analog: none (north-star §7.5 surface beside warc.py).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import kernels
 
 __all__ = ["encode_tar", "parse_tar", "read_tar_members", "sample_key_expr"]
 
@@ -139,34 +140,21 @@ def extract_tar_members(
     tier), mirroring zipshard.extract_zip_members. Malformed archives
     drop silently here (read_tar_members is the quarantine-reporting
     surface)."""
-    schema = T.StructType(
+    return kernels.explode(
+        df,
+        lambda payload: [
+            (r["name"], r["content"])
+            for r in parse_tar(bytes(payload), include_content=True)
+            if r["name"].endswith(suffix)
+        ],
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("name", T.StringType(), None),
+            ("payload", T.BinaryType(), None),
+        ],
+        inputs=("payload",),
+        errors=(ValueError, TypeError),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, payloads = [], [], []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    recs = (
-                        parse_tar(bytes(payload), include_content=True)
-                        if payload is not None
-                        else []
-                    )
-                except (ValueError, TypeError):
-                    continue
-                for r in recs:
-                    if r["name"].endswith(suffix):
-                        ids.append(int(rid))
-                        names.append(r["name"])
-                        payloads.append(r["content"])
-            yield pd.DataFrame({id_col: ids, "name": names, "payload": payloads})
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def sample_key_expr(name: Column | str) -> tuple[Column, Column]:
@@ -182,41 +170,37 @@ def sample_key_expr(name: Column | str) -> tuple[Column, Column]:
 
 def read_tar_members(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """payload → one row per regular-file member: (id, rec_idx, name,
-    size, member_md5, sample_key, ext). Malformed archives quarantine
-    to one NULL-name row with rec_idx −1 (the warc.py discipline)."""
-    schema = T.StructType(
+    size, member_md5, sample_key, ext). Malformed, NULL or member-less
+    archives quarantine to one NULL-name row with rec_idx −1 (the
+    warc.py discipline)."""
+    return _member_rows(df, id_col, "payload", bytes)
+
+
+def _member_rows(
+    df: DataFrame, id_col: str, payload_col: str, unpack: Callable[[bytes], bytes]
+) -> DataFrame:
+    """read_tar_members over ``unpack(payload)`` — the tar.zst reader
+    passes its decompressor, and a payload it rejects quarantines."""
+
+    def rows_of(payload) -> list[tuple]:
+        recs = parse_tar(unpack(payload))
+        if not recs:
+            raise ValueError("no members in archive")
+        return [(i, r["name"], r["size"], r["member_md5"]) for i, r in enumerate(recs)]
+
+    base = kernels.explode(
+        df,
+        rows_of,
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("rec_idx", T.IntegerType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("member_md5", T.StringType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("rec_idx", T.IntegerType(), "int32"),
+            ("name", T.StringType(), None),
+            ("size", T.LongType(), "Int64"),
+            ("member_md5", T.StringType(), None),
+        ],
+        inputs=(payload_col,),
+        errors=(ValueError, TypeError),
+        quarantine=(-1, None, None, None),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                rid = int(rid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    recs = parse_tar(bytes(payload))
-                    if not recs:
-                        raise ValueError("no members in archive")
-                except (ValueError, TypeError):
-                    rows.append((rid, -1, None, None, None))
-                    continue
-                for i, r in enumerate(recs):
-                    rows.append((rid, i, r["name"], r["size"], r["member_md5"]))
-            out = pd.DataFrame(
-                rows, columns=[id_col, "rec_idx", "name", "size", "member_md5"]
-            )
-            out["rec_idx"] = out["rec_idx"].astype("int32")
-            out["size"] = out["size"].astype("Int64")
-            yield out
-
-    base = df.select(id_col, "payload").mapInPandas(kernel, schema)
     key, ext = sample_key_expr("name")
     return base.withColumn("sample_key", key).withColumn("ext", ext)

@@ -22,13 +22,11 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import kernels
 
 __all__ = ["encode_zip", "parse_zip", "read_zip_members", "extract_zip_members"]
 
@@ -156,6 +154,10 @@ def parse_zip(data: bytes) -> list[dict]:
     return out
 
 
+#: what parse_zip raises on a malformed archive
+_ZIP_ERRORS = (ValueError, TypeError, struct.error)
+
+
 def extract_zip_members(
     df: DataFrame, *, id_col: str = "doc_id", suffix: str = ""
 ) -> DataFrame:
@@ -165,74 +167,52 @@ def extract_zip_members(
     decode_images over the .png members of a LAION-style shard).
     Malformed archives drop silently here (read_zip_members is the
     quarantine-reporting surface)."""
-    schema = T.StructType(
+    return kernels.explode(
+        df,
+        lambda payload: [
+            (r["name"], r["content"])
+            for r in parse_zip(bytes(payload))
+            if r["name"].endswith(suffix)
+        ],
         [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+            (id_col, T.LongType(), None),
+            ("name", T.StringType(), None),
+            ("payload", T.BinaryType(), None),
+        ],
+        inputs=("payload",),
+        errors=_ZIP_ERRORS,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, names, payloads = [], [], []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    recs = parse_zip(bytes(payload)) if payload is not None else []
-                except (ValueError, TypeError, struct.error):
-                    continue
-                for r in recs:
-                    if r["name"].endswith(suffix):
-                        ids.append(int(rid))
-                        names.append(r["name"])
-                        payloads.append(r["content"])
-            yield pd.DataFrame({id_col: ids, "name": names, "payload": payloads})
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)
 
 
 def read_zip_members(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """payload → one row per member: (id, rec_idx, name, method, size,
-    member_md5). Central-directory order is the record order; malformed
-    archives quarantine to one NULL-name row with rec_idx −1 (the
-    warc.py/webdataset.py discipline). Arrow-batched 1→N mapInPandas;
-    at 100 TB each shard decodes where it lands, one manifest row per
-    member crosses the shuffle."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("rec_idx", T.IntegerType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("method", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("member_md5", T.StringType()),
+    member_md5). Central-directory order is the record order; malformed,
+    NULL or member-less archives quarantine to one NULL-name row with
+    rec_idx −1 (the warc.py/webdataset.py discipline). The scaffold's
+    Arrow-batched explode; at 100 TB each shard decodes where it lands,
+    one manifest row per member crosses the shuffle."""
+
+    def rows_of(payload) -> list[tuple]:
+        recs = parse_zip(bytes(payload))
+        if not recs:
+            raise ValueError("no members in archive")
+        return [
+            (i, r["name"], r["method"], r["size"], r["member_md5"])
+            for i, r in enumerate(recs)
         ]
+
+    return kernels.explode(
+        df,
+        rows_of,
+        [
+            (id_col, T.LongType(), None),
+            ("rec_idx", T.IntegerType(), "int32"),
+            ("name", T.StringType(), None),
+            ("method", T.StringType(), None),
+            ("size", T.LongType(), "Int64"),
+            ("member_md5", T.StringType(), None),
+        ],
+        inputs=("payload",),
+        errors=_ZIP_ERRORS,
+        quarantine=(-1, None, None, None, None),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf["payload"]):
-                rid = int(rid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    recs = parse_zip(bytes(payload))
-                    if not recs:
-                        raise ValueError("no members in archive")
-                except (ValueError, TypeError, struct.error):
-                    rows.append((rid, -1, None, None, None, None))
-                    continue
-                for i, r in enumerate(recs):
-                    rows.append(
-                        (rid, i, r["name"], r["method"], r["size"], r["member_md5"])
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[id_col, "rec_idx", "name", "method", "size", "member_md5"],
-            )
-            out["rec_idx"] = out["rec_idx"].astype("int32")
-            out["size"] = out["size"].astype("Int64")
-            yield out
-
-    return df.select(id_col, "payload").mapInPandas(kernel, schema)

@@ -9,28 +9,25 @@ a corpus row carrying a compressed shard, a composite container
 holding zst members. Decode is the pure-Python sources/zstd_codec
 (wire-pinned against libzstd) so executors need no native deps.
 
-Scale: embarrassingly parallel mapInPandas — one task per shard
-payload, nothing shuffles except the rows the caller keeps. Bad
-payloads quarantine per row (line_idx −1, error text) rather than
-failing the task (the WARC/tar discipline).
+Scale: the scaffold's embarrassingly parallel explode
+(functions/kernels.py) — one task per shard payload, nothing shuffles
+except the rows the caller keeps. Bad and NULL payloads quarantine per
+row (line_idx −1, error text) rather than failing the task (the
+WARC/tar discipline).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import kernels
 from .lz4_codec import lz4_decompress
 from .zstd_codec import zstd_compress, zstd_compress_store, zstd_decompress
 
 __all__ = [
     "decompress_shard",
     "read_compressed_jsonl_lines",
-    "read_zst_jsonl_lines",
     "read_tar_zst_members",
     "synthesize_zst_jsonl_payloads",
 ]
@@ -139,87 +136,47 @@ def read_compressed_jsonl_lines(
 ) -> DataFrame:
     """(id, payload = compressed JSONL bytes, codec magic-sniffed) →
     one row per decompressed line: (id, line_idx, line, n_bytes).
-    Malformed payloads yield a single quarantine row (line_idx −1,
-    error in `line`). `codec_col` names an optional per-row codec hint
+    Malformed and NULL payloads yield a single quarantine row (line_idx
+    −1, error in `line`). `codec_col` names an optional per-row codec hint
     column ('auto' or 'br') — needed for headerless brotli shards,
     where the extension, not a magic, identifies the wire."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("line_idx", T.IntegerType()),
-            T.StructField("line", T.StringType()),
-            T.StructField("n_bytes", T.IntegerType()),
+
+    def rows_of(payload, hint="auto") -> list[tuple]:
+        raw = decompress_shard(bytes(payload), max_out=_MAX_MEMBER,
+                               codec=str(hint or "auto"))
+        return [
+            (i, ln, len(ln.encode("utf-8")))
+            for i, ln in enumerate(raw.decode("utf-8").splitlines())
         ]
+
+    return kernels.explode(
+        df,
+        rows_of,
+        [
+            (id_col, T.LongType(), None),
+            ("line_idx", T.IntegerType(), "int32"),
+            ("line", T.StringType(), None),
+            ("n_bytes", T.IntegerType(), "int32"),
+        ],
+        inputs=(payload_col,) + ((codec_col,) if codec_col else ()),
+        errors=(ValueError, UnicodeDecodeError),
+        quarantine=lambda e: (-1, f"error: {e}", 0),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, lines, sizes = [], [], [], []
-            hints = pdf[codec_col] if codec_col else ["auto"] * len(pdf)
-            for rid, payload, hint in zip(pdf[id_col], pdf[payload_col], hints):
-                rid = int(rid)
-                try:
-                    raw = decompress_shard(bytes(payload), max_out=_MAX_MEMBER,
-                                           codec=str(hint or "auto"))
-                    text = raw.decode("utf-8")
-                except (ValueError, UnicodeDecodeError) as e:
-                    ids.append(rid)
-                    idxs.append(-1)
-                    lines.append(f"error: {e}")
-                    sizes.append(0)
-                    continue
-                for i, ln in enumerate(text.splitlines()):
-                    ids.append(rid)
-                    idxs.append(i)
-                    lines.append(ln)
-                    sizes.append(len(ln.encode("utf-8")))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="int64"),
-                    "line_idx": pd.array(idxs, dtype="int32"),
-                    "line": lines,
-                    "n_bytes": pd.array(sizes, dtype="int32"),
-                }
-            )
-
-    cols = [id_col, payload_col] + ([codec_col] if codec_col else [])
-    return df.select(*cols).mapInPandas(kernel, schema)
-
-
-# the zst-specific name the first callers used; the reader has been
-# magic-sniffing since lz4/gzip joined the contract
-read_zst_jsonl_lines = read_compressed_jsonl_lines
 
 
 def read_tar_zst_members(
     df: DataFrame, *, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, payload=tar.zst bytes) → the WebDataset member rows of
-    sources/webdataset.read_tar_members, after in-kernel zstd. The
+    sources/webdataset.read_tar_members, after in-kernel zstd; a payload
+    that does not decompress quarantines like a malformed tar. The
     compressed-shard composition real multimodal corpora use."""
-    from .webdataset import read_tar_members
+    from .webdataset import _member_rows
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(payload_col, T.BinaryType()),
-        ]
+    return _member_rows(
+        df, id_col, payload_col,
+        lambda payload: zstd_decompress(bytes(payload), max_out=_MAX_MEMBER),
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                try:
-                    out.append(zstd_decompress(bytes(payload), max_out=_MAX_MEMBER))
-                except ValueError:
-                    out.append(b"")  # read_tar_members quarantines it
-            yield pd.DataFrame({id_col: pdf[id_col], payload_col: out})
-
-    plain = df.select(id_col, payload_col).mapInPandas(kernel, schema)
-    if payload_col != "payload":
-        plain = plain.withColumnRenamed(payload_col, "payload")
-    return read_tar_members(plain, id_col=id_col)
 
 
 def synthesize_zst_jsonl_payloads(
@@ -239,44 +196,40 @@ def synthesize_zst_jsonl_payloads(
     fixture also emits a `codec` hint column ('br' / 'auto') the
     reader forwards to decompress_shard — exactly the information a
     real ingest has from the shard filename extension."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("codec", T.StringType()),
-        ]
+
+    import bz2
+    import gzip
+    import lzma
+
+    from .brotli_codec import brotli_compress
+    from .lz4_codec import lz4_compress
+
+    encoders = (
+        zstd_compress,
+        zstd_compress_store,
+        lz4_compress,
+        lambda raw: gzip.compress(raw, mtime=0),  # deterministic
+        bz2.compress,
+        lambda raw: lzma.compress(raw, format=lzma.FORMAT_XZ),
+        brotli_compress,
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import bz2
-        import gzip
-        import lzma
+    def encode(rid) -> tuple[bytes, str]:
+        rid = int(rid)
+        lines = [
+            bytes([65 + (rid + j) % 26]) * (10 + (rid * 7 + j) % 23)
+            for j in range(4 + rid % 7)
+        ]
+        raw = b"\n".join(lines) + b"\n"
+        return encoders[rid % 7](raw), "br" if rid % 7 == 6 else "auto"
 
-        from .brotli_codec import brotli_compress
-        from .lz4_codec import lz4_compress
-
-        encoders = (
-            zstd_compress,
-            zstd_compress_store,
-            lz4_compress,
-            lambda raw: gzip.compress(raw, mtime=0),  # deterministic
-            bz2.compress,
-            lambda raw: lzma.compress(raw, format=lzma.FORMAT_XZ),
-            brotli_compress,
-        )
-        for pdf in batches:
-            payloads = []
-            codecs = []
-            for rid in (int(v) for v in pdf[id_col]):
-                lines = [
-                    bytes([65 + (rid + j) % 26]) * (10 + (rid * 7 + j) % 23)
-                    for j in range(4 + rid % 7)
-                ]
-                raw = b"\n".join(lines) + b"\n"
-                payloads.append(encoders[rid % 7](raw))
-                codecs.append("br" if rid % 7 == 6 else "auto")
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "codec": codecs}
-            )
-
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return kernels.row_map(
+        df,
+        encode,
+        [
+            (id_col, T.LongType(), None),
+            ("payload", T.BinaryType(), None),
+            ("codec", T.StringType(), None),
+        ],
+        inputs=(id_col,),
+    )

@@ -74,11 +74,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)

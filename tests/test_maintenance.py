@@ -50,32 +50,6 @@ def test_media_embeddings_feed_ann(spark):
     assert all(r["query_id"] != r["neighbor_id"] for r in rows)
 
 
-def test_observed_write_collects_metrics_inline(spark, tmp_path):
-    """observed_write returns the audit counters collected during the
-    write job itself — values must match a post-hoc recomputation."""
-    from data_lake_skyfit_spark.audit import observed_write
-    from data_lake_skyfit_spark.operators.merge import ParquetTable
-
-    df = spark.createDataFrame(
-        [
-            (1, "a", "2024-01-01 10:00:00"),
-            (2, None, "2024-01-03 10:00:00"),
-            (2, "b", "2024-01-02 10:00:00"),
-            (None, "c", None),
-        ],
-        "k long, s string, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    t = ParquetTable(str(tmp_path / "obs"), ["k"])
-    got = observed_write(df, t, key_cols=["k", "s"], ts_col="ts")
-    assert got["n_rows"] == 4
-    assert got["n_null_keys"] == 2  # (2, None) and (None, 'c')
-    assert got["approx_n_keys"] >= 3  # HLL++ estimate over 4 distinct tuples
-    assert str(got["max_ts"]).startswith("2024-01-03")
-    assert str(got["min_ts"]).startswith("2024-01-01")
-    # The write really happened:
-    assert t.read(spark).count() == 4
-
-
 def test_clustered_compaction_enables_file_skipping(spark, tmp_path):
     """compact(cluster_by=...) must produce near-disjoint per-file
     min/max ranges on the cluster column (parquet footer stats), where

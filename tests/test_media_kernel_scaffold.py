@@ -1,4 +1,4 @@
-"""Pins for the media-kernel scaffold in llm/multimodal.py.
+"""Pins for the kernels on the Arrow-kernel scaffold (functions/kernels.py).
 
 Payload pin: every ``synthesize_*`` fixture kernel emits byte-identical
 payloads over an id set that reaches every id branch its docstring
@@ -8,7 +8,13 @@ Width pin: every ``synthesize_*`` output is spread to the session's
 core, 8.5 s against 1.4 s spread), except the two row-priced neardup
 kernels, which take ceil(rows / 64) tasks.
 
-All 38 outputs are collected in ONE union job to keep tier-1 time small.
+Source pin: the two ``sources/`` synthesize kernels' payloads, and
+every container reader's sorted output rows over real, empty and junk
+payloads (plus robots_rules over its text column), are byte-identical
+to digests recorded before those kernels moved onto the scaffold; each
+output keeps its input's partition width.
+
+All outputs are collected in ONE union job to keep tier-1 time small.
 """
 
 from __future__ import annotations
@@ -20,6 +26,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_lake_skyfit_spark.llm import multimodal as mm
+from data_lake_skyfit_spark.sources import (
+    robots,
+    tfrecord,
+    warc,
+    webdataset,
+    zipshard,
+    zstd_shards,
+)
+from data_lake_skyfit_spark.sources.zstd_codec import zstd_compress
 
 # (label, function name, keyword arguments, ids reaching every branch)
 _CASES = [
@@ -138,16 +153,45 @@ def test_every_synthesize_kernel_is_pinned():
     assert names == {name for _l, name, _k, _i in _CASES}
 
 
-def test_synthesize_payloads_byte_identical(synthesized):
-    union = None
-    for label, _name, _n, out in synthesized:
-        tagged = out.select(F.lit(label).alias("label"), "doc_id", "payload")
-        union = tagged if union is None else union.unionAll(tagged)
+@pytest.fixture(scope="module")
+def sources(spark):
+    return _source_outputs(spark)
+
+
+@pytest.fixture(scope="module")
+def collected(synthesized, sources):
+    """Every pinned output's rows, label → rows, from ONE union job:
+    fixture payloads as (doc_id, payload), source outputs as one JSON
+    string per row."""
+    tagged = [
+        out.select(F.lit(label).alias("label"), "doc_id", "payload",
+                   F.lit(None).cast("string").alias("row"))
+        for label, _name, _n, out in synthesized
+    ] + [
+        out.select(
+            F.lit(label).alias("label"),
+            F.lit(None).cast("long").alias("doc_id"),
+            F.lit(None).cast("binary").alias("payload"),
+            F.to_json(F.struct(*out.columns), {"ignoreNullFields": "false"}).alias("row"),
+        )
+        for label, _inp, out in sources
+    ]
+    union = tagged[0]
+    for t in tagged[1:]:
+        union = union.unionAll(t)
     rows: dict[str, list] = {}
     for r in union.collect():
-        rows.setdefault(r["label"], []).append((r["doc_id"], bytes(r["payload"])))
-    got = {label: _digest(rows.get(label, [])) for label, *_ in _CASES}
-    assert {k: len(rows.get(k, [])) for k in got} == {
+        rows.setdefault(r["label"], []).append(r)
+    return rows
+
+
+def test_synthesize_payloads_byte_identical(collected):
+    rows = {
+        label: [(r["doc_id"], bytes(r["payload"])) for r in collected.get(label, [])]
+        for label, *_ in _CASES
+    }
+    got = {label: _digest(rows[label]) for label, *_ in _CASES}
+    assert {k: len(rows[k]) for k in got} == {
         label: len(list(ids)) for label, _n, _k, ids in _CASES
     }
     assert got == _DIGESTS
@@ -161,3 +205,106 @@ def test_synthesize_outputs_are_spread(spark, synthesized):
         for label, name, n, _out in synthesized
     }
     assert widths == want
+
+
+# junk: plain bytes, and bytes behind each container's magic
+_JUNK = [b"", b"junk", b"\x28\xb5\x2f\xfd" + b"\xff" * 12, b"WARC/1.0\r\nxx",
+         b"PK\x05\x06" + b"\x00" * 4]
+
+
+def _members(rid: int) -> list[tuple[str, bytes]]:
+    key = f"{rid:06d}"
+    return [(f"{key}.txt", (f"caption {rid} " * (1 + rid % 9)).encode()),
+            (f"{key}.cls", str(rid % 10).encode()),
+            (f"{key}.seg.png", bytes(range(rid % 7, 40 + rid)))]
+
+
+def _payload_frame(spark, payloads):
+    rows = list(enumerate(payloads + _JUNK))
+    return spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in rows], "doc_id long, payload binary"
+    )
+
+
+def _source_outputs(spark):
+    """(label, input frame, output frame) for every sources/ kernel."""
+    texts = spark.createDataFrame(
+        [(0, "alpha beta"), (1, None), (2, "caf\u00e9 \u00fcber"), (3, ""),
+         (4, "x" * 300), (5, "line one\nline two")],
+        "doc_id long, text string",
+    )
+    warcs = warc.synthesize_warc_payloads(texts)
+    zst = zstd_shards.synthesize_zst_jsonl_payloads(
+        spark.range(9).withColumnRenamed("id", "doc_id")
+    )
+    tars = _payload_frame(spark, [webdataset.encode_tar(_members(r)) for r in range(5)])
+    zips = _payload_frame(spark, [zipshard.encode_zip(_members(r)) for r in range(5)])
+    tfrs = _payload_frame(
+        spark, [tfrecord.encode_tfrecord([m for _n, m in _members(r)]) for r in range(5)]
+    )
+    tar_zst = _payload_frame(
+        spark, [zstd_compress(webdataset.encode_tar(_members(r))) for r in range(3)]
+    )
+    warc_junk = _payload_frame(spark, []).unionByName(warcs.select(
+        (F.col("doc_id") + 100).alias("doc_id"), "payload"))
+    zst_junk = _payload_frame(spark, []).withColumn("codec", F.lit("auto")).unionByName(
+        zst.select((F.col("doc_id") + 100).alias("doc_id"), "payload", "codec"))
+    hosts = spark.createDataFrame(
+        [("a.test", "User-agent: *\nDisallow: /private\nAllow: /private/ok\n"),
+         ("b.test", "User-agent: bot\nDisallow: /\n"), ("c.test", None),
+         ("d.test", "junk \x00 text")],
+        "host string, robots_txt string",
+    )
+    return [
+        ("warc_payloads", texts, warcs),
+        ("zst_payloads", None, zst),
+        ("warc_records", warc_junk, warc.read_warc_records(warc_junk)),
+        ("warc_records_body", warc_junk,
+         warc.read_warc_records(warc_junk, include_body=True)),
+        ("jsonl_lines", zst_junk,
+         zstd_shards.read_compressed_jsonl_lines(zst_junk, codec_col="codec")),
+        ("tar_members", tars, webdataset.read_tar_members(tars)),
+        ("tar_extract", tars, webdataset.extract_tar_members(tars, suffix=".txt")),
+        ("tar_extract_all", tars, webdataset.extract_tar_members(tars)),
+        ("zip_members", zips, zipshard.read_zip_members(zips)),
+        ("zip_extract", zips, zipshard.extract_zip_members(zips, suffix=".png")),
+        ("tfrecord_records", tfrs, tfrecord.read_tfrecord_records(tfrs)),
+        ("tar_zst_members", tar_zst, zstd_shards.read_tar_zst_members(tar_zst)),
+        ("robots_rules", hosts, robots.robots_rules(hosts)),
+    ]
+
+
+_SOURCE_DIGESTS = {
+    "warc_payloads": "2f42e0da439fa54f",
+    "zst_payloads": "240518cd349082f2",
+    "warc_records": "afa2260fff193301",
+    "warc_records_body": "af77b581cc40150e",
+    "jsonl_lines": "d402f95f6be3c9bf",
+    "tar_members": "7f7bf0d6178efa10",
+    "tar_extract": "23ae9000bf57c39c",
+    "tar_extract_all": "7f1eaffc329d5aba",
+    "zip_members": "a60e095ed3e998c3",
+    "zip_extract": "c2ff93f46dd0ce7c",
+    "tfrecord_records": "976f72ab2eece7ee",
+    "tar_zst_members": "f612b264ba064578",
+    "robots_rules": "84f0e3082ab2c731",
+}
+
+
+def test_source_kernel_outputs_byte_identical(collected, sources):
+    got = {
+        label: hashlib.sha256(
+            "\n".join(sorted(r["row"] for r in collected.get(label, []))).encode()
+        ).hexdigest()[:16]
+        for label, *_ in sources
+    }
+    assert got == _SOURCE_DIGESTS
+
+
+def test_source_outputs_keep_input_width(sources):
+    widths = {
+        label: out.rdd.getNumPartitions() for label, inp, out in sources if inp is not None
+    }
+    assert widths == {
+        label: inp.rdd.getNumPartitions() for label, inp, _o in sources if inp is not None
+    }

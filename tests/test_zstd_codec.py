@@ -193,7 +193,7 @@ def test_spark_reads_zst_json_files_natively(spark, tmp_path):
 
 
 def test_read_zst_jsonl_lines_and_quarantine(spark):
-    from data_lake_skyfit_spark.sources.zstd_shards import read_zst_jsonl_lines
+    from data_lake_skyfit_spark.sources.zstd_shards import read_compressed_jsonl_lines
 
     good = zstd_compress(b"alpha\nbeta\ngamma\n")
     corrupt = good[:4] + b"\xff" * 10  # zstd magic, garbage frame
@@ -207,7 +207,7 @@ def test_read_zst_jsonl_lines_and_quarantine(spark):
     )
     got = {
         (r["doc_id"], r["line_idx"]): r["line"]
-        for r in read_zst_jsonl_lines(rows).collect()
+        for r in read_compressed_jsonl_lines(rows).collect()
     }
     assert got[(1, 0)] == "alpha" and got[(1, 2)] == "gamma"
     assert got[(2, -1)].startswith("error:")
