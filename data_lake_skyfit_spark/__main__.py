@@ -29,7 +29,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-audit", action="store_true")
     args = p.parse_args(argv)
 
-    spark = get_spark("skyfit-daily-pipeline")
+    # An incremental day (no --full-refresh, STG already built) is a short
+    # cold process: its JVM compiles with C1 only (session._jit_options).
+    spark = get_spark(
+        "skyfit-daily-pipeline",
+        incremental_lake=None if args.full_refresh else args.root,
+    )
     lake = Lakehouse(spark, args.root)
 
     if args.entity:

@@ -6,7 +6,8 @@ Every such kernel in the package runs on this module, in one of two
 shapes:
 
 - `row_map`: one output row per input row (a decode, a feature vector,
-  an encoded payload);
+  an encoded payload). A null-intolerant map (every decoder) gives a
+  NULL payload the all-NULL row, as `explode` quarantines it;
 - `explode`: zero or more output rows per input row (the records of a
   container, the frames of a video). The row function may raise one of
   the kernel's declared exceptions; the kernel's quarantine row, or
@@ -71,10 +72,18 @@ def row_map(
     columns: Sequence[Column],
     *,
     inputs: Sequence[str],
+    null_intolerant: bool = False,
 ) -> DataFrame:
     """1→1: ``fn(*values of inputs)`` returns each row's output columns
-    after the key."""
-    return _run(df, columns, inputs, lambda keys, vals: (keys, [fn(*v) for v in vals]))
+    after the key. With ``null_intolerant``, a NULL first input (the
+    payload) gives the all-NULL row and ``fn`` is not called, so its
+    columns need nullable dtypes."""
+    null_row = (None,) * (len(columns) - 1)
+
+    def one(*v) -> tuple:
+        return null_row if null_intolerant and v[0] is None else fn(*v)
+
+    return _run(df, columns, inputs, lambda keys, vals: (keys, [one(*v) for v in vals]))
 
 
 def explode(

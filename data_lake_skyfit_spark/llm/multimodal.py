@@ -2785,12 +2785,13 @@ def decode_images(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         one,
         [
             (id_col, T.LongType(), None),
-            ("width", T.IntegerType(), "int32"),
-            ("height", T.IntegerType(), "int32"),
-            ("n_channels", T.IntegerType(), "int32"),
+            ("width", T.IntegerType(), "Int32"),
+            ("height", T.IntegerType(), "Int32"),
+            ("n_channels", T.IntegerType(), "Int32"),
             ("pixel_sum", T.LongType(), "Int64"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -2907,6 +2908,7 @@ def extract_embeddings(df: DataFrame, *, id_col: str = "doc_id", dims: int = 8) 
         features_of,
         [(id_col, T.LongType(), None), ("features", T.ArrayType(T.DoubleType()), None)],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -3711,13 +3713,14 @@ def decode_audio(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         one,
         [
             (id_col, T.LongType(), None),
-            ("sample_rate", T.IntegerType(), "int32"),
-            ("n_samples", T.LongType(), "int64"),
-            ("duration_ms", T.LongType(), "int64"),
+            ("sample_rate", T.IntegerType(), "Int32"),
+            ("n_samples", T.LongType(), "Int64"),
+            ("duration_ms", T.LongType(), "Int64"),
             ("sample_sum", T.LongType(), "Int64"),
             ("rms", T.DoubleType(), "Float64"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -3791,10 +3794,11 @@ def resize_images(
         [
             (id_col, T.LongType(), None),
             ("payload", T.BinaryType(), None),
-            ("width", T.IntegerType(), "int32"),
-            ("height", T.IntegerType(), "int32"),
+            ("width", T.IntegerType(), "Int32"),
+            ("height", T.IntegerType(), "Int32"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -3877,10 +3881,11 @@ def resample_audio(
         [
             (id_col, T.LongType(), None),
             ("payload", T.BinaryType(), None),
-            ("sample_rate", T.IntegerType(), "int32"),
-            ("n_samples", T.LongType(), "int64"),
+            ("sample_rate", T.IntegerType(), "Int32"),
+            ("n_samples", T.LongType(), "Int64"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -4039,15 +4044,26 @@ def encode_avi_mjpeg(
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body
 
 
-def _avi_video_pixels(data: bytes, every_ms: int, keyframes_only: bool = False):
+def _sum_sq(*planes) -> int:
+    """Σv² over the values of every plane (exact integers)."""
+    return sum(v * v for p in planes for v in p)
+
+
+def _no_sq(*planes) -> None:
+    return None
+
+
+def _avi_video_pixels(data: bytes, every_ms: int, keyframes_only: bool = False,
+                      include_sq: bool = True):
     """One RIFF walk capturing avih timing, the strf video format AND
     the movi frames, then per-SAMPLED-frame pixel decode. MJPG frames
     (or any frame carrying a JFIF signature) run the full entropy
     decode + IDCT + color conversion (_jpeg_pixels); uncompressed DIB
     frames sum raw channel bytes with the BMP stride rule. Returns
     [(frame_idx, ts_ms, width, height, n_channels, pixel_sum,
-    pixel_sq)]. AVI/MJPEG frames are all sync frames, so
-    ``keyframes_only`` (the MP4 leg's sampling flag) changes nothing."""
+    pixel_sq)], pixel_sq None unless ``include_sq``. AVI/MJPEG frames
+    are all sync frames, so ``keyframes_only`` (the MP4 leg's sampling
+    flag) changes nothing."""
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
     us_per_frame = None
@@ -4092,27 +4108,26 @@ def _avi_video_pixels(data: bytes, every_ms: int, keyframes_only: bool = False):
         raise ValueError("AVI missing or zero avih frame timing")
     step = max(1, every_ms * 1000 // us_per_frame)
     mjpg = struct.unpack("<I", b"MJPG")[0]
+    sq = _sum_sq if include_sq else _no_sq
     out = []
     for i in range(0, len(frames), step):
         f = frames[i]
         ts = i * us_per_frame // 1000
         if strf_comp == mjpg or _looks_like_jpeg(f):
             w, h, ch, raw = _jpeg_pixels(f)
-            out.append((i, ts, w, h, ch, sum(raw), sum(v * v for v in raw)))
+            out.append((i, ts, w, h, ch, sum(raw), sq(raw)))
         elif strf_comp == 0 and strf_w and strf_h and strf_bits:
             w, h = int(strf_w), abs(int(strf_h))
             ch = max(1, int(strf_bits) // 8)
             row, stride = w * ch, (w * ch + 3) // 4 * 4
             if len(f) == stride * h:
                 rows_ = [f[r * stride : r * stride + row] for r in range(h)]
-                total = sum(sum(r_) for r_ in rows_)
-                sq = sum(v * v for r_ in rows_ for v in r_)
+                total, fsq = sum(sum(r_) for r_ in rows_), sq(*rows_)
             elif len(f) == row * h:  # pad-free writer (encode_avi_dib)
-                total = sum(f)
-                sq = sum(v * v for v in f)
+                total, fsq = sum(f), sq(f)
             else:
                 raise ValueError("AVI DIB frame size does not match format")
-            out.append((i, ts, w, h, ch, total, sq))
+            out.append((i, ts, w, h, ch, total, fsq))
         else:
             raise ValueError("AVI frame compression needs external codec")
     return out
@@ -4196,7 +4211,9 @@ def decode_video_pixels(
 
     def rows(b):
         data = bytes(b)
-        decoded = _first_decode(data, _VIDEO_PIXEL_LADDER, every_ms, keyframes_only)
+        decoded = _first_decode(
+            data, _VIDEO_PIXEL_LADDER, every_ms, keyframes_only, include_sq
+        )
         if decoded is not None:
             return decoded
         _require_codec("av")
@@ -5490,7 +5507,7 @@ def _avcc_to_annexb(frame: bytes, cfg) -> bytes:
 
 
 def _mp4_video_pixels(data: bytes, every_ms: int,
-                      keyframes_only: bool = False):
+                      keyframes_only: bool = False, include_sq: bool = True):
     """MJPEG- and AVC-in-MP4 leg of decode_video_pixels: the REAL box
     walk (_mp4_samples) slices each sampled frame out of mdat and runs
     the matching real decoder — JFIF streams (codec 'jpeg'/'mjpa')
@@ -5502,13 +5519,15 @@ def _mp4_video_pixels(data: bytes, every_ms: int,
     raise → fake path.  ``keyframes_only`` restricts the walk to the
     stss sync samples (self-contained IDR pictures): non-sync samples
     are skipped WITHOUT decoding — the 100-TB sampling knob, since an
-    I-frame-only pass pays none of the P/B reference-chain cost."""
+    I-frame-only pass pays none of the P/B reference-chain cost.
+    Rows are _avi_video_pixels' (pixel_sq None unless ``include_sq``)."""
     timescale, deltas, samples = _mp4_samples(data)
     if not timescale:
         raise ValueError("mp4: zero timescale")
     avc_cfg = _mp4_avc_config(data)
     hevc_cfg = _mp4_hevc_config(data) if avc_cfg is None else None
     sync = _mp4_sync_samples(data, len(samples)) if keyframes_only else None
+    sq = _sum_sq if include_sq else _no_sq
     out = []
     t = 0
     next_emit = 0
@@ -5524,7 +5543,7 @@ def _mp4_video_pixels(data: bytes, every_ms: int,
         if _looks_like_jpeg(frame):
             if emit:
                 w, h, ch, raw = _jpeg_pixels(frame)
-                out.append((i, ts_ms, w, h, ch, sum(raw), sum(v * v for v in raw)))
+                out.append((i, ts_ms, w, h, ch, sum(raw), sq(raw)))
         elif hevc_cfg is not None:
             # hvcC-configured track: length-prefixed samples.  EVERY
             # sample decodes (r8: TRAIL P pictures need the unbroken
@@ -5541,9 +5560,7 @@ def _mp4_video_pixels(data: bytes, every_ms: int,
                 # channel count the pixels actually cover (ADVICE r7)
                 nch = 3 if ub else 1
                 if len(yb) == w * h:
-                    psum = sum(yb) + sum(ub) + sum(vb)
-                    psq = (sum(v * v for v in yb) + sum(v * v for v in ub)
-                           + sum(v * v for v in vb))
+                    psum, psq = sum(yb) + sum(ub) + sum(vb), sq(yb, ub, vb)
                 elif len(yb) == 2 * w * h:
                     # Main10/Main12 planes are uint16-LE — stats run
                     # over SAMPLES, not bytes (late r8: the HBD inter
@@ -5553,7 +5570,7 @@ def _mp4_video_pixels(data: bytes, every_ms: int,
                     arrs = [np.frombuffer(b, "<u2").astype(np.int64)
                             for b in (yb, ub, vb)]
                     psum = int(sum(int(a.sum()) for a in arrs))
-                    psq = int(sum(int((a * a).sum()) for a in arrs))
+                    psq = int(sum(int((a * a).sum()) for a in arrs)) if include_sq else None
                 else:
                     raise ValueError("mp4: implausible HEVC plane size")
                 out.append((i, ts_ms, w, h, nch, psum, psq))
@@ -5579,12 +5596,7 @@ def _mp4_video_pixels(data: bytes, every_ms: int,
             sps, yb, ub, vb, _poc = avc_dec.decode(au)
             if emit:
                 w, h, yp, up, vp = _h264_crop_planes(sps, yb, ub, vb)
-                psum = sum(yp) + sum(up) + sum(vp)
-                psq = (
-                    sum(v * v for v in yp)
-                    + sum(v * v for v in up)
-                    + sum(v * v for v in vp)
-                )
+                psum, psq = sum(yp) + sum(up) + sum(vp), sq(yp, up, vp)
                 out.append((i, ts_ms, w, h, 3, psum, psq))
         if emit:
             next_emit = ts_ms + every_ms
@@ -5772,6 +5784,7 @@ def image_dhash(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
             ("hash_lo", T.LongType(), "Int64"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -6499,7 +6512,7 @@ def extract_image_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
         meta = _first_decode(bytes(b), _IMAGE_META_LADDER) or {}
         return tuple(meta.get(c) for c, _t, _dtype in columns[1:])
 
-    return kernels.row_map(df, one, columns, inputs=("payload",))
+    return kernels.row_map(df, one, columns, inputs=("payload",), null_intolerant=True)
 
 
 def _fixture_exif_app1(rid: int, w: int, h: int) -> bytes:
@@ -6648,6 +6661,7 @@ def extract_audio_metadata(df: DataFrame, *, id_col: str = "doc_id") -> DataFram
             ("duration_ms", T.LongType(), "Int64"),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -8062,6 +8076,7 @@ def decode_avif_structure(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame
             ("tile_sum", T.LongType(), None),
         ],
         inputs=("payload",),
+        null_intolerant=True,
     )
 
 
@@ -8741,7 +8756,7 @@ _RESAMPLE_LADDER = (
 # audio_vad_frames(frame_size, energy_threshold): (frame_idx, energy, active)
 _VAD_LADDER = ((_looks_like_pcm, _vad_frames, _WAV_ERRORS),)
 
-# decode_video_pixels(every_ms, keyframes_only): per-frame pixel stats
+# decode_video_pixels(every_ms, keyframes_only, include_sq): per-frame pixel stats
 _VIDEO_PIXEL_LADDER = (
     (_looks_like_avi, _avi_video_pixels, _VSI),
     (_looks_like_mp4, _mp4_video_pixels, _VSI),

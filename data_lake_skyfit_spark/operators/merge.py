@@ -290,7 +290,8 @@ def _await_tasks(spark: SparkSession, group: str | None, since: set[int]) -> Non
         time.sleep(0.1)
 
 
-#: Per version: the committed schema (a version with no data file reads
+#: Per version: the committed schema (every read of the version passes
+#: it to Spark, so none infers one; a version with no data file reads
 #: back as zero rows of it) and the writer-transaction watermarks. Spark
 #: and pyarrow.dataset skip `_`-prefixed files, so a version stays a
 #: plain parquet dataset.
@@ -375,9 +376,21 @@ class ParquetTable:
         with open(os.path.join(self._dir(version), _COMMIT)) as f:
             return json.load(f)
 
+    def _schema(self, version: int) -> T.StructType:
+        return T.StructType.fromJson(self._meta(version)["schema"])
+
     def _empty(self, spark: SparkSession, version: int) -> DataFrame:
-        schema = T.StructType.fromJson(self._meta(version)["schema"])
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], self._schema(version))
+
+    def _scan(self, spark: SparkSession, version: int, *files: str) -> DataFrame:
+        """`files` of `version` (default: all of it) read with the schema
+        its commit recorded, partition column types included, so Spark
+        launches no schema-inference job; `basePath` keeps the partition
+        columns of a file subset."""
+        reader = spark.read.schema(self._schema(version))
+        if not files:
+            return reader.parquet(self._dir(version))
+        return reader.option("basePath", self._dir(version)).parquet(*files)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The table as of `version` (default: the live one). A version
@@ -386,7 +399,7 @@ class ParquetTable:
         d = self._dir(v)
         if not any(f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs):
             return self._empty(spark, v)
-        return spark.read.parquet(d)
+        return self._scan(spark, v)
 
     # -- the commit ---------------------------------------------------------
 
@@ -602,7 +615,7 @@ class ParquetTable:
             if f.endswith(".parquet")
         )
 
-    def _touched_files(self, source: DataFrame):
+    def _touched_files(self, source: DataFrame, version: int):
         """File-level prune for unpartitioned merges: which data files
         can contain a source key? Footer min/max ranges (broadcast —
         one small row per file) are range-joined against the source's
@@ -611,7 +624,7 @@ class ParquetTable:
         when stats are unusable (or not representable in a Spark frame)
         and the caller must rewrite fully."""
         key = self.key[0]
-        ranges = file_key_ranges(self.path, key)
+        ranges = file_key_ranges(self._dir(version), key)
         if not ranges:
             return None
         rows = [
@@ -686,6 +699,7 @@ class ParquetTable:
     def _merged(self, source, keys, mode, update_subset, order):
         """The merge's rewrite and the live files its commit carries."""
         spark = source.sparkSession
+        live = self.latest_version()
         target = self.read(spark)
 
         # Unpartitioned tables: file-level pruned rewrite. Only files
@@ -701,15 +715,19 @@ class ParquetTable:
             and self._data_bytes() >= self.prune_min_bytes
             and set(source.columns) <= set(target.columns)
         ):
-            pr = self._touched_files(source)
+            pr = self._touched_files(source, live)
             if pr is not None and pr[1]:  # touched == every file: full rewrite
                 touched, untouched = pr
-                kept = [os.path.relpath(f, self.path) for f in untouched]
+                kept = [os.path.relpath(f, self._dir(live)) for f in untouched]
                 if not touched:
                     # Pure-insert batch: no existing file can hold a
                     # matching key — append without reading the table.
-                    return align_schemas(target.limit(0), source)[1], lambda new: kept
-                tsub, src = align_schemas(spark.read.parquet(*touched), source)
+                    # The union widens the source's types to the
+                    # table's, as merge_rows does, so the new files
+                    # match the schema the commit records.
+                    empty, src = align_schemas(target.limit(0), source)
+                    return empty.unionByName(src), lambda new: kept
+                tsub, src = align_schemas(self._scan(spark, live, *touched), source)
                 merged = merge_rows(tsub, src, keys, mode, update_subset, order)
                 return merged, lambda new: kept
 
@@ -788,7 +806,7 @@ class ParquetTable:
         def side(version: int, files: list[str]) -> DataFrame:
             if not files:
                 return self._empty(spark, version)
-            return spark.read.option("basePath", self._dir(version)).parquet(*files)
+            return self._scan(spark, version, *files)
 
         return self._feed(
             side(v_old, [p for k, p in old.items() if k not in new]),

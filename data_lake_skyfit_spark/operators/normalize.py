@@ -55,7 +55,7 @@ class Lakehouse:
         return ParquetTable(os.path.join(self.root, "core", child.name), keys)
 
     def read(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, layer, name))
+        return ParquetTable(os.path.join(self.root, layer, name), ()).read(self.spark)
 
     # -- bronze → STG -------------------------------------------------------
 

@@ -13,6 +13,19 @@ setting is the one you'd want on a real cluster too:
   coalescing makes the static number much less load-bearing.
 - driver memory (the whole heap in local mode) sized to the host: 60 %
   of physical memory, at most 16g; `SPARK_GRAFT_DRIVER_MEM` overrides.
+- C1-only JIT (`-XX:TieredStopAtLevel=1`) for an incremental daily run
+  of the CLI, and tiered compilation for every other session. A cold
+  incremental day is a short process whose JVM would otherwise spend
+  about 40 % of its CPU in the C2 compiler threads (28.7 of 70.2 CPU-s
+  on a 4-core host) optimising code it runs only briefly; C1 alone
+  halves the day's CPU. A first build or full refresh runs long enough
+  for C2 to pay off: on a cold first build C1-only won at 5e4 EVO
+  records but lost at 2e5 (31.5 → 39.5 s wall), so those stay tiered,
+  as do warm sessions (tests, `bench.py`, long query loops). The flag
+  is passed as `spark.driver.defaultJavaOptions`, which the launcher
+  puts before `spark.driver.extraJavaOptions`: a user's
+  `spark.driver.extraJavaOptions=-XX:TieredStopAtLevel=4` turns full
+  tiered compilation back on.
 """
 
 from __future__ import annotations
@@ -42,8 +55,28 @@ def _driver_memory() -> str:
     return f"{min(16 * 1024, int(phys * 0.6) // (1024 * 1024))}m"
 
 
-def get_spark(app_name: str = "data_lake_skyfit_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
-    """Return (creating if needed) the engine's SparkSession."""
+def _jit_options(incremental_lake: str | None) -> str | None:
+    """Driver JVM JIT flags: C1 only when `incremental_lake` (the root of
+    the lake a daily run updates) already holds STG tables, else none.
+    Decided from the filesystem alone, before the JVM starts."""
+    if incremental_lake is None:
+        return None
+    stg = os.path.join(incremental_lake, "stg")
+    if os.path.isdir(stg) and os.listdir(stg):
+        return "-XX:TieredStopAtLevel=1"
+    return None
+
+
+def get_spark(
+    app_name: str = "data_lake_skyfit_spark",
+    *,
+    shuffle_partitions: int | None = None,
+    incremental_lake: str | None = None,
+) -> SparkSession:
+    """Return (creating if needed) the engine's SparkSession.
+    `incremental_lake` is the lake root of a daily run that is not a full
+    refresh; a new JVM then compiles with C1 only if the lake already
+    holds STG tables (`_jit_options`)."""
     cpus = _cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
@@ -70,6 +103,9 @@ def get_spark(app_name: str = "data_lake_skyfit_spark", *, shuffle_partitions: i
         # (no Delta jars in this image): only touched partitions rewrite.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
+    jit = _jit_options(incremental_lake)
+    if jit is not None:
+        builder = builder.config("spark.driver.defaultJavaOptions", jit)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,4 +1,5 @@
-"""Every container reader over NULL, empty and junk payloads.
+"""Every container reader over NULL, empty and junk payloads, and every
+1→1 media decoder over a NULL payload.
 
 A bad payload never fails the task: the readers quarantine it to one
 index −1 row (NULL fields; the jsonl reader carries the error text),
@@ -53,3 +54,33 @@ def test_reader_quarantines_null_empty_and_junk(spark, name):
             assert rest["line"].startswith("error: ") and rest["n_bytes"] == 0
         else:
             assert set(rest.values()) == {None}
+
+
+# -- 1→1 decoders ----------------------------------------------------------
+
+_DECODERS = [
+    "decode_images",
+    "extract_embeddings",
+    "decode_audio",
+    "resize_images",
+    "resample_audio",
+    "image_dhash",
+    "extract_image_metadata",
+    "extract_audio_metadata",
+    "decode_avif_structure",
+]
+
+
+@pytest.mark.parametrize("name", _DECODERS)
+def test_decoder_gives_null_payload_the_all_null_row(spark, name):
+    """A NULL payload gets one row of NULL fields, as the 1→N readers
+    quarantine it, and the junk row beside it still gets its row."""
+    from data_lake_skyfit_spark.llm import multimodal as mm
+
+    # decode_avif_structure still raises on junk (non-AVIF) payloads
+    rows = [(1, None)] + ([] if name == "decode_avif_structure" else [(2, bytearray(b"junk"))])
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    out = {r["doc_id"]: r.asDict() for r in getattr(mm, name)(df).collect()}
+    assert sorted(out) == [i for i, _ in rows]
+    null = {k: v for k, v in out[1].items() if k != "doc_id"}
+    assert set(null.values()) == {None}

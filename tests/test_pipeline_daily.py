@@ -56,9 +56,10 @@ def test_cli_single_entity(spark, full_lake_root, capsys):
 
 def test_audit_runs_once_within_job_budget(spark, full_lake_root, monkeypatch):
     """run_daily evaluates the audit in one action: one run_audit call,
-    whose jobs (counted by job group) stay a small fixed number — one
-    schema-discovery job per table read plus the report query's stages —
-    and the report is plain rows, so reading it launches nothing."""
+    whose jobs (counted by job group) stay a small fixed number — the
+    report query's stages only, since every table read takes the schema
+    its commit recorded and infers none — and the report is plain rows,
+    so reading it launches nothing."""
     sc = spark.sparkContext
     calls = []
     real = pipeline.run_audit
@@ -77,4 +78,4 @@ def test_audit_runs_once_within_job_budget(spark, full_lake_root, monkeypatch):
     assert calls == [1]
     assert result.ok, f"failed checks: {result.failed_checks}"
     assert isinstance(result.report, list) and len(result.report) == 21
-    assert len(jobs) <= 30, f"audit launched {len(jobs)} jobs"
+    assert len(jobs) <= 19, f"audit launched {len(jobs)} jobs"
